@@ -1,126 +1,138 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Connected components on an edge DataFrame — iterative minimum-label
- * propagation with pointer jumping, pure DataFrame algebra (no RDDs).
+ * Connected components on an edge DataFrame by union-find with local
+ * contraction (after BTS, ICDE 2024): one map-only Spark job runs a
+ * union-find inside every partition of the edge relation and emits that
+ * partition's spanning forest as `(node, partition-local min)` rows. A
+ * partition emits at most one row per input edge, so the relation never
+ * grows, and every node of a non-self edge survives as a row's node or
+ * root. The forest has the same components as the edges.
  *
- * Each iteration: every node adopts the min component id among itself and
- * its neighbors, then jumps to its parent's label (comp ← comp(comp)),
- * doubling the propagation horizon per round — O(log diameter) convergence.
- * Convergence detection: labels only ever decrease, so the exact decimal sum
- * of comp over all nodes strictly decreases until fixpoint. The sum is
- * computed BY THE SAME JOB that materializes the iterate (lazy checkpoint +
- * aggregate), so each iteration is exactly one Spark job with no separate
- * driver barrier for the convergence check.
+ * When the forest holds at most `SmallEdgeBound` rows, the driver finishes
+ * it with the same union-find function the executors ran. Every graph our
+ * candidate generators emit at bench scale lands here: star edges per
+ * bucket collapse inside a partition, and the 308k-edge `dedup_batch`
+ * graph contracts to a ~131k-row forest.
+ *
+ * A forest still over the bound goes to iterative minimum-label
+ * propagation with pointer jumping, run over the forest instead of the
+ * raw edges. It stays because it is the only path whose driver memory is
+ * bounded on corpus-scale graphs; no benchmark workload reaches it.
  *
  * Iterates materialize through `Materialize`: a reliable checkpoint when the
  * context has a checkpoint dir configured (cluster durability), else
  * localCheckpoint; superseded local iterates are released eagerly.
- *
- * Scale note: the candidate-generation stages emit *star* edges per bucket
- * (bucket-min ↔ member), so component diameter is bounded by a small
- * constant (a path min↔a, min↔b across buckets has length 2). Label
- * propagation therefore converges in ~2–4 rounds even at 10^12 docs — the
- * pathological long-path case that motivates large-star/small-star (Kiveris
- * et al., "Connected Components in MapReduce and Beyond") cannot arise from
- * our edge generator.
  */
 object ConnectedComponents {
 
-  /** Edge-count bound for `runAuto`'s driver fast path: 2 longs/edge ⇒
-    * ≈ 4 MB collected at the bound — noise for the driver heap, while the
-    * distributed path below it costs a dozen-plus scheduled jobs
-    * (adjacency checkpoint, fused rounds, convergence sums). */
+  /** Row bound for the driver union-find, both for `runAuto`'s input and
+    * for `run`'s contracted forest. Collecting that many rows allocates
+    * ~52 MB of transient driver heap (~200 B/row measured on JDK 17: the
+    * decoded UnsafeRows, their buffers and the (Long, Long) tuples; boxed
+    * generic Rows cost ~223 B/row), plus the union-find's boxed map,
+    * against the dozen-plus scheduled jobs of the label-propagation
+    * rounds. */
   val SmallEdgeBound: Int = 1 << 18
 
-  /** `run` with a DRIVER fast path for small edge sets: when `edges` holds
-    * at most `smallEdgeBound` rows they collect (≤ ~4 MB) and a union-find
-    * labels them in microseconds — the distributed path costs a dozen-plus
-    * driver-scheduled jobs, which dwarfs the compute for delta-scoped
-    * graphs (the incremental ingest path, whose CC input is O(delta +
-    * touched) by construction). Same output contract as `run`: (id, comp)
-    * for every node appearing in edges, comp = min node id of the
-    * component.
-    *
-    * Callers must pass a MATERIALIZED (or cheap) relation: an over-bound
-    * input pays one extra `limit(bound+1)` evaluation before falling back
-    * to the distributed path. */
-  def runAuto(edges: DataFrame,
-      smallEdgeBound: Int = SmallEdgeBound): DataFrame = {
-    // src =!= dst mirrors `run`'s adjacency filter EXACTLY: a node
-    // appearing only in self-edges is absent from both paths' outputs.
-    val sample = edges.select("src", "dst")
-      .where(col("src") =!= col("dst")).limit(smallEdgeBound + 1).collect()
-    if (sample.length > smallEdgeBound) run(edges)
-    else {
-      // Union-find with path halving; roots resolve to the component's min
-      // node id afterwards (parent choice during union is arbitrary).
-      val parent = new java.util.HashMap[Long, Long](sample.length * 2)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) {
-          parent.put(r, parent.get(parent.get(r))) // path halving
-          r = parent.get(r)
-        }
-        r
+  /** Label-propagation rounds executed per Spark job by the fallback. */
+  private val FusedRounds = 4
+
+  private val pairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /** Union-find over `edges`, which hold no self-edges: (node, min node id
+    * of its component) for every node. Roots are always the component min
+    * (a union hangs the larger root under the smaller), so no relabel
+    * pass is needed. Shared by the executors' contraction and the
+    * driver finish. */
+  private def unionFind(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) {
+        parent.put(r, parent.get(parent.get(r))) // path halving
+        r = parent.get(r)
       }
-      sample.foreach { row =>
-        val (s, d) = (row.getLong(0), row.getLong(1))
-        if (!parent.containsKey(s)) parent.put(s, s)
-        if (!parent.containsKey(d)) parent.put(d, d)
-        val (rs, rd) = (find(s), find(d))
-        if (rs != rd) parent.put(math.max(rs, rd), math.min(rs, rd))
-      }
-      val minOf = new java.util.HashMap[Long, Long]()
-      parent.keySet().forEach { id =>
-        val r = find(id)
-        val cur = minOf.getOrDefault(r, Long.MaxValue)
-        if (id < cur) minOf.put(r, id)
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](
-        parent.size())
-      parent.keySet().forEach { id => out += ((id, minOf.get(find(id)))) }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      spark.createDataset(out.toSeq).toDF("id", "comp")
+      r
     }
+    edges.foreach { case (s, d) =>
+      parent.putIfAbsent(s, s)
+      parent.putIfAbsent(d, d)
+      val (rs, rd) = (find(s), find(d))
+      if (rs != rd) parent.put(math.max(rs, rd), math.min(rs, rd))
+    }
+    val ids = parent.keySet().toArray(Array.empty[java.lang.Long])
+    ids.iterator.map(id => (id.longValue, find(id)))
   }
 
-  /** @param edges DataFrame with (src: long, dst: long)
-    * @param fuse propagation rounds executed per Spark job (per driver
-    *        barrier). Star-edge generation bounds component diameter at a
-    *        small constant, so rounds are cheap and the per-job driver
-    *        latency dominates at high parallelism — fusing rounds per
-    *        materialization cuts the job count (the 8→32 scaling tax paid
-    *        per job is measured, see BENCH/BASELINE.md). Intermediate
-    *        rounds are LAZY checkpoints: the fused job computes each round
-    *        once, feeds its blocks to the next round's three consumers, and
-    *        the convergence sum — one job, no recomputation. Default 4 (r7):
-    *        with the early-fixpoint check comparing the LAST intermediate
-    *        round against the final round, a graph that settles by round 3 —
-    *        measured for the star-bounded graphs our candidate generators
-    *        emit (fixpoint at round 3, one pointer-jump past the 2-round
-    *        star depth) — converges in ONE fused job (sum(r3) == sum(r4)
-    *        proves r4 was a no-op), where fuse=2 paid a second full job
-    *        (driver barrier + adjacency re-read) to observe the same thing
-    *        with the same four rounds of join work.
-    * @return (id: long, comp: long) for every node appearing in edges;
-    *         comp = min node id of the component. */
-  def run(edges: DataFrame, maxIter: Int = 25, fuse: Int = 4): DataFrame = {
+  /** The (src, dst) pairs of `edges` minus self-edges (and null ends): a
+    * node appearing only in self-edges is absent from every path's output. */
+  private def nonSelf(edges: DataFrame) =
+    edges.select("src", "dst").where(col("src") =!= col("dst"))
+      .as[(Long, Long)](pairs)
+
+  private def labelsDF(spark: SparkSession,
+      labels: Iterator[(Long, Long)]): DataFrame =
+    spark.createDataset(labels.toSeq)(pairs).toDF("id", "comp")
+
+  /** `run` without the distributed contraction for small edge sets: when
+    * `edges` holds at most `smallEdgeBound` non-self rows they collect and
+    * the driver union-find labels them in microseconds, where `run` costs
+    * its contraction job plus the collect. Same output contract as `run`.
+    *
+    * Callers must pass a MATERIALIZED (or cheap) relation: an over-bound
+    * input pays one extra `limit(bound+1)` evaluation before `run`. */
+  def runAuto(edges: DataFrame,
+      smallEdgeBound: Int = SmallEdgeBound): DataFrame = {
+    val sample = nonSelf(edges).limit(smallEdgeBound + 1).collect()
+    if (sample.length > smallEdgeBound) run(edges, smallEdgeBound)
+    else labelsDF(edges.sparkSession, unionFind(sample.iterator))
+  }
+
+  /** @param edges DataFrame with (src: long, dst: long), read by the one
+    *        contraction job
+    * @param smallEdgeBound forest size up to which the driver finishes
+    * @param maxIter label-propagation round cap for an over-bound forest
+    * @return (id: long, comp: long) for every node appearing in a non-self
+    *         edge; comp = min node id of the component. */
+  def run(edges: DataFrame, smallEdgeBound: Int = SmallEdgeBound,
+      maxIter: Int = 25): DataFrame = {
+    // Lazy checkpoint fused with the count: one job contracts every
+    // partition and materializes the forest, which is all the rest reads.
+    // The count runs on the RDD: a SQL count() under AQE is two jobs.
+    val forest = Materialize(
+      nonSelf(edges).mapPartitions((it: Iterator[(Long, Long)]) =>
+        unionFind(it).filter(p => p._1 != p._2))(pairs).toDF("src", "dst"),
+      eager = false)
+    val labels =
+      if (forest.queryExecution.toRdd.count() <= smallEdgeBound)
+        labelsDF(edges.sparkSession,
+          unionFind(forest.as[(Long, Long)](pairs).collect().iterator))
+      else propagate(forest, maxIter)
+    Materialize.release(forest)
+    labels
+  }
+
+  /** Iterative minimum-label propagation with pointer jumping, pure
+    * DataFrame algebra. Each round every node adopts the min label among
+    * itself and its neighbors, then jumps to its parent's label
+    * (comp ← comp(comp)), doubling the horizon per round. Labels only
+    * decrease, so the exact decimal sum of comp strictly decreases until
+    * the fixpoint; the sum is computed by the job that materializes the
+    * iterate. `FusedRounds` rounds run per job through lazily materialized
+    * intermediates, since per-job driver latency dominates these cheap
+    * rounds. */
+  private def propagate(forest: DataFrame, maxIter: Int): DataFrame = {
     // Symmetric adjacency (both directions), deduped, materialized once —
     // lazily, so the first iteration's job does it (no separate barrier).
-    // Pre-partitioned by src: the per-iteration message join keys on src, so
-    // the (reused-every-round) adjacency side never re-exchanges.
     // repartition BEFORE distinct: hashpartitioning(src) satisfies the
-    // (src, dst) aggregate's clustering requirement (equal pairs co-locate
-    // under any src-hash), so the dedup aggregate runs in place and the
-    // relation lands partitioned by src for the per-round message join —
-    // ONE exchange where distinct-then-repartition paid two.
+    // (src, dst) aggregate's clustering requirement, so the dedup runs in
+    // place and lands partitioned by src for the per-round message join.
     val adj = Materialize(
-      edges.where(col("src") =!= col("dst"))
+      forest
         .select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
@@ -138,16 +150,10 @@ object ConnectedComponents {
           lit(java.math.BigDecimal.ZERO))).collect()(0)
         .getDecimal(0)
 
-    // One propagation round: (a) neighbor-min — each edge forwards the
-    // src's current comp to dst; (b) pointer jumping — comp <- comp(comp).
-    // Labels only decrease, so comp(comp) <= comp (hash-to-min style
-    // horizon doubling).
-    // Every per-round join is hinted SHUFFLE_HASH (r7): the label/message
-    // relations are a few narrow columns, so the hash build is small and
-    // bounded, while the planner's default sort-merge pays a full sort of
-    // BOTH sides per join — with 6 joins per fused 2-round job those sorts
-    // dominated the round's stage walls. (A hint, not a conf: the caller's
-    // session config is not ours to change.)
+    // One round: (a) neighbor-min — each edge forwards the src's current
+    // comp to dst; (b) pointer jumping — comp <- comp(comp). The label and
+    // message relations are a few narrow columns, so every join is hinted
+    // SHUFFLE_HASH rather than paying sort-merge's sort of both sides.
     def round(cur: DataFrame): DataFrame = {
       val msgs = adj
         .join(cur.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
@@ -164,16 +170,11 @@ object ConnectedComponents {
         .select(col("id"), coalesce(col("pcomp"), col("comp")).as("comp"))
     }
 
-    // Intermediate fused rounds must be SHARED by round 2's consumers for
-    // the fusion to halve work. localCheckpoint(eager=false) does that (the
-    // fused job materializes the blocks); Dataset.checkpoint(eager=false)
+    // Intermediate rounds must be SHARED by the next round's consumers.
+    // localCheckpoint(eager=false) does that; Dataset.checkpoint(eager=false)
     // does NOT — with a reliable checkpoint dir Spark checkpoints only the
-    // LAST marked RDD per job (checkpointAllMarkedAncestors defaults false),
-    // so a marked intermediate is neither persisted nor checkpointed and
-    // each consumer would recompute round 1. On clusters, persist()
-    // intermediates instead and only reliably checkpoint the final round of
-    // each fused job (which is all lineage truncation needs).
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
+    // LAST marked RDD per job, so intermediates persist() instead.
+    val reliable = forest.sparkSession.sparkContext.getCheckpointDir.isDefined
     def midMaterialize(df: DataFrame): DataFrame =
       if (reliable) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else Materialize(df, eager = false)
@@ -184,32 +185,19 @@ object ConnectedComponents {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      // `fuse` rounds chained through lazily-materialized intermediates: ONE
-      // job materializes every round's blocks and the convergence sum.
-      // Equality of sums `fuse` rounds apart still detects the fixpoint
-      // exactly (the sum is strictly decreasing until convergence).
-      val nRounds = math.max(1, fuse)
       val mids = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var cur = labels
-      for (r <- 1 to nRounds) {
+      for (r <- 1 to FusedRounds) {
         cur =
-          if (r < nRounds) { val m = midMaterialize(round(cur)); mids += m; m }
+          if (r < FusedRounds) { val m = midMaterialize(round(cur)); mids += m; m }
           else Materialize(round(cur), eager = false)
       }
       val next = cur
       val nextSum = labelSum(next)
-      // Early fixpoint: labels only decrease, so equal sums for the LAST
-      // intermediate round and the final round mean the final round changed
-      // nothing — `cur` is already a fixpoint of round(), and the
-      // confirming iteration (a full fused job) is provably a no-op. The
-      // intermediate's blocks were materialized by the job that just ran,
-      // so this sum is one tiny block-read aggregate; on star-bounded
-      // graphs (every candidate generator here) it converts the standard
-      // 2-iteration protocol into 1 iteration + the cheap check.
-      val earlyFix = mids.nonEmpty &&
-        labelSum(mids.last).compareTo(nextSum) == 0
-      // Superseded blocks: the previous iterate and this job's intermediate
-      // rounds. Released eagerly rather than waiting for driver GC.
+      // Early fixpoint: equal sums for the last intermediate round and the
+      // final round mean the final round changed nothing, so the
+      // confirming iteration is provably a no-op.
+      val earlyFix = labelSum(mids.last).compareTo(nextSum) == 0
       Materialize.release(labels)
       mids.foreach(midRelease)
       labels = next

@@ -310,10 +310,13 @@ object DedupPipeline {
   }
 
   /** Bucket-row bound for `pairsFromBucketsAuto`'s driver fast path:
-    * ~24 B/row ⇒ ≤ ~6 MB collected at the bound, noise for the driver heap,
-    * while the distributed path costs several scheduled jobs (bounded-agg
-    * shuffle, over-cap star join, candidate distinct) whose per-job driver
-    * barriers dwarf the compute for delta-scoped relations. */
+    * collecting (pass, bucket_key, doc_id) as boxed generic Rows
+    * allocates ~63 MB of transient driver heap at the bound (~240 B/row
+    * measured on JDK 17: the decoded UnsafeRows, their buffers, the Rows
+    * and their boxed fields), while the distributed path costs several
+    * jobs (bounded-agg shuffle, over-cap star join, candidate distinct)
+    * whose per-job driver barriers dwarf the compute for delta-scoped
+    * relations. */
   private[graft] val SmallBucketRowBound: Int = 1 << 18
 
   /** `pairsFromBuckets` with a DRIVER fast path for small bucket relations
@@ -629,11 +632,8 @@ object DedupPipeline {
     val sigs = Materialize(trimmed)
     // Edge set materialized eagerly (r7; ~16 B/edge blocks), for two
     // consumers: runAuto's small-graph probe reads blocks instead of
-    // re-evaluating the whole candidate/verify lineage, and small corpora
-    // (the per-table dedup ops, the small-SF oracle runs) then label in a
-    // driver union-find instead of paying a dozen scheduled label-
-    // propagation jobs — while a corpus-scale edge set exceeds the bound
-    // and runs the distributed rounds reading the same blocks.
+    // re-evaluating the whole candidate/verify lineage, and an over-bound
+    // edge set's per-partition contraction reads the same blocks.
     val e = Materialize(edgesRaw(sigs, cfg))
     val comps = ConnectedComponents.runAuto(e) // (id, comp)
     Materialize.release(e) // fully consumed by runAuto's return

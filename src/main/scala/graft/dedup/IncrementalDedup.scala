@@ -423,11 +423,9 @@ final class IncrementalDedup(spark: SparkSession, root: String,
           releasables += e
           e
         }
-        // Eagerly materialize the (delta-sized) CC input: CC's adjacency is
-        // a LAZY checkpoint, so its first fused job evaluates the input
-        // subtree once per reference (2-3×) before the blocks exist —
-        // measured as repeated full label-store scans per batch. One tiny
-        // eager checkpoint makes those references block reads.
+        // Eagerly materialize the (delta-sized) CC input: runAuto's probe
+        // and an over-bound batch's contraction both read it, and without
+        // blocks each would rescan the label store.
         val ccInput = graft.tables.JobLabel(spark, "inc:relabelInputs") {
           val c = Materialize(
             relabelInputs(readLabels(prior), newEdges, releasables))
@@ -436,8 +434,8 @@ final class IncrementalDedup(spark: SparkSession, root: String,
         }
         // runAuto: ccInput is delta-scoped AND materialized (blocks), so
         // the small-graph probe is a cheap block read and a small batch's
-        // CC runs as a driver union-find instead of a dozen-plus scheduled
-        // jobs; a crawl-sized batch falls back to the distributed rounds.
+        // CC runs as a driver union-find after that one probe; a crawl-sized
+        // batch falls back to the per-partition contraction of `run`.
         val out = graft.tables.JobLabel(spark, "inc:cc") {
           ConnectedComponents.runAuto(ccInput)
         }.select(col("id"), col("comp"))

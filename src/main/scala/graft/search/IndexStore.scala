@@ -51,13 +51,12 @@ object IndexStore {
 
   private def writeParams(root: String, cfg: PipelineConfig,
       algo: Searcher.Algo): Unit = {
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
     val json = Seq(
       "filters" -> cfg.filters.mkString(","),
       "lang" -> cfg.lang,
       "stopwords" -> cfg.stopwordsEnabled.toString,
       "algo" -> algoName(algo))
-      .map { case (k, v) => s""""$k": "${esc(v)}"""" }
+      .map { case (k, v) => s""""$k": "${graft.tables.FlatJson.escape(v)}"""" }
       .mkString("{\n  ", ",\n  ", "\n}")
     Files.createDirectories(Paths.get(root))
     val tmp = Paths.get(root, "params.json.tmp")

@@ -2,8 +2,7 @@ package graft.tables
 
 /** Iterative parser for the flat string-valued JSON this engine writes
   * itself (StageStore MANIFEST.json, IndexStore params.json and mutation
-  * manifests): `{"k": "v", ...}` where values use only `\"` and `\\`
-  * escapes.
+  * manifests): `{"k": "v", ...}` with values escaped by `escape`.
   *
   * Replaces the regex scrape `"((?:[^"\\]|\\.)*)"` at those sites: Java's
   * regex engine recurses several stack frames per character matched by an
@@ -17,6 +16,24 @@ package graft.tables
   */
 object FlatJson {
 
+  /** `s` as the body of a JSON string literal: backslash, double quote
+    * and every control character below 0x20 are escaped, so a value can
+    * never break a JSONL line. The one escaper for every JSON this engine
+    * writes. */
+  def escape(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 8)
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.toString
+  }
+
   /** Every `"key": "value"` pair in `s`, values unescaped. Non-string
     * values (none are ever written) are skipped, like the old scrape. */
   def parse(s: String): Map[String, String] = {
@@ -29,8 +46,19 @@ object FlatJson {
       var j = from + 1
       while (j < n) {
         val c = s.charAt(j)
-        if (c == '\\' && j + 1 < n) { sb.append(s.charAt(j + 1)); j += 2 }
-        else if (c == '"') return (sb.toString, j + 1)
+        if (c == '\\' && j + 1 < n) {
+          s.charAt(j + 1) match {
+            case 'n' => sb.append('\n')
+            case 'r' => sb.append('\r')
+            case 't' => sb.append('\t')
+            case 'u' if j + 6 <= n &&
+                s.substring(j + 2, j + 6).forall(Character.digit(_, 16) >= 0) =>
+              sb.append(Integer.parseInt(s.substring(j + 2, j + 6), 16).toChar)
+              j += 4
+            case e => sb.append(e)
+          }
+          j += 2
+        } else if (c == '"') return (sb.toString, j + 1)
         else { sb.append(c); j += 1 }
       }
       (null, j)

@@ -61,9 +61,7 @@ final class StageStore(val spark: SparkSession, val root: String) {
   private def writeManifest(name: String, fields: Map[String, String]): Unit = {
     Files.createDirectories(Paths.get(dir(name)))
     val json = fields.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        s""""$k": "${v.replace("\\", "\\\\").replace("\"", "\\\"")}""""
-      }
+      .map { case (k, v) => s""""$k": "${FlatJson.escape(v)}"""" }
       .mkString("{\n  ", ",\n  ", "\n}")
     val tmp = Paths.get(dir(name), s"MANIFEST.json.tmp")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
@@ -182,10 +180,9 @@ final class StageStore(val spark: SparkSession, val root: String) {
       // reads the journal (and any legacy parquet dir) back as the same
       // relation. Best-effort diagnostics, not part of the stage commit
       // point, so a torn tail line on crash loses only that stage's rows.
-      def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
       val metricsJson = perPart.map { case (p, r) =>
-        s"""{"partition_id":$p,"rows":$r,"stage":"${esc(name)}",""" +
-          s""""run_fingerprint":"${esc(fingerprint)}"}"""
+        s"""{"partition_id":$p,"rows":$r,"stage":"${FlatJson.escape(name)}",""" +
+          s""""run_fingerprint":"${FlatJson.escape(fingerprint)}"}"""
       }.mkString("", "\n", "\n")
       // Serialized across threads: concurrent stage runs (IndexStore
       // overlaps independent stages) must not interleave their appends.

@@ -24,29 +24,41 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
+  /** Every entry point on `edges` spread over 1, 3 and 8 partitions:
+    * `run` (per-partition contraction, driver finish), `runAuto` (driver
+    * union-find under the bound) and `runAuto` with a 2-row bound, which
+    * sends the edges through `run` and the forest through the
+    * label-propagation fallback. */
+  private def labelings(edges: Seq[(Long, Long)]): Seq[(String, Map[Long, Long])] =
+    for {
+      parts <- Seq(1, 3, 8)
+      df = edges.toDF("src", "dst").repartition(parts)
+      (name, cc) <- Seq[(String, org.apache.spark.sql.DataFrame)](
+        "run" -> ConnectedComponents.run(df),
+        "runAuto" -> ConnectedComponents.runAuto(df),
+        "runAuto(bound=2)" -> ConnectedComponents.runAuto(df, smallEdgeBound = 2))
+    } yield (s"$name on $parts partitions", cc.as[(Long, Long)].collect().toMap)
+
   test("CC matches union-find on random graphs") {
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 3) {
       val n = 200
       val edges = (1 to 300).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      val got = ConnectedComponents.run(edges.toDF("src", "dst"))
-        .as[(Long, Long)].collect().toMap
       val exp = ufComponents(edges)
-      assert(got == exp, s"trial $trial")
+      for ((how, got) <- labelings(edges)) assert(got == exp, s"trial $trial, $how")
     }
   }
 
   test("CC on long path converges to min") {
     val path = (0L until 40L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val got = ConnectedComponents.run(path.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    assert(got.values.toSet == Set(0L))
+    val exp = ufComponents(path)
+    assert(exp.values.toSet == Set(0L))
+    for ((how, got) <- labelings(path)) assert(got == exp, how)
   }
 
   test("CC empty edges") {
-    val got = ConnectedComponents.run(Seq.empty[(Long, Long)].toDF("src", "dst"))
-    assert(got.count() == 0)
+    for ((how, got) <- labelings(Seq.empty)) assert(got.isEmpty, how)
   }
 }
 

@@ -55,14 +55,18 @@ class FlatJsonSpec extends AnyFunSuite {
   test("round-trips a StageStore-style writer") {
     def write(fields: Map[String, String]): String =
       fields.toSeq.sortBy(_._1)
-        .map { case (k, v) =>
-          s""""$k": "${v.replace("\\", "\\\\").replace("\"", "\\\"")}""""
-        }
+        .map { case (k, v) => s""""$k": "${FlatJson.escape(v)}"""" }
         .mkString("{\n  ", ",\n  ", "\n}")
     val fields = Map(
       "stage" -> "labels_delta_404200",
       "inputs" -> (1 to 30).map(i => s"s$i=f$i").mkString(";"),
-      "weird" -> """back\slash "quote" end\""")
+      "weird" -> """back\slash "quote" end\""",
+      "control" -> "line1\nline2\r\ttab\u0000nul\u001funit\u0008bs",
+      "unicode" -> "caf\u00e9 \u2014 \\u0041 literal")
     assert(FlatJson.parse(write(fields)) == fields)
+    // one JSONL line per record: no raw control character survives
+    val line = FlatJson.escape(fields("control"))
+    assert(line.forall(_ >= ' '), line)
+    assert(line == "line1\\nline2\\r\\ttab\\u0000nul\\u001funit\\u0008bs")
   }
 }
