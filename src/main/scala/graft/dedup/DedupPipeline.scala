@@ -14,18 +14,21 @@ import org.apache.spark.sql.functions._
  *   pass, fingerprint equality is self-evident for winnowing) ──► edges
  *   ──► connected components ──► clusters
  *
- * Everything is declarative DataFrame algebra (hash-agg + equi-join only),
- * so Catalyst/AQE own the physical plan. Scale design notes:
+ * Everything but candidate enumeration is declarative DataFrame algebra
+ * (projections, hash aggregates, equi-joins), so Catalyst/AQE own the
+ * physical plan. Scale design notes:
  *
- *  - The three candidate families share ONE explode + groupBy + join
- *    pipeline keyed by (pass, bucket_key): one shuffle and one
- *    materialization where round 1 had three serial checkpointed passes —
- *    fewer driver barriers, and the bucket stage is big enough to keep a
- *    cluster busy instead of three small stages that each underfill it.
+ *  - The three candidate families share ONE bucket stream keyed by
+ *    (pass, bucket_key): one repartition + sort-within-partitions and one
+ *    streaming pass through `bucketPairs`, where round 1 had three serial
+ *    checkpointed passes — fewer driver barriers, and the bucket stage is
+ *    big enough to keep a cluster busy instead of three small stages that
+ *    each underfill it.
  *  - Candidate generation NEVER enumerates O(s²) pairs inside a hot bucket:
  *    buckets up to `smallCap` members enumerate exact pairs (recall-lossless
  *    under pairwise verification); bigger buckets emit star edges to the
- *    bucket-min doc_id (connectivity-preserving, linear in bucket size). A
+ *    bucket-min doc_id (connectivity-preserving, linear in bucket size), and
+ *    the enumerator holds at most `smallCap` rows whatever the skew. A
  *    large bucket under an 8-row MinHash band means mass near-identical
  *    content where member↔min verification holds. `bucketStats` makes the
  *    residual over-cap population observable.
@@ -52,7 +55,6 @@ final case class DedupConfig(
     winnowWindow: Int = 21,    // guarantee: shared run >= 60 tokens detected
     seed: Long = 42L,
     smallCap: Int = 16,        // exact-pair enumeration cap per bucket
-    broadcastOverCapKeys: Boolean = true, // see edgesRaw
     runMinhash: Boolean = true,
     runSimhash: Boolean = true,
     runWinnow: Boolean = true,
@@ -88,12 +90,8 @@ private[graft] object Materialize {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager)
     else
-      df.localCheckpoint(eager, storageLevel)
-
-  private def storageLevel =
-    if (sys.props.getOrElse("graft.ckpt.ser", "false").toBoolean)
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      df.localCheckpoint(eager,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Release a checkpoint once nothing will read it again (irreversible —
     * see bridge.unpersistCheckpoint): local checkpoints drop their blocks,
@@ -198,33 +196,23 @@ object DedupPipeline {
   }
 
   /** The unified bucketed relation with an inline-verification payload:
-    * (doc_id, pass, bucket_key, aux) — one explode over the per-row
-    * concatenation of all enabled candidate families. `aux` carries the
-    * 8-byte SimHash fingerprint on SimHash-pass rows (so the Hamming verify
-    * happens AT pair generation, no join back to the signatures), null on
-    * the others (MinHash needs full shingle sets — too wide to carry at
-    * 16 band rows/doc — and winnow needs no verify at all).
+    * (doc_id, pass, bucket_key, aux). `aux` carries the 8-byte SimHash
+    * fingerprint on SimHash-pass rows (so the Hamming verify happens AT
+    * pair generation, no join back to the signatures) and 0 on the others
+    * (MinHash needs full shingle sets — too wide to carry at 16 band
+    * rows/doc — and winnow needs no verify at all), which makes
+    * `bucketPairs`' Hamming test vacuous there.
     *
     * MinHash band keys come precomputed from `band_keys` when the caller
     * materialized them (clustersFromSigs does — 16 longs stored instead of
-    * the 128-long sig) and are derived from `sig` otherwise. */
-  /** The per-family exploded relations behind `bucketedAux`, tagged by
-    * pass — exposed separately so consumers that join against a RUNTIME
-    * key subset (edgesRaw's over-cap star join) can join per family and
-    * let AQE's empty-relation propagation prune the families whose key
-    * subset is empty, instead of re-evaluating every family's explode. */
-  private def bucketedFamilies(sigs: DataFrame,
-      cfg: DedupConfig): Seq[(Int, DataFrame)] = {
-    // One explode per family over its PRIMITIVE key array, unioned (r7):
-    // the previous single explode over concat(transform(keys → struct))
-    // allocated one InternalRow per bucket entry (~31/doc) plus the
-    // concatenated struct array per row — measurable allocation in the
-    // pipeline's biggest stage. Generate over a primitive long array is
-    // allocation-free per element; the extra checkpoint block reads (one
-    // per enabled family) are sequential scans the bandwidth easily
-    // absorbs. Row SET is identical (same (doc_id, pass, bucket_key, aux)
-    // tuples; downstream is aggregation, so order is immaterial).
-    val nullAux = lit(null).cast("long")
+    * the 128-long sig) and are derived from `sig` otherwise.
+    *
+    * One explode per family over its PRIMITIVE key array, unioned (r7): a
+    * single explode over concat(transform(keys → struct)) allocated one
+    * InternalRow per bucket entry (~31/doc) plus the concatenated struct
+    * array per row. Generate over a primitive long array is allocation-free
+    * per element. */
+  private def bucketedAux(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
     val bandArr =
       if (sigs.columns.contains("band_keys")) col("band_keys")
       else bandKeysCol(cfg)
@@ -232,152 +220,137 @@ object DedupPipeline {
       sigs.select(col("doc_id"), lit(pass).as("pass"),
         explode(keys).as("bucket_key"), aux.as("aux"))
     val families = Seq(
-      (cfg.runMinhash, PassMinhash, () => family(PassMinhash, bandArr, nullAux)),
-      (cfg.runSimhash, PassSimhash, () => family(PassSimhash, array(blockKeys(cfg): _*), col("simhash"))),
-      (cfg.runWinnow, PassWinnow, () => family(PassWinnow, col("winnow_fps"), nullAux))
-    ).collect { case (true, p, f) => (p, f()) }
+      (cfg.runMinhash, () => family(PassMinhash, bandArr, lit(0L))),
+      (cfg.runSimhash, () => family(PassSimhash, array(blockKeys(cfg): _*), col("simhash"))),
+      (cfg.runWinnow, () => family(PassWinnow, col("winnow_fps"), lit(0L)))
+    ).collect { case (true, f) => f() }
     require(families.nonEmpty, "at least one pass must be enabled")
-    families
+    families.reduce(_ unionByName _)
   }
-
-  private def bucketedAux(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    bucketedFamilies(sigs, cfg).map(_._2).reduce(_ unionByName _)
 
   /** (doc_id, pass, bucket_key) view, for diagnostics. */
   def bucketed(sigs: DataFrame, cfg: DedupConfig): DataFrame =
     bucketedAux(sigs, cfg).select("doc_id", "pass", "bucket_key")
 
-  /** Candidate edges (pass, src, dst), src < dst, for all enabled passes.
-    *
-    * Passes with a downstream PAIRWISE verify (Jaccard, Hamming) enumerate
-    * exact pairs in buckets of size <= smallCap — star edges alone would
-    * lose qualified pairs there: a bucket links (a, b) through the
-    * bucket-min, and if verify(min, a) fails the (a, b) link dies even when
-    * verify(a, b) would pass. Buckets over the cap fall back to star edges —
-    * a large bucket under an 8-row MinHash band (or 16-bit SimHash block)
-    * means mass near-identical content, where member↔min verification
-    * holds, and pair enumeration there would be the O(s²) skew bomb the
-    * design forbids. Winnow buckets are always pure star: a shared
-    * fingerprint is transitive evidence, no pairwise verify follows. */
+  /** Candidate edges (pass, src, dst), src < dst, for all enabled passes,
+    * under `bucketPairs`' cap/star policy (unverified: no Hamming test). */
   def candidateEdges(sigs: DataFrame, cfg: DedupConfig): DataFrame =
     pairsFromBucketsAuto(bucketed(sigs, cfg), cfg.smallCap,
       alwaysStarPass = PassWinnow)
 
-  /** Exact pairs in small buckets, star edges in hot ones, over any
-    * (doc_id, pass, bucket_key) relation; buckets of `alwaysStarPass` (-1
-    * for none) are pure star regardless of size. Shared by the dedup passes
-    * and the ANN bucket join.
+  /** The candidate policy, over an iterator of (pass, bucket_key, doc_id,
+    * aux) rows in which each (pass, bucket_key) group is contiguous and in
+    * doc_id order (a sort by (pass, bucket_key, doc_id) gives that), to
+    * (pass, src, dst) edges with src <= dst. Not deduplicated: one pair can
+    * come out of several buckets (callers dedup once).
     *
-    * r7: the same ONE-bounded-aggregate shuffle as edgesRaw — buckets
-    * within the cap carry complete membership in the aggregate and
-    * enumerate their pairs (or, for `alwaysStarPass`, their star edges) in
-    * place, so the checkpoint of the bucket relation, the stats join and
-    * the small-bucket self-join are all gone. Only over-cap buckets join
-    * back to a re-evaluated `bucketedRel` for their star edges (AQE
-    * broadcasts the runtime-small key set, and collapses the join — and
-    * with it the re-evaluation — when no bucket is over cap). Callers
-    * whose bucket stream is expensive to re-evaluate materialize it first
-    * (IncrementalDedup.deltaEdges does). Pair SET identical to the
-    * self-join form: complete-membership enumeration vs bucket self-join
-    * produce the same unordered pairs, and both dedup across buckets. */
+    *  - A group of at most `smallCap` rows emits every unordered pair of
+    *    its rows. Passes with a downstream PAIRWISE verify (Jaccard,
+    *    Hamming) need that: star edges alone link (a, b) only through the
+    *    bucket min, and if verify(min, a) fails the (a, b) link dies even
+    *    when verify(a, b) would pass.
+    *  - A group over the cap, and every group of `alwaysStarPass` (-1 for
+    *    none), emits star edges (min, m) for each row m whose doc_id is not
+    *    the min. A large bucket under an 8-row MinHash band (or a 16-bit
+    *    SimHash block) means mass near-identical content, where member↔min
+    *    verification holds, and pair enumeration there would be the O(s²)
+    *    skew bomb the design forbids; a shared winnow fingerprint is
+    *    transitive evidence, no pairwise verify follows.
+    *  - Every edge must pass bitCount(aux_a ^ aux_b) <= maxHamming (the
+    *    inline SimHash verify; vacuous where aux is 0).
+    *
+    * Memory is O(smallCap) on any skew: at most `smallCap` rows are
+    * buffered, and because the first row of a group is its true min, a
+    * group that passes the cap streams its star edges as it is read. */
+  private[graft] def bucketPairs(rows: Iterator[(Int, Long, Long, Long)],
+      smallCap: Int, alwaysStarPass: Int,
+      maxHamming: Int): Iterator[(Int, Long, Long)] =
+    new BucketPairIterator(rows, smallCap, alwaysStarPass, maxHamming)
+
+  /** No Hamming test: bitCount of a 64-bit xor never exceeds 64. */
+  private[graft] val AnyHamming = 64
+
+  /** `bucketPairs` over any (doc_id, pass, bucket_key[, aux]) relation, as a
+    * distinct (pass, src, dst) relation. One shuffle by bucket, a sort
+    * within partitions (Spark's sorter spills, so a skewed bucket costs
+    * disk, not heap) and one streaming pass; the distinct dedups pairs
+    * found in several buckets before the (wide-array) verify join. A
+    * relation without `aux` gets no Hamming test. Shared by the dedup
+    * passes and the ANN bucket join. */
   private[graft] def pairsFromBuckets(bucketedRel: DataFrame, smallCap: Int,
-      alwaysStarPass: Int): DataFrame = {
-    val agg = bucketedRel
-      .groupBy("pass", "bucket_key")
-      .agg(bounded_bucket(col("doc_id"), lit(null).cast("long"), smallCap).as("g"))
-      .select(col("pass"), col("bucket_key"), col("g.sz").as("sz"),
-        col("g.mn").as("mn"), col("g.members").as("members"))
-      .where(col("sz") > 1)
-    val small = agg.where(col("sz") <= smallCap)
-    val smallPairs = small.where(col("pass") =!= alwaysStarPass)
-      .select(col("pass"), explode(bucket_pairs(col("members"))).as("p"))
-      .select(col("pass"),
-        least(col("p.a"), col("p.b")).as("src"),
-        greatest(col("p.a"), col("p.b")).as("dst"))
-    val smallStars = small.where(col("pass") === alwaysStarPass)
-      .select(col("pass"), col("mn").as("src"), explode(col("members")).as("m"))
-      .where(col("m.doc_id") =!= col("src"))
-      .select(col("pass"), col("src"), col("m.doc_id").as("dst"))
-    val bigKeys = agg.where(col("sz") > smallCap)
-      .select("pass", "bucket_key", "mn")
-    val bigStars = bucketedRel
-      .join(bigKeys, Seq("pass", "bucket_key"))
-      .where(col("doc_id") =!= col("mn"))
-      .select(col("pass"), col("mn").as("src"), col("doc_id").as("dst"))
-    // The same (pass, src, dst) can emerge from several buckets — dedup once
-    // before the (wide-array) verify join.
-    smallPairs.unionByName(smallStars).unionByName(bigStars).distinct()
+      alwaysStarPass: Int, maxHamming: Int = AnyHamming): DataFrame = {
+    val spark = bucketedRel.sparkSession
+    import spark.implicits._
+    bucketRows(bucketedRel)
+      .repartition(col("pass"), col("bucket_key"))
+      .sortWithinPartitions("pass", "bucket_key", "doc_id")
+      .mapPartitions(bucketPairs(_, smallCap, alwaysStarPass, maxHamming))
+      .toDF("pass", "src", "dst")
+      .distinct()
+  }
+
+  /** The (pass, bucket_key, doc_id, aux) rows `bucketPairs` reads; a null
+    * or absent aux reads as 0. */
+  private def bucketRows(bucketedRel: DataFrame) = {
+    val spark = bucketedRel.sparkSession
+    import spark.implicits._
+    val aux =
+      if (bucketedRel.columns.contains("aux")) coalesce(col("aux"), lit(0L))
+      else lit(0L)
+    bucketedRel.select(col("pass"), col("bucket_key"), col("doc_id"),
+      aux.as("aux")).as[(Int, Long, Long, Long)]
   }
 
   /** Bucket-row bound for `pairsFromBucketsAuto`'s driver fast path:
-    * collecting (pass, bucket_key, doc_id) as boxed generic Rows
-    * allocates ~63 MB of transient driver heap at the bound (~240 B/row
-    * measured on JDK 17: the decoded UnsafeRows, their buffers, the Rows
-    * and their boxed fields), while the distributed path costs several
-    * jobs (bounded-agg shuffle, over-cap star join, candidate distinct)
-    * whose per-job driver barriers dwarf the compute for delta-scoped
-    * relations. */
+    * collecting (pass, bucket_key, doc_id, aux) tuples allocates ~64 MB of
+    * transient driver heap at the bound, and grouping plus enumeration
+    * about as much again (~127 MB in all, measured on JDK 17 at local[4]),
+    * while the distributed path costs several jobs (bucket shuffle,
+    * candidate distinct) whose per-job driver barriers dwarf the compute
+    * for delta-scoped relations. */
   private[graft] val SmallBucketRowBound: Int = 1 << 18
 
   /** `pairsFromBuckets` with a DRIVER fast path for small bucket relations
     * (the incremental delta path — its touched-bucket stream is O(delta) by
-    * construction and already materialized): when the relation holds at most
-    * `smallRowBound` rows they collect and the same cap/star policy
-    * enumerates the pairs in a driver loop — pair SET identical by
-    * construction (same grouping, same size test, same true-min anchor, same
-    * cross-bucket dedup; duplicate (doc_id, bucket) rows count toward sz and
-    * pair like the aggregate's member list). Over the bound, falls back to
-    * the distributed form at the price of one extra `limit(bound+1)`
-    * evaluation — callers pass a materialized relation, so that is a block
-    * read. */
+    * construction): when the relation holds at most `smallRowBound` rows
+    * they collect and run through the same `bucketPairs` in the driver.
+    * Over the bound, falls back to the distributed form. The probe is a
+    * `limit(bound+1)` collect: on a materialized relation that is a block
+    * read, on a lazy one (candidateEdges' and annLsh's explode) it
+    * evaluates the relation up to the limit — the whole relation when it
+    * fits — and the distributed fallback then evaluates it again. */
   private[graft] def pairsFromBucketsAuto(bucketedRel: DataFrame,
-      smallCap: Int, alwaysStarPass: Int,
+      smallCap: Int, alwaysStarPass: Int, maxHamming: Int = AnyHamming,
       smallRowBound: Int = SmallBucketRowBound): DataFrame =
-    pairsFromBucketsLocal(bucketedRel, smallCap, alwaysStarPass,
+    pairsFromBucketsLocal(bucketedRel, smallCap, alwaysStarPass, maxHamming,
         smallRowBound) match {
       case Some(pairs) => localPairsDF(bucketedRel.sparkSession, pairs)
-      case None => pairsFromBuckets(bucketedRel, smallCap, alwaysStarPass)
+      case None => pairsFromBuckets(bucketedRel, smallCap, alwaysStarPass,
+        maxHamming)
     }
 
   /** The driver enumeration behind `pairsFromBucketsAuto`, exposed so a
     * caller that ALSO has driver-side follow-up filters (the incremental
     * delta path's involves-a-new-doc filter) can apply them on the raw
     * pair seq instead of planning literal-IN predicates over a local
-    * relation. Returns None when the relation exceeds the bound. */
+    * relation. Rows are grouped by (pass, bucket_key) in a hash map and
+    * sorted by doc_id only within each group. Returns None when the
+    * relation exceeds the bound. */
   private[graft] def pairsFromBucketsLocal(bucketedRel: DataFrame,
-      smallCap: Int, alwaysStarPass: Int,
+      smallCap: Int, alwaysStarPass: Int, maxHamming: Int = AnyHamming,
       smallRowBound: Int = SmallBucketRowBound): Option[Seq[(Int, Long, Long)]] = {
-    val rel = bucketedRel.select("pass", "bucket_key", "doc_id")
-    val sample = rel.limit(smallRowBound + 1).collect()
+    val sample = bucketRows(bucketedRel).limit(smallRowBound + 1).collect()
     if (sample.length > smallRowBound) return None
-    // group rows by (pass, bucket_key), preserving duplicates
-    val groups = new java.util.HashMap[(Int, Long), scala.collection.mutable.ArrayBuffer[Long]]()
+    val groups = new java.util.HashMap[(Int, Long),
+      scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long)]]()
     sample.foreach { r =>
-      groups.computeIfAbsent((r.getInt(0), r.getLong(1)),
-        _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(2)
+      groups.computeIfAbsent((r._1, r._2),
+        _ => scala.collection.mutable.ArrayBuffer.empty) += r
     }
-    val out = new java.util.LinkedHashSet[(Int, Long, Long)]()
-    groups.forEach { (k, members) =>
-      val (pass, _) = k
-      if (members.length > 1) {
-        if (pass == alwaysStarPass || members.length > smallCap) {
-          val mn = members.min
-          members.foreach(m => if (m != mn) out.add((pass, mn, m)))
-        } else {
-          var i = 0
-          while (i < members.length) {
-            var j = i + 1
-            while (j < members.length) {
-              val (a, b) = (members(i), members(j))
-              out.add((pass, math.min(a, b), math.max(a, b)))
-              j += 1
-            }
-            i += 1
-          }
-        }
-      }
-    }
-    Some(scala.jdk.CollectionConverters.CollectionHasAsScala(out).asScala.toSeq)
+    val rows = scala.jdk.CollectionConverters.CollectionHasAsScala(
+      groups.values()).asScala.iterator.flatMap(_.sortInPlaceBy(_._3))
+    Some(bucketPairs(rows, smallCap, alwaysStarPass, maxHamming)
+      .distinct.toVector)
   }
 
   /** (pass, src, dst) pair seq as a local DataFrame. */
@@ -404,90 +377,18 @@ object DedupPipeline {
   /** Verified edge set, distinct (src, dst), for all enabled passes.
     *
     * SimHash pairs are Hamming-verified INLINE at pair generation (the
-    * 8-byte fingerprint rides the bucket rows as `aux`; star edges get the
-    * bucket-min's fingerprint via min_by) and winnow pairs need no verify
-    * (64-bit fingerprint equality IS the evidence) — so only the MinHash
-    * pass joins back to the signatures, and only its pairs ship shingle
-    * arrays. The earlier fused all-pass verify join shipped shingles for
-    * every pair: ~3x the array bytes through the shuffle for nothing
+    * 8-byte fingerprint rides the bucket rows as `aux`) and winnow pairs
+    * need no verify (64-bit fingerprint equality IS the evidence) — so only
+    * the MinHash pass joins back to the signatures, and only its pairs ship
+    * shingle arrays. The earlier fused all-pass verify join shipped shingles
+    * for every pair: ~3x the array bytes through the shuffle for nothing
     * (measured 1.9 GB written at 175k docs; see git history). */
   private[dedup] def edgesRaw(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    // ONE bucket shuffle: the bounded membership aggregate keeps at most
-    // smallCap+1 members per bucket (map-side combinable, bounded memory on
-    // any skew) while tracking the true count and true min. Buckets whose
-    // count fits the cap therefore carry COMPLETE membership and enumerate
-    // their pairs (or, for winnow, their star edges) in place — no
-    // checkpoint of the bucket relation, no stats join, no self-join.
-    // Only the rare over-cap buckets (mass-duplicate content) join back to
-    // a recomputed bucket stream for their star edges; AQE broadcasts that
-    // tiny key set (and collapses the join entirely when it is empty).
-    //
-    // The aggregate OUTPUT is materialized (r7): it feeds three consumers
-    // (small-pair branch, small-star branch, the over-cap key broadcast),
-    // and exchange reuse shares only the MAP side — each consumer stage
-    // re-ran the 500 MB merge-aggregate (measured 60-85 core-s per extra
-    // merge at 699k docs). The post-filter output (sz > 1 buckets only,
-    // singleton majority gone) is a fraction of the shuffle size, so one
-    // merge + block reads wins; released as soon as the candidate set —
-    // its only consumer — is materialized.
-    val agg = Materialize(bucketedAux(sigs, cfg)
-      .groupBy("pass", "bucket_key")
-      .agg(bounded_bucket(col("doc_id"), col("aux"), cfg.smallCap).as("g"))
-      .select(col("pass"), col("bucket_key"), col("g.sz").as("sz"),
-        col("g.mn").as("mn"), col("g.mn_aux").as("mn_aux"),
-        col("g.members").as("members"))
-      .where(col("sz") > 1))
-    val small = agg.where(col("sz") <= cfg.smallCap)
-    // all unordered member pairs of a complete small bucket, canonicalized
-    // src < dst (collection order is nondeterministic). One tight loop per
-    // bucket (BucketPairsExpr) — the earlier flatten(transform(slice, ...))
-    // expression tree allocated O(s²) slice copies per bucket and dominated
-    // this stage's task time.
-    val smallPairs = small.where(col("pass") =!= PassWinnow)
-      .select(col("pass"), explode(bucket_pairs(col("members"))).as("p"))
-      .where(col("pass") =!= PassSimhash ||
-        bit_count(col("p.a_aux").bitwiseXOR(col("p.b_aux"))) <= cfg.simhashMaxHamming)
-      .select(col("pass"),
-        least(col("p.a"), col("p.b")).as("src"),
-        greatest(col("p.a"), col("p.b")).as("dst"))
-    val smallStars = small.where(col("pass") === PassWinnow)
-      .select(col("pass"), col("mn").as("src"), explode(col("members")).as("m"))
-      .where(col("m.doc_id") =!= col("src"))
-      .select(col("pass"), col("src"), col("m.doc_id").as("dst"))
-    // Over-cap keys are mass-duplicate content classes — orders of magnitude
-    // fewer than docs (10M keys ≈ 300 MB broadcast) — but AQE cannot know
-    // the post-filter size and plans a sort-merge that shuffles the full
-    // recomputed bucket stream (measured ~1 GB at 699k docs), so broadcast
-    // explicitly; flip broadcastOverCapKeys off for adversarial corpora
-    // where over-cap bucket counts rival the corpus.
-    //
-    // Joined PER FAMILY (r7): over-cap buckets cluster in one pass (winnow's
-    // shared-fingerprint buckets on mass-duplicate corpora), but a single
-    // join against the 3-family union re-evaluated EVERY family's explode
-    // (measured 931 tasks / ~60 core-s at 699k docs) to pull the members of
-    // a handful of hot buckets. Per-family joins let AQE's empty-relation
-    // propagation collapse the families whose over-cap key subset is empty
-    // at runtime — their explode never runs. Row set identical: pass is
-    // part of the join key, so join(union) ≡ union of per-pass joins.
-    val bigKeys0 = agg.where(col("sz") > cfg.smallCap)
-      .select("pass", "bucket_key", "mn", "mn_aux")
-    def bigKeysFor(p: Int): DataFrame = {
-      val k = bigKeys0.where(col("pass") === p)
-      if (cfg.broadcastOverCapKeys) broadcast(k) else k
-    }
-    val bigStars = bucketedFamilies(sigs, cfg)
-      .map { case (p, fam) => fam.join(bigKeysFor(p), Seq("pass", "bucket_key")) }
-      .reduce(_ unionByName _)
-      .where(col("doc_id") =!= col("mn"))
-      .where(col("pass") =!= PassSimhash ||
-        bit_count(col("aux").bitwiseXOR(col("mn_aux"))) <= cfg.simhashMaxHamming)
-      .select(col("pass"), col("mn").as("src"), col("doc_id").as("dst"))
-    // Dedup across buckets once; materialize because the per-pass split
-    // below would otherwise recompute the whole generation per branch.
-    // Pairs are ~20 bytes each — this is the small relation of the job.
-    val cand = Materialize(
-      smallPairs.unionByName(smallStars).unionByName(bigStars).distinct())
-    Materialize.release(agg) // cand was its only consumer
+    // Materialized because the per-pass split below would otherwise
+    // recompute the whole generation per branch. Pairs are ~20 bytes each —
+    // this is the small relation of the job.
+    val cand = Materialize(pairsFromBuckets(bucketedAux(sigs, cfg),
+      cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming))
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     if (cfg.runMinhash)
       parts += verifyJaccard(cand.where(col("pass") === PassMinhash)
@@ -643,5 +544,77 @@ object DedupPipeline {
     val docs = Materialize(sigs.select("url", "doc_id", "warc_ts"))
     Materialize.release(sigs)
     resolveClusters(docs, comps)
+  }
+}
+
+/** `DedupPipeline.bucketPairs`: a pull-based walk over one group at a time.
+  * A group is read until it closes or passes the cap, buffering at most
+  * `cap` rows; a closed group then emits its pairs from the buffer, an
+  * over-cap (or star-pass) group emits star edges from the buffer and then
+  * from each further row as it is read. */
+private final class BucketPairIterator(in: Iterator[(Int, Long, Long, Long)],
+    cap: Int, starPass: Int, maxHamming: Int)
+  extends Iterator[(Int, Long, Long)] {
+  require(cap >= 1, "smallCap must be positive")
+  private val ids = new Array[Long](cap)
+  private val auxs = new Array[Long](cap)
+  private var n = 0 // buffered rows of the current group; ids(0) is its min
+  private var pass = 0
+  private var key = 0L
+  private var look: (Int, Long, Long, Long) = null // next unread row
+  private var star = false // current group emits star edges
+  private var i = 0 // pair cursor (i, j), or star cursor i, into the buffer
+  private var j = 0
+  private var out: (Int, Long, Long) = null
+
+  private def pull(): Unit = look = if (in.hasNext) in.next() else null
+  private def inGroup: Boolean = look != null && look._1 == pass && look._2 == key
+  private def near(a: Long, b: Long): Boolean =
+    java.lang.Long.bitCount(a ^ b) <= maxHamming
+
+  /** Reads the next group's buffered prefix; false at the end of input. */
+  private def open(): Boolean = {
+    if (look == null) pull()
+    if (look == null) return false
+    pass = look._1; key = look._2; n = 0
+    star = pass == starPass
+    do {
+      ids(n) = look._3; auxs(n) = look._4; n += 1
+      pull()
+    } while (!star && n < cap && inGroup)
+    if (inGroup) star = true // over the cap: the buffer holds its first rows
+    i = if (star) 1 else 0
+    j = 1
+    true
+  }
+
+  override def hasNext: Boolean = {
+    while (out == null) {
+      if (star) {
+        if (i < n) {
+          if (ids(i) != ids(0) && near(auxs(0), auxs(i)))
+            out = (pass, ids(0), ids(i))
+          i += 1
+        } else if (inGroup) {
+          val r = look
+          pull()
+          if (r._3 != ids(0) && near(auxs(0), r._4)) out = (pass, ids(0), r._3)
+        } else if (!open()) return false
+      } else if (j < n) {
+        if (near(auxs(i), auxs(j))) out = (pass, ids(i), ids(j))
+        j += 1
+      } else if (i + 2 < n) { // row i + 1 still has a partner after it
+        i += 1
+        j = i + 1
+      } else if (!open()) return false
+    }
+    true
+  }
+
+  override def next(): (Int, Long, Long) = {
+    if (!hasNext) throw new NoSuchElementException("bucketPairs exhausted")
+    val r = out
+    out = null
+    r
   }
 }

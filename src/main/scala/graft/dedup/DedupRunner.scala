@@ -16,7 +16,6 @@ object DedupRunner {
     s"w${cfg.shingleW}k${cfg.minhashK}b${cfg.bands}r${cfg.rowsPerBand}" +
       s"t${cfg.tau}h${cfg.simhashMaxHamming}a${cfg.winnowA}" +
       s"win${cfg.winnowWindow}s${cfg.seed}cap${cfg.smallCap}" +
-      s"bc${cfg.broadcastOverCapKeys}" +
       s"m${cfg.runMinhash}sh${cfg.runSimhash}wn${cfg.runWinnow}" +
       // ALGORITHM-versioned (shared token with IncrementalDedup's CONFIG
       // pin): a pre-r6 StageStore root built with --normalize-urls must

@@ -535,9 +535,10 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     val touched = prunedStoredBuckets(priorIds, touchedPts)
       .join(newKeys.select("pass", "bucket_key"),
         Seq("pass", "bucket_key"), "left_semi")
-    // Materialized: pairsFromBuckets' over-cap star join re-evaluates its
-    // input, and this stream's lineage is a full stored-bucket semi-join —
-    // the checkpoint is delta-sized (touched buckets only).
+    // Materialized: the driver probe below and, over its bound, the
+    // distributed fallback both read this stream, whose lineage is a full
+    // stored-bucket semi-join — the checkpoint is delta-sized (touched
+    // buckets only).
     val stream = graft.tables.JobLabel(spark, "inc:touchedBuckets") {
       Materialize(
         touched.unionByName(bNew.select("pass", "bucket_key", "doc_id")))
@@ -548,13 +549,13 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     // what fits in the driver (r7):
     //  - stream within the collect bound AND delta ids within the pushdown
     //    cap (the steady-state micro-batch): pairs enumerate in a driver
-    //    loop (pairsFromBucketsLocal — same cap/star policy, pair set
-    //    identical to the distributed form) and the delta filter is a
-    //    driver set test — NO Catalyst plan at all, where the previous
-    //    shape paid a bounded-agg shuffle + star join + distinct + a
-    //    thousand-literal IN predicate plan (IncProbe: candDelta 2.4 s /
-    //    7 jobs → a single LocalTableScan; the 1.3 s pre-candDelta
-    //    planning gap gone with it).
+    //    loop (pairsFromBucketsLocal — the same bucketPairs as the
+    //    distributed form) and the delta filter is a driver set test — NO
+    //    Catalyst plan at all, where a distributed shape pays a bucket
+    //    shuffle + distinct + a thousand-literal IN predicate plan
+    //    (IncProbe, r7: candDelta 2.4 s / 7 jobs → a single
+    //    LocalTableScan; the 1.3 s pre-candDelta planning gap gone with
+    //    it).
     //  - driver pairs but a crawl-sized id set: broadcast-semi against the
     //    local pair relation.
     //  - over-bound stream: the distributed generator, with the IN filter

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   *
   *   1. signatures+materialize — scan → tokenize/shingle/minhash/simhash/
   *      winnow kernels → band-key trim → eager local checkpoint
-  *   2. bucket+cand — bucketedAux explode ×2, bounded bucket agg, pair
-  *      enumeration, cand distinct + eager materialize (runs inside
-  *      edgesRaw construction)
+  *   2. bucket+cand — bucketedAux explode, bucket repartition + sort,
+  *      bucketPairs enumeration, cand distinct + eager materialize (runs
+  *      inside edgesRaw construction)
   *   3. verify — the Jaccard join against sigs + union (noop-materialized
   *      through CC's adjacency in phase 4; here timed via an eager
   *      checkpoint so phase 4 reads blocks)

@@ -1161,65 +1161,6 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object BucketPairsExpr {
-  /** All unordered member pairs of a complete small bucket, as
-    * (a, a_aux, b, b_aux) structs — one tight loop instead of the
-    * flatten(transform(slice, transform(slice, struct))) expression tree,
-    * which allocated O(s²) slice copies per bucket and dominated the pair-
-    * enumeration stage's task time (see DedupPipeline.edgesRaw). Pair SET
-    * is identical (i < j enumeration; downstream canonicalizes src < dst
-    * and dedups). */
-  def pairs(members: ArrayData): ArrayData = {
-    val n = members.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val ids = new Array[Long](n)
-    val auxs = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      val m = members.getStruct(i, 2)
-      ids(i) = m.getLong(0)
-      auxs(i) = m.getLong(1)
-      i += 1
-    }
-    val out = new Array[Any](n * (n - 1) / 2)
-    var o = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        out(o) = InternalRow(ids(i), auxs(i), ids(j), auxs(j))
-        o += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-/** `bucket_pairs(members)` → array<struct<a,a_aux,b,b_aux>> — unordered
-  * member pairs of a bounded bucket (see BoundedBucketAgg.members). */
-case class BucketPairsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("a", LongType, nullable = false),
-      StructField("a_aux", LongType, nullable = false),
-      StructField("b", LongType, nullable = false),
-      StructField("b_aux", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "bucket_pairs"
-
-  override def nullSafeEval(members: Any): Any =
-    BucketPairsExpr.pairs(members.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BucketPairsExpr.pairs($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SortedJaccardExpr {
   /** Exact Jaccard over two sorted-distinct long arrays in ONE merge pass:
     * j = |A∩B| / (|A| + |B| − |A∩B|), 0.0 when the union is empty. The

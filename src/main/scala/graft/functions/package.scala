@@ -56,11 +56,6 @@ package object functions {
       maxLen: Int = DeleteVariantsExpr.DefaultMaxLen): Column =
     column(DeleteVariantsExpr(expression(term), maxDel, maxLen))
 
-  /** Bounded per-bucket membership aggregate (see BoundedBucketAgg). */
-  def bounded_bucket(docId: Column, aux: Column, cap: Int): Column =
-    column(BoundedBucketAgg(expression(docId), expression(aux), cap)
-      .toAggregateExpression())
-
   def sign_lsh(vec: Column, nBits: Int = 16, nTables: Int = 8,
       seed: Long = 42L): Column =
     column(SignLshExpr(expression(vec), nBits, nTables, seed))
@@ -81,10 +76,6 @@ package object functions {
   /** Exact Jaccard of two sorted-distinct long arrays, one merge pass. */
   def nxs_jaccard(a: Column, b: Column): Column =
     column(SortedJaccardExpr(expression(a), expression(b)))
-
-  /** Unordered member pairs of a bounded bucket (BoundedBucketAgg members). */
-  def bucket_pairs(members: Column): Column =
-    column(BucketPairsExpr(expression(members)))
 
   def nxs_winnow(tokens: Column, a: Int = 40, win: Int = 21,
       seed: Long = 42L): Column =

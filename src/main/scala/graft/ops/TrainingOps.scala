@@ -376,9 +376,9 @@ object TrainingOps {
       .withColumnRenamed("vec_id", "doc_id")
       .withColumn("pass", lit(0))
     // Auto (r7): a small embedding table's bucket relation collects and
-    // pair-enumerates in the driver (same policy/pair set; bounded); a
-    // corpus-scale one exceeds the bound and runs the one-shuffle
-    // bounded-agg generator — the probe's limit stops the explode early.
+    // pair-enumerates in the driver (same bucketPairs policy; bounded); a
+    // corpus-scale one exceeds the bound and runs the one-shuffle sorted
+    // bucket stream — the probe's limit stops the explode early.
     val pairs = DedupPipeline.pairsFromBucketsAuto(bucketed, smallCap,
       alwaysStarPass = -1)
     pairs

@@ -378,11 +378,11 @@ class DedupPipelineSpec extends AnyFunSuite {
   }
 }
 
-/** r7: the driver fast path of the shared candidate generator must emit
-  * EXACTLY the distributed form's pair set — same cap policy, star passes,
-  * true-min anchors, cross-bucket dedup — on a randomized relation that
-  * includes over-cap buckets, alwaysStar buckets and duplicate
-  * (doc_id, bucket) rows. */
+/** The driver fast path of the shared candidate generator must emit
+  * EXACTLY the distributed form's pair set — the same `bucketPairs` over
+  * the same groups — on a randomized relation that includes over-cap
+  * buckets, alwaysStar buckets, duplicate (doc_id, bucket) rows and an aux
+  * column under a Hamming bound, with null aux reading as 0. */
 class PairsFromBucketsAutoSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -390,28 +390,39 @@ class PairsFromBucketsAutoSpec extends AnyFunSuite {
   test("driver enumeration == distributed bounded-agg pair set") {
     val rnd = new scala.util.Random(7)
     val smallCap = 4
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
+    val maxHamming = 2
+    val rows = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, Long, Long, Option[Long])]
     // pass 0/1: pairwise passes; pass 2: alwaysStar. Bucket sizes 1..9
-    // straddle the cap; ~10% duplicated rows.
+    // straddle the cap; ~10% duplicated rows; a 4-bit aux per doc (null
+    // for one doc in ten) puts about a third of the edges over maxHamming.
     for (pass <- 0 to 2; b <- 0 until 40) {
       val key = rnd.nextLong()
       val sz = 1 + rnd.nextInt(9)
       val members = Seq.fill(sz)(rnd.nextInt(50).toLong + 100 * pass)
       members.foreach { m =>
-        rows += ((pass, key, m))
-        if (rnd.nextInt(10) == 0) rows += ((pass, key, m)) // duplicate row
+        val aux = if (m % 10 == 3) None else Some((m * 0x9E3779B97F4A7C15L) >>> 60)
+        rows += ((pass, key, m, aux))
+        if (rnd.nextInt(10) == 0) rows += ((pass, key, m, aux)) // duplicate row
       }
     }
-    val rel = rows.toSeq.toDF("pass", "bucket_key", "doc_id")
-      .repartition(7) // multi-partition partials on the distributed side
-    val dist = DedupPipeline.pairsFromBuckets(rel, smallCap, alwaysStarPass = 2)
-      .as[(Int, Long, Long)].collect().toSet
+    val rel = rows.toSeq.toDF("pass", "bucket_key", "doc_id", "aux")
+      .repartition(7) // multi-partition input on the distributed side
+    val dist = DedupPipeline.pairsFromBuckets(rel, smallCap,
+      alwaysStarPass = 2, maxHamming).as[(Int, Long, Long)].collect().toSet
     val local = DedupPipeline.pairsFromBucketsLocal(rel, smallCap,
-      alwaysStarPass = 2)
+      alwaysStarPass = 2, maxHamming)
     assert(local.isDefined)
     assert(local.get.toSet == dist)
+    assert(local.get.size == dist.size) // the driver form dedups too
+    // the Hamming bound is live: without it the pair set is strictly larger
+    val unbounded = DedupPipeline.pairsFromBucketsLocal(rel, smallCap,
+      alwaysStarPass = 2).get.toSet
+    assert(dist.subsetOf(unbounded) && unbounded.size > dist.size)
     // over the bound: falls back to the distributed form
-    assert(DedupPipeline.pairsFromBucketsLocal(rel, smallCap, 2,
+    assert(DedupPipeline.pairsFromBucketsLocal(rel, smallCap, 2, maxHamming,
       smallRowBound = 10).isEmpty)
+    assert(DedupPipeline.pairsFromBucketsAuto(rel, smallCap, 2, maxHamming,
+      smallRowBound = 10).as[(Int, Long, Long)].collect().toSet == dist)
   }
 }

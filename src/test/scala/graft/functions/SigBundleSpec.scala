@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -98,22 +97,5 @@ class SigBundleSpec extends AnyFunSuite {
     val b = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(Array(1L, 3L, 3L, 4L))
     assert(SortedIntersectCountExpr.count(a, b) == 2L) // {1, 3}
-  }
-
-  test("bucket_pairs == all unordered member pairs") {
-    forAll(Gen.choose(0, 17)) { n =>
-      val members = new GenericArrayData(
-        (0 until n).map(i => InternalRow(100L + i, 1000L + i): Any).toArray)
-      val got = BucketPairsExpr.pairs(members)
-      val pairs = (0 until got.numElements()).map { i =>
-        val r = got.getStruct(i, 4)
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      }.toSet
-      val want = (for {
-        i <- 0 until n; j <- i + 1 until n
-      } yield (100L + i, 1000L + i, 100L + j, 1000L + j)).toSet
-      assert(pairs == want)
-      assert(got.numElements() == n * (n - 1) / 2)
-    }
   }
 }
