@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
  * `postings`; the dtmap header counters doc_count/token_count
  * (/root/reference/src/index/storage.h:112-118) become `docCount` /
  * `tokenCount`. The reverse term→docs bitmap is not materialized — it IS
- * the postings relation keyed by term (a semi-join replaces
- * roaring64_bitmap lookup).
+ * the postings relation keyed by term (a term filter on the postings scan
+ * replaces roaring64_bitmap lookup).
  *
  * At cluster scale: postings/termStats/docStats are plain hash
  * aggregations off one tokenize scan (map-side partial agg), written as

@@ -219,7 +219,8 @@ class IndexStoreSpec extends AnyFunSuite {
     val fresh = SearchIndex.build(live.toSeq.toDF("doc_id", "text"), cfg)
     assert(mutated.docCount == fresh.docCount)
     assert(mutated.tokenCount == fresh.tokenCount)
-    val queries = Seq("word1", "common2 AND word3", "unique25", "tail4 OR word0")
+    val queries = Seq("word1", "common2 AND word3", "unique25", "tail4 OR word0",
+      "common2 AND NOT word3", "(word1 OR tail4) AND NOT common0")
     queries.foreach { q => assert(scores(mutated, q) == scores(fresh, q), q) }
 
     // fold everything, reopen, same answers from the compacted generation

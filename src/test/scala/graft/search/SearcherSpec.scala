@@ -2,6 +2,7 @@ package graft.search
 
 import graft.SparkTestBase
 import graft.text.TextPipeline
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scoring goldens ported verbatim from
@@ -157,6 +158,146 @@ class SearcherSpec extends AnyFunSuite {
     val df = Searcher.search(idx, "textbook", Searcher.Bm25, limit = 5).toOption.get
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
+    // the whole boolean tree is one per-doc aggregate over ONE postings
+    // read: no semi/anti join per operator, no second scan for scoring
+    val q = Searcher.search(idx,
+      "textbook AND (erlang OR python) AND NOT windows", Searcher.Bm25,
+      limit = 5).toOption.get
+    val qplan = q.queryExecution.executedPlan.toString
+    assert(qplan.contains("TakeOrderedAndProject"), qplan)
+    assert(!qplan.contains("LeftSemi") && !qplan.contains("LeftAnti"), qplan)
+    // only the postings cache carries `cnt`
+    val postingsReads = q.queryExecution.optimizedPlan.collect {
+      case r: InMemoryRelation if r.output.exists(_.name == "cnt") => r
+    }
+    assert(postingsReads.size == 1, q.queryExecution.optimizedPlan)
+  }
+
+  test("boolean algebra == brute force over per-doc term sets " +
+    "(random trees, fuzzy on and off)") {
+    val rnd = new scala.util.Random(4242)
+    val syl = Seq("ba", "ke", "lo", "mu", "ri", "sa", "te", "vo", "zu", "pi")
+    val vocab = (0 until 100).map(i => syl(i / 10) + syl(i % 10) + "n")
+    // Zipf-like: head terms in most docs, tail terms in few; stopwords
+    // between words are dropped at indexing
+    val docs = (1L to 80L).map { id =>
+      id -> Seq.fill(3 + rnd.nextInt(10))(
+        vocab((vocab.size * math.pow(rnd.nextDouble(), 2)).toInt)).mkString(" the ")
+    }
+    val cfg = TextPipeline.default
+    val idx = SearchIndex.build(docs.toDF("doc_id", "text"), cfg)
+
+    // driver-side brute force over the index's per-doc term sets
+    val post = idx.postings.select("doc_id", "term", "cnt")
+      .as[(Long, String, Long)].collect().toSeq
+    val docTerms: Map[Long, Map[String, Long]] = post.groupBy(_._1).map {
+      case (d, rs) => d -> rs.map(r => r._2 -> r._3).toMap
+    }
+    val dl = docTerms.map { case (d, tc) => d -> tc.values.sum }
+    val df = post.groupBy(_._2).map { case (t, rs) => t -> rs.size.toDouble }
+    val total = post.groupBy(_._2).map { case (t, rs) => t -> rs.map(_._3).sum }
+    val n = idx.docCount.toDouble
+    assert(idx.docCount == docTerms.size)
+    val adl = (idx.tokenCount / idx.docCount).toDouble
+    def score(algo: Searcher.Algo, cnt: Long, dl: Long, df: Double): Double = {
+      val tf = math.log(cnt + 1.0)
+      algo match {
+        case Searcher.TfIdf => tf * (math.log(n / df) + 1)
+        case _ =>
+          tf / (tf + 1.2 * (0.25 + 0.75 * dl / adl)) *
+            math.log((n - df + 0.5) / (df + 0.5) + 1)
+      }
+    }
+    def lev(a: String, b: String): Int = {
+      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
+        if (i == 0) j else if (j == 0) i else 0)
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        d(i)(j) = Seq(d(i - 1)(j) + 1, d(i)(j - 1) + 1,
+          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1)).min
+      d(a.length)(b.length)
+    }
+    def resolve(leaf: String, fuzzy: Boolean): Option[String] =
+      TextPipeline.filterToken(leaf, cfg).flatMap { tok =>
+        if (!fuzzy || df.contains(tok)) Some(tok)
+        else df.keys.filter(lev(_, tok) <= 2).toSeq
+          .sortBy(t => (-total(t), t)).headOption
+      }
+    def holds(e: QExpr, res: Map[String, Option[String]], terms: Set[String])
+        : Boolean = e match {
+      case QToken(v) => res(v).exists(terms)
+      case QAnd(l, r) => holds(l, res, terms) && holds(r, res, terms)
+      case QOr(l, r) => holds(l, res, terms) || holds(r, res, terms)
+      case QAndNot(l, r) => holds(l, res, terms) && !holds(r, res, terms)
+    }
+
+    // leaves: index terms (some upper-cased), one-edit typos, terms absent
+    // from the index at any distance, stopwords, and repeats of earlier leaves
+    val absent = Seq("zyzzyva", "quorum", "xylophone")
+    val stop = Seq("the", "of", "is")
+    def leaf(seen: collection.mutable.Buffer[String]): String = {
+      val w = vocab((vocab.size * math.pow(rnd.nextDouble(), 1.5)).toInt)
+      val i = rnd.nextInt(w.length)
+      val v = rnd.nextInt(10) match {
+        case 0 => w.updated(i, 'q')
+        case 1 => w.take(i) + "q" + w.drop(i)
+        case 2 => absent(rnd.nextInt(absent.size))
+        case 3 => stop(rnd.nextInt(stop.size))
+        case 4 if seen.nonEmpty => seen(rnd.nextInt(seen.size))
+        case 5 => w.toUpperCase
+        case _ => w
+      }
+      seen += v; v
+    }
+    def tree(depth: Int, seen: collection.mutable.Buffer[String]): QExpr =
+      if (depth == 0 || rnd.nextInt(4) == 0) QToken(leaf(seen))
+      else rnd.nextInt(3) match {
+        case 0 => QAnd(tree(depth - 1, seen), tree(depth - 1, seen))
+        case 1 => QOr(tree(depth - 1, seen), tree(depth - 1, seen))
+        case _ => QAndNot(tree(depth - 1, seen), tree(depth - 1, seen))
+      }
+    def render(e: QExpr): String = e match {
+      case QToken(v) => v
+      case QAnd(l, r) => s"(${render(l)} AND ${render(r)})"
+      case QOr(l, r) => s"(${render(l)} OR ${render(r)})"
+      case QAndNot(l, r) => s"(${render(l)} AND NOT ${render(r)})"
+    }
+    val random = (1 to 24).map { _ =>
+      val t = tree(4, collection.mutable.Buffer.empty); t -> render(t)
+    }
+    val chain = vocab.take(70).map(QToken(_): QExpr).reduceLeft(QOr(_, _))
+    val special = Seq(
+      QAndNot(QToken(vocab(0)), QToken(vocab(0))) -> s"${vocab(0)} AND NOT ${vocab(0)}",
+      QAnd(QOr(QToken(vocab(1)), QToken(vocab(1))), QToken(vocab(2))) ->
+        s"(${vocab(1)} OR ${vocab(1)}) AND ${vocab(2)}",
+      QToken("the") -> "the",
+      QAndNot(chain, QToken(vocab(0))) ->
+        s"(${vocab.take(70).mkString(" OR ")}) AND NOT ${vocab(0)}")
+
+    var nonEmpty = 0
+    for ((t, q) <- random ++ special; fuzzy <- Seq(true, false);
+         algo <- Seq(Searcher.Bm25, Searcher.TfIdf)) {
+      val res = QueryParser.leaves(t).map(l => l -> resolve(l, fuzzy)).toMap
+      val qTerms = res.values.flatten.toSet
+      val expected: Map[Long, Double] = docTerms.collect {
+        case (d, tc) if holds(t, res, tc.keySet) =>
+          d -> qTerms.toSeq.filter(tc.contains)
+            .map(x => score(algo, tc(x), dl(d), df(x))).sum
+      }
+      val got = Searcher.search(idx, q, algo, fuzzy = fuzzy).fold(
+        e => fail(s"query [$q] failed: $e"), _.as[(Long, Double)].collect().toSeq)
+      val ctx = s"[$q fuzzy=$fuzzy $algo]"
+      assert(got.map(_._1).toSet == expected.keySet && got.size == expected.size,
+        s"$ctx got ${got.map(_._1).sorted} expected ${expected.keys.toSeq.sorted}")
+      got.foreach { case (d, s) =>
+        assert(math.abs(s - expected(d)) <= 1e-9 * math.abs(expected(d)),
+          s"$ctx doc $d score $s != ${expected(d)}")
+      }
+      assert(got == got.sortBy { case (d, s) => (-s, d) }, s"$ctx order $got")
+      if (got.nonEmpty) nonEmpty += 1
+    }
+    // the generator must exercise both matching and empty results
+    assert(nonEmpty > 20 && nonEmpty < 4 * (random ++ special).size, nonEmpty)
+    idx.unpersist()
   }
 
   test("custom registry filter applies at indexing AND query preparation") {
