@@ -211,8 +211,9 @@ object DedupPipeline {
     * single explode over concat(transform(keys → struct)) allocated one
     * InternalRow per bucket entry (~31/doc) plus the concatenated struct
     * array per row. Generate over a primitive long array is allocation-free
-    * per element. */
-  private def bucketedAux(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
+    * per element. IncrementalDedup persists this relation as its bucket
+    * stages, so delta ingest checks Hamming inline too. */
+  private[dedup] def bucketedAux(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
     val bandArr =
       if (sigs.columns.contains("band_keys")) col("band_keys")
       else bandKeysCol(cfg)
@@ -383,16 +384,28 @@ object DedupPipeline {
     * shingle arrays. The earlier fused all-pass verify join shipped shingles
     * for every pair: ~3x the array bytes through the shuffle for nothing
     * (measured 1.9 GB written at 175k docs; see git history). */
-  private[dedup] def edgesRaw(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    // Materialized because the per-pass split below would otherwise
+  private[dedup] def edgesRaw(sigs: DataFrame, cfg: DedupConfig): DataFrame =
+    // Materialized because the per-pass split in verified would otherwise
     // recompute the whole generation per branch. Pairs are ~20 bytes each —
     // this is the small relation of the job.
-    val cand = Materialize(pairsFromBuckets(bucketedAux(sigs, cfg),
-      cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming))
+    verified(Materialize(pairsFromBuckets(bucketedAux(sigs, cfg),
+      cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming)),
+      cfg)(_ => sigs)
+
+  /** The verify policy over (pass, src, dst) candidates that `bucketPairs`
+    * enumerated from `bucketedAux` rows with `cfg.simhashMaxHamming`, as
+    * (src, dst) edges (not distinct). MinHash pairs are Jaccard-verified
+    * against the (doc_id, shingles) relation `sigsFor` returns for the
+    * MinHash (src, dst) pairs; SimHash pairs were Hamming-verified inline
+    * and winnow pairs need no verify, so both pass through. One definition
+    * for the batch and the incremental delta path. */
+  private[dedup] def verified(cand: DataFrame, cfg: DedupConfig)(
+      sigsFor: DataFrame => DataFrame): DataFrame = {
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (cfg.runMinhash)
-      parts += verifyJaccard(cand.where(col("pass") === PassMinhash)
-        .select("src", "dst"), sigs, cfg).select("src", "dst")
+    if (cfg.runMinhash) {
+      val mh = cand.where(col("pass") === PassMinhash).select("src", "dst")
+      parts += verifyJaccard(mh, sigsFor(mh), cfg).select("src", "dst")
+    }
     if (cfg.runSimhash || cfg.runWinnow)
       parts += cand.where(col("pass") =!= PassMinhash).select("src", "dst")
     parts.reduce(_ unionByName _)

@@ -11,12 +11,13 @@ import scala.jdk.CollectionConverters._
  * Incremental near-duplicate clustering — the batch-ingest form of
  * DedupPipeline for pipelines that receive the corpus in increments (daily
  * crawls): each batch is signed once, candidate generation touches ONLY the
- * buckets the new documents land in, verification reads stored signatures
- * only for the candidates' endpoints (doc_id pushdown), and the cluster
- * labels are advanced by running connected components over (new verified
- * edges ∪ the prior labels of TOUCHED components only, re-expressed as star
- * edges) with every untouched label passing through verbatim
- * (relabelInputs). Nothing re-signs, re-buckets, re-pairs, re-verifies, or
+ * buckets the new documents land in, SimHash pairs are Hamming-verified
+ * inline from the fingerprint stored on the bucket rows, MinHash
+ * verification reads stored signatures only for its candidates' endpoints
+ * (doc_id pushdown), and the cluster labels are advanced by running
+ * connected components over (new verified edges ∪ the prior labels of
+ * TOUCHED components only, re-expressed as star edges) with every
+ * untouched label passing through verbatim (relabelInputs). Nothing re-signs, re-buckets, re-pairs, re-verifies, or
  * re-labels the existing corpus; per-batch cost is O(delta + touched-bucket
  * membership + touched-component membership).
  *
@@ -34,8 +35,10 @@ import scala.jdk.CollectionConverters._
  *
  *   sigs_<batch>/     (url, doc_id, warc_ts, band_keys|simhash|winnow_fps)
  *                     doc_id-sorted + bloomed (point reads prune at rest)
- *   buckets_<batch>/  (pass, bucket_key, doc_id) partitioned by
- *                     bpt = pmod(bucket_key, bucketParts)
+ *   buckets_<batch>/  (pass, bucket_key, doc_id, aux) partitioned by
+ *                     bpt = pmod(bucket_key, bucketParts); aux is the
+ *                     SimHash fingerprint on SimHash rows, 0 elsewhere
+ *                     (DedupPipeline.bucketedAux)
  *   labels_<batch>/   (id, comp) — DELTA: only the rows this batch's scoped
  *                     CC re-derived; the full view is min(comp) per id
  *                     across stages (labels are monotonically
@@ -113,7 +116,11 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       // doc_ids for pages it already holds. un=false stores are untouched
       // by the algorithm and keep their fingerprint. ONE shared token
       // definition with DedupRunner.fingerprint (DedupConfig.urlNormToken).
-      s"un=$urlNormToken"
+      s"un=$urlNormToken|" +
+      // bucket-row format: buckets_<batch> rows carry `aux`. A store
+      // written without it fails this pin up front instead of an
+      // AnalysisException on the missing column mid-ingest.
+      "bk=aux"
   }
 
   private def batchesPath = Paths.get(root, "BATCHES")
@@ -215,7 +222,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       // schemas are identical by construction (single pinned config), and
       // an N-branch union costs N scan subtrees in every plan that touches
       // the store — analysis/optimization time grew with batch count on
-      // every delta read (IncProbe gap attribution).
+      // every delta read (driver gaps between the delta path's jobs).
       val df = spark.read.parquet(dataPaths(ids.map(sigStage)): _*)
       if (capParts) df.coalesce(unionParts) else df
     }
@@ -295,7 +302,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     ids.map { id =>
       spark.read.parquet(s"$root/${bucketStage(id)}/data")
         .where(col("bpt").isin(touchedPts: _*))
-        .select("pass", "bucket_key", "doc_id")
+        .select("pass", "bucket_key", "doc_id", "aux")
     }.reduce(_ unionByName _)
       // see unionParts — measured 800+ near-empty tasks per consumer
       // without it, on a 10-batch store
@@ -396,7 +403,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       // stage); clustered, a dir gets one file and the store's file count —
       // which bounds the scan fan-in of every later touched-bucket read —
       // stays at bucketParts per batch.
-      DedupPipeline.bucketed(sigsNew, cfg).withColumn("bpt", bptCol)
+      DedupPipeline.bucketedAux(sigsNew, cfg).withColumn("bpt", bptCol)
         .repartition(bucketParts, col("bpt"))
     }
 
@@ -500,20 +507,25 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     newEdges.select("src", "dst").unionByName(touchedStars)
   }
 
-  /** Verified edges involving at least one new document. The stored side is
-    * the persisted bucket table read with (1) a static `bpt IN (touched)`
-    * partition filter — pruned at the scan — then (2) a left-semi join on
-    * the exact (pass, bucket_key) key set of the new batch; per-batch cost
-    * scales with the delta and its touched buckets, not the corpus. The
-    * verify step reads stored signatures ONLY for the candidate pairs' old
-    * endpoints (readSigsFor — doc_id pushdown against the sorted + bloomed
-    * sigs stages), so no step of delta ingest scans the stored corpus. */
+  /** Verified edges involving at least one new document, under the batch
+    * path's candidate and verify policy (DedupPipeline.bucketPairs with
+    * the SimHash Hamming test inline, then DedupPipeline.verified). The
+    * stored side is the persisted bucket table read with (1) a static
+    * `bpt IN (touched)` partition filter — pruned at the scan — then (2) a
+    * left-semi join on the exact (pass, bucket_key) key set of the new
+    * batch; per-batch cost scales with the delta and its touched buckets,
+    * not the corpus. Stored signatures are read ONLY for the MinHash
+    * candidates' old endpoints (readSigsFor — doc_id pushdown against the
+    * sorted + bloomed sigs stages), so no step of delta ingest scans the
+    * stored corpus. `smallRowBound` is the driver-shape bound (see
+    * DedupPipeline.pairsFromBucketsAuto). */
   private[dedup] def deltaEdges(priorIds: Seq[String],
       sigsNew: DataFrame, bucketsNew: DataFrame,
       releasables: scala.collection.mutable.Buffer[DataFrame] =
-        scala.collection.mutable.ArrayBuffer.empty): DataFrame = {
-    import DedupPipeline.{PassMinhash, PassSimhash, PassWinnow}
-    val bNew = bucketsNew.select("pass", "bucket_key", "doc_id", "bpt")
+        scala.collection.mutable.ArrayBuffer.empty,
+      smallRowBound: Int = DedupPipeline.SmallBucketRowBound): DataFrame = {
+    import DedupPipeline.PassWinnow
+    val bNew = bucketsNew.select("pass", "bucket_key", "doc_id", "aux", "bpt")
     // The new-key set materializes ONCE before the semi-join: Catalyst
     // pushes the semi-join below the stored-stage union, so an inline
     // aggregate subtree would be re-planned (scan + exchange + aggregate +
@@ -540,121 +552,65 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     // stored-bucket semi-join — the checkpoint is delta-sized (touched
     // buckets only).
     val stream = graft.tables.JobLabel(spark, "inc:touchedBuckets") {
-      Materialize(
-        touched.unionByName(bNew.select("pass", "bucket_key", "doc_id")))
+      Materialize(touched.unionByName(
+        bNew.select("pass", "bucket_key", "doc_id", "aux")))
     }
     releasables += stream
     // Candidate pairs, then "involves a new document" (old-old pairs in a
-    // touched bucket were found when their docs arrived). Four shapes by
-    // what fits in the driver (r7):
-    //  - stream within the collect bound AND delta ids within the pushdown
-    //    cap (the steady-state micro-batch): pairs enumerate in a driver
-    //    loop (pairsFromBucketsLocal — the same bucketPairs as the
-    //    distributed form) and the delta filter is a driver set test — NO
-    //    Catalyst plan at all, where a distributed shape pays a bucket
-    //    shuffle + distinct + a thousand-literal IN predicate plan
-    //    (IncProbe, r7: candDelta 2.4 s / 7 jobs → a single
-    //    LocalTableScan; the 1.3 s pre-candDelta planning gap gone with
-    //    it).
-    //  - driver pairs but a crawl-sized id set: broadcast-semi against the
-    //    local pair relation.
-    //  - over-bound stream: the distributed generator, with the IN filter
-    //    (small id set) or materialize + two-sided broadcast-semi (large).
+    // touched bucket were found when their docs arrived). Two shapes, as in
+    // DedupPipeline.pairsFromBucketsAuto:
+    //  - stream within the bound (the steady-state micro-batch): pairs
+    //    enumerate in the driver and the filter is a set test on the new
+    //    doc_ids — no Catalyst plan at all, where the distributed shape
+    //    pays a bucket shuffle + distinct + a key filter plan (r7: the
+    //    candidate step fell from 2.4 s / 7 jobs to one LocalTableScan).
+    //    Every new doc that can be a pair endpoint has a row in the
+    //    stream, so collecting the new rows' ids is bounded with it.
+    //  - over-bound stream: the distributed generator, kept where either
+    //    endpoint is new through keyFiltered (an IN filter for few ids, a
+    //    bounded-broadcast semi-join for many).
     val newIds = sigsNew.select("doc_id")
-    val newIdSample = graft.tables.JobLabel(spark, "inc:newIdProbe") {
-      newIds.limit(maxSigIdPushdown + 1).collect()
-    }
     val localPairs = graft.tables.JobLabel(spark, "inc:candLocal") {
       DedupPipeline.pairsFromBucketsLocal(stream, cfg.smallCap,
-        alwaysStarPass = PassWinnow)
+        alwaysStarPass = PassWinnow, cfg.simhashMaxHamming, smallRowBound)
     }
-    val candDelta = graft.tables.JobLabel(spark, "inc:candDelta") {
-      (localPairs, newIdSample.length <= maxSigIdPushdown) match {
-        case (Some(pairs), true) =>
-          val ids = newIdSample.map(_.getLong(0)).toSet
+    val candDelta = localPairs match {
+      case Some(pairs) =>
+        val ids = graft.tables.JobLabel(spark, "inc:newIdProbe") {
+          bNew.select("doc_id").collect().map(_.getLong(0)).toSet
+        }
+        graft.tables.JobLabel(spark, "inc:candDelta") {
           DedupPipeline.localPairsDF(spark,
             pairs.filter(p => ids(p._2) || ids(p._3)))
-        case (Some(pairs), false) =>
-          val cand = DedupPipeline.localPairsDF(spark, pairs)
-          val m = Materialize(cand
-            .join(broadcast(newIds.withColumnRenamed("doc_id", "src")),
-              Seq("src"), "left_semi")
-            .unionByName(cand
-              .join(broadcast(newIds.withColumnRenamed("doc_id", "dst")),
-                Seq("dst"), "left_semi"))
-            .distinct())
-          releasables += m
-          m
-        case (None, true) =>
-          val cand = DedupPipeline.pairsFromBuckets(stream, cfg.smallCap,
-            alwaysStarPass = PassWinnow)
-          val ids = newIdSample.map(_.getLong(0))
-          val m = Materialize(cand.where(
-            col("src").isin(ids: _*) || col("dst").isin(ids: _*)))
-          releasables += m
-          m
-        case (None, false) =>
-          val cand = DedupPipeline.pairsFromBuckets(stream, cfg.smallCap,
-            alwaysStarPass = PassWinnow)
-          val candM = Materialize(cand)
-          releasables += candM
-          val m = Materialize(candM
-            .join(broadcast(newIds.withColumnRenamed("doc_id", "src")),
-              Seq("src"), "left_semi")
-            .unionByName(candM
-              .join(broadcast(newIds.withColumnRenamed("doc_id", "dst")),
-                Seq("dst"), "left_semi"))
-            .distinct())
-          releasables += m
-          m
-      }
-    }
-    // Stored signatures are read ONLY for the candidates' old endpoints —
-    // a candidate-bounded doc_id set, pushed into the sigs scans — and
-    // PER VERIFY FAMILY (r7): the endpoint population is dominated by the
-    // SimHash pigeonhole blocks (16-bit keys collide by construction —
-    // measured ~17k old endpoints per ~1k-page delta, past any IN-pushdown
-    // cap, which forced the fallback semi-join to stream the ENTIRE wide
-    // sigs store per batch), but those pairs only need the 8-byte
-    // fingerprint — a narrow column-pruned scan. The few MinHash-pass
-    // endpoints (real near-dup collisions only, typically well under the
-    // pushdown cap) are the only readers of the wide shingle arrays, and
-    // their small key set prunes at rest. Each family's relation is
-    // candidate-bounded and materialized once (the verify joins reference
-    // it twice — src and dst side).
-    def oldEndpointsOf(c: DataFrame) = c.select(col("src").as("doc_id"))
-      .unionByName(c.select(col("dst").as("doc_id")))
-      .distinct()
-      .join(newIds, Seq("doc_id"), "left_anti")
-    def endpointSigs(c: DataFrame, label: String, cols: String*): DataFrame =
-      graft.tables.JobLabel(spark, s"inc:endpointSigs:$label") {
-        val m = Materialize(readSigsFor(priorIds, oldEndpointsOf(c))
-          .select(cols.head, cols.tail: _*)
-          .unionByName(sigsNew.select(cols.head, cols.tail: _*)))
+        }
+      case None => graft.tables.JobLabel(spark, "inc:candDelta") {
+        val cand = Materialize(DedupPipeline.pairsFromBuckets(stream,
+          cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming))
+        releasables += cand
+        val m = Materialize(keyFiltered(cand, "src", newIds)
+          .unionByName(keyFiltered(cand, "dst", newIds)).distinct())
         releasables += m
         m
       }
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (cfg.runMinhash) {
-      val mhCand = candDelta.where(col("pass") === PassMinhash)
-        .select("src", "dst")
-      parts += DedupPipeline.verifyJaccard(mhCand,
-        endpointSigs(mhCand, "minhash", "doc_id", "shingles"), cfg)
-        .select("src", "dst")
     }
-    if (cfg.runSimhash) {
-      val shCand = candDelta.where(col("pass") === PassSimhash)
-        .select("src", "dst")
-      val fp = endpointSigs(shCand, "simhash", "doc_id", "simhash")
-      parts += shCand
-        .join(fp.select(col("doc_id").as("src"), col("simhash").as("fp_a")), "src")
-        .join(fp.select(col("doc_id").as("dst"), col("simhash").as("fp_b")), "dst")
-        .where(bit_count(col("fp_a").bitwiseXOR(col("fp_b"))) <= cfg.simhashMaxHamming)
-        .select("src", "dst")
+    // Stored signatures are read ONLY for the MinHash candidates' old
+    // endpoints (real near-dup collisions, typically well under the
+    // pushdown cap, so the small key set prunes the wide shingle arrays at
+    // rest); materialized once because the verify joins reference it twice
+    // (src and dst side).
+    DedupPipeline.verified(candDelta, cfg) { mh =>
+      graft.tables.JobLabel(spark, "inc:endpointSigs:minhash") {
+        val oldEnds = mh.select(col("src").as("doc_id"))
+          .unionByName(mh.select(col("dst").as("doc_id")))
+          .distinct()
+          .join(newIds, Seq("doc_id"), "left_anti")
+        val m = Materialize(readSigsFor(priorIds, oldEnds)
+          .select("doc_id", "shingles")
+          .unionByName(sigsNew.select("doc_id", "shingles")))
+        releasables += m
+        m
+      }
     }
-    if (cfg.runWinnow)
-      parts += candDelta.where(col("pass") === PassWinnow).select("src", "dst")
-    parts.reduce(_ unionByName _)
   }
 
   /** Fold every committed batch into one — bounds the per-ingest stage-union
@@ -685,7 +641,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     store.runStage(bucketStage(foldId), cfgFp,
       inputs = ids.map(bucketStage), partitionCols = Seq("bpt")) {
       ids.map(id => spark.read.parquet(s"$root/${bucketStage(id)}/data")
-          .select("pass", "bucket_key", "doc_id", "bpt"))
+          .select("pass", "bucket_key", "doc_id", "aux", "bpt"))
         .reduce(_ unionByName _)
         .repartition(bucketParts, col("bpt")) // one file per dir (see addBatch)
     }

@@ -131,6 +131,11 @@ final class StageStore(val spark: SparkSession, val root: String) {
       def writer = bloomCols.foldLeft(df.write.mode(SaveMode.Overwrite)) {
         (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
       }
+      // The overwrite below deletes the committed data first: drop the old
+      // manifest before it, or a write that fails part-way leaves that
+      // manifest claiming its fingerprint over deleted or partial data, and
+      // a later run under the old fingerprint would resume a torn stage.
+      Files.deleteIfExists(manifestPath(name))
       JobLabel(spark, s"stage:$name:write") {
         if (partitionCols.isEmpty)
           writer.parquet(dataDir(name))

@@ -299,6 +299,53 @@ class DedupRunnerSpec extends AnyFunSuite {
     corpus.unpersist()
   }
 
+  test("a store without the aux bucket-row format fails the config pin") {
+    val root = java.nio.file.Files.createTempDirectory("incfmt").toString
+    val pages = SyntheticCorpus.pages(spark,
+      SyntheticCorpus.Config(nClusters = 20))
+    new IncrementalDedup(spark, root).addBatch("b0", pages)
+    // a store written before buckets_<batch> carried `aux` has the same
+    // CONFIG pin minus the bucket-format token
+    val conf = java.nio.file.Paths.get(root, "CONFIG")
+    val pinned = java.nio.file.Files.readString(conf).trim
+    assert(pinned.endsWith("|bk=aux"), pinned)
+    java.nio.file.Files.writeString(conf, pinned.stripSuffix("|bk=aux"))
+    for (op <- Seq[IncrementalDedup => Any](
+        _.checkConfig(), _.addBatch("b1", pages))) {
+      val e = intercept[IllegalArgumentException] {
+        op(new IncrementalDedup(spark, root))
+      }
+      assert(e.getMessage.contains("built with config"))
+    }
+  }
+
+  test("deltaEdges: driver and distributed candidate shapes agree") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val corpus = SyntheticCorpus.pages(spark,
+      SyntheticCorpus.Config(nClusters = 80)).cache()
+    val root = java.nio.file.Files.createTempDirectory("incshapes").toString
+    // a 4-id pushdown cap sends keyFiltered (the distributed shape's
+    // involves-a-new-doc filter) and the MinHash endpoint read to their
+    // semi-join side
+    val inc = new IncrementalDedup(spark, root, cfg, maxSigIdPushdown = 4)
+    inc.addBatch("b0", corpus.where(abs(xxhash64(col("url"))) % 2 === 0))
+    inc.addBatch("b1", corpus.where(abs(xxhash64(col("url"))) % 2 === 1))
+    val sigs1 = spark.read.parquet(s"$root/sigs_b1/data")
+    val buckets1 = spark.read.parquet(s"$root/buckets_b1/data")
+    def edges(bound: Int) = inc.deltaEdges(Seq("b0"), sigs1, buckets1,
+        smallRowBound = bound)
+      .select("src", "dst").as[(Long, Long)].collect().toSeq.sorted
+    val driver = edges(DedupPipeline.SmallBucketRowBound)
+    val distributed = edges(0) // any non-empty stream is over a 0-row bound
+    assert(driver.nonEmpty)
+    assert(driver == distributed)
+    // every edge involves a new doc
+    val newIds = sigs1.select("doc_id").as[Long].collect().toSet
+    assert(driver.forall { case (a, b) => newIds(a) || newIds(b) })
+    corpus.unpersist()
+  }
+
   test("fingerprint versions the url-normalization ALGORITHM, not just " +
     "the boolean (shared un token with the incremental store pin)") {
     val off = DedupRunner.fingerprint(DedupConfig(normalizeUrls = false))

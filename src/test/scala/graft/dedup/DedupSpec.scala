@@ -71,20 +71,35 @@ class IncrementalDedupSpec extends AnyFunSuite {
   test("two-batch incremental clustering equals full recluster") {
     val corpus = SyntheticCorpus.pages(spark,
       SyntheticCorpus.Config(nClusters = 200)).cache()
-    val full = DedupPipeline.clusters(corpus)
-      .select("doc_id", "cluster_id", "is_champion")
-      .as[(Long, Long, Boolean)].collect().toSet
-
-    val root = java.nio.file.Files.createTempDirectory("incdedup").toString
-    val inc = new IncrementalDedup(spark, root)
     // split by url hash parity — arbitrary, deterministic
     val b1 = corpus.where(abs(xxhash64(col("url"))) % 2 === 0)
     val b2 = corpus.where(abs(xxhash64(col("url"))) % 2 === 1)
-    inc.addBatch("day1", b1)
-    inc.addBatch("day2", b2)
-    val got = inc.clusters()
-      .select("doc_id", "cluster_id", "is_champion")
-      .as[(Long, Long, Boolean)].collect().toSet
+    def ingest(cfg: DedupConfig) = {
+      val root = java.nio.file.Files.createTempDirectory("incdedup").toString
+      val inc = new IncrementalDedup(spark, root, cfg)
+      inc.addBatch("day1", b1)
+      inc.addBatch("day2", b2)
+      (root, inc)
+    }
+    def snap(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "cluster_id", "is_champion")
+        .as[(Long, Long, Boolean)].collect().toSet
+
+    // SimHash alone: the delta path's inline Hamming check on stored
+    // bucket rows must agree with the batch path, on clusters that really
+    // link docs of both batches
+    val shCfg = DedupConfig(runMinhash = false, runWinnow = false)
+    val shGot = ingest(shCfg)._2.clusters()
+    assert(snap(shGot) == snap(DedupPipeline.clusters(corpus, shCfg)))
+    val spanning = shGot
+      .withColumn("half", abs(xxhash64(col("url"))) % 2)
+      .groupBy("cluster_id").agg(countDistinct("half").as("halves"))
+      .where(col("halves") === 2).count()
+    assert(spanning > 0, "no SimHash cluster spans both batches")
+
+    val full = snap(DedupPipeline.clusters(corpus))
+    val (root, inc) = ingest(DedupConfig())
+    val got = snap(inc.clusters())
     assert(got == full)
 
     // resume: re-running a committed batch must not recompute (thunk throws)
@@ -105,10 +120,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // an all-duplicate batch (every doc_id already stored) is a no-op:
     // clusters unchanged
     inc.addBatch("day3", b1)
-    val after = inc.clusters()
-      .select("doc_id", "cluster_id", "is_champion")
-      .as[(Long, Long, Boolean)].collect().toSet
-    assert(after == full)
+    assert(snap(inc.clusters()) == full)
     corpus.unpersist()
   }
 }

@@ -37,11 +37,22 @@ class StagesSpec extends AnyFunSuite {
     val store = new StageStore(spark, root)
     var calls = 0
     store.runStage("s1", "cfgA") { calls += 1; Seq(1).toDF("x") }
-    store.runStage("s1", "cfgB") { calls += 1; Seq(1, 2).toDF("x") }
+    // a cfgB run whose write fails part-way must not leave cfgA's manifest
+    // claiming the overwritten data: re-running cfgA recomputes its rows
+    intercept[Exception] {
+      store.runStage("s1", "cfgB") {
+        spark.range(2).toDF("x").filter((_: Any) =>
+          throw new IllegalStateException("write fails"))
+      }
+    }
+    assert(store.runStage("s1", "cfgA") { calls += 1; Seq(1).toDF("x") }
+      .as[Int].collect().toSeq == Seq(1))
     assert(calls == 2)
+    store.runStage("s1", "cfgB") { calls += 1; Seq(1, 2).toDF("x") }
+    assert(calls == 3)
     assert(store.runStage("s1", "cfgB") { calls += 1; Seq(1).toDF("x") }
       .count() == 2)
-    assert(calls == 2)
+    assert(calls == 3)
   }
 
   test("upstream fingerprint change invalidates downstream (lineage)") {
