@@ -2,6 +2,8 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+import scala.jdk.CollectionConverters._
 
 /**
  * Connected components on an edge DataFrame by union-find with local
@@ -18,14 +20,17 @@ import org.apache.spark.sql.functions._
  * bucket collapse inside a partition, and the 308k-edge `dedup_batch`
  * graph contracts to a ~131k-row forest.
  *
- * A forest still over the bound goes to iterative minimum-label
- * propagation with pointer jumping, run over the forest instead of the
- * raw edges. It stays because it is the only path whose driver memory is
- * bounded on corpus-scale graphs; no benchmark workload reaches it.
+ * A forest still over the bound is contracted again by the same
+ * union-find, round after round (`contractRound`), until a round changes
+ * no row: the forest is then a star forest rooted at the component minima.
+ * The loop never exits on the row count: a forest keeps at least
+ * nodes − components rows, so many small components stay over any bound.
+ * A component's root task holds all its rows, so a giant component is one
+ * task per round.
  *
- * Iterates materialize through `Materialize`: a reliable checkpoint when the
- * context has a checkpoint dir configured (cluster durability), else
- * localCheckpoint; superseded local iterates are released eagerly.
+ * Forests materialize through `Materialize`: a reliable checkpoint when
+ * the context has a checkpoint dir configured (cluster durability), else
+ * localCheckpoint; a superseded forest is released eagerly.
  */
 object ConnectedComponents {
 
@@ -34,21 +39,23 @@ object ConnectedComponents {
     * ~52 MB of transient driver heap (~200 B/row measured on JDK 17: the
     * decoded UnsafeRows, their buffers and the (Long, Long) tuples; boxed
     * generic Rows cost ~223 B/row), plus the union-find's boxed map,
-    * against the dozen-plus scheduled jobs of the label-propagation
-    * rounds. */
+    * against the jobs of at least one contraction round and the label
+    * materialization on the distributed path. */
   val SmallEdgeBound: Int = 1 << 18
 
-  /** Label-propagation rounds executed per Spark job by the fallback. */
-  private val FusedRounds = 4
+  /** Contraction rounds after which `run` fails instead of returning
+    * labels that are not yet a fixpoint. A 10^6-node path with random ids
+    * over 8 partitions takes 8, the confirming round included. */
+  private val MaxRounds = 64
 
   private val pairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
-  /** Union-find over `edges`, which hold no self-edges: (node, min node id
-    * of its component) for every node. Roots are always the component min
-    * (a union hangs the larger root under the smaller), so no relabel
-    * pass is needed. Shared by the executors' contraction and the
+  /** Union-find over `edges`, which hold no self-edges: every node mapped
+    * to the min node id of its component. Roots are always the component
+    * min (a union hangs the larger root under the smaller), so no relabel
+    * pass is needed. Shared by the executors' contraction rounds and the
     * driver finish. */
-  private def unionFind(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+  private def unionFind(edges: Iterator[(Long, Long)]): collection.Map[Long, Long] = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -65,7 +72,8 @@ object ConnectedComponents {
       if (rs != rd) parent.put(math.max(rs, rd), math.min(rs, rd))
     }
     val ids = parent.keySet().toArray(Array.empty[java.lang.Long])
-    ids.iterator.map(id => (id.longValue, find(id)))
+    ids.foreach(id => parent.put(id, find(id)))
+    parent.asScala
   }
 
   /** The (src, dst) pairs of `edges` minus self-edges (and null ends): a
@@ -89,124 +97,75 @@ object ConnectedComponents {
       smallEdgeBound: Int = SmallEdgeBound): DataFrame = {
     val sample = nonSelf(edges).limit(smallEdgeBound + 1).collect()
     if (sample.length > smallEdgeBound) run(edges, smallEdgeBound)
-    else labelsDF(edges.sparkSession, unionFind(sample.iterator))
+    else labelsDF(edges.sparkSession, unionFind(sample.iterator).iterator)
   }
 
-  /** @param edges DataFrame with (src: long, dst: long), read by the one
+  /** @param edges DataFrame with (src: long, dst: long), read by the first
     *        contraction job
     * @param smallEdgeBound forest size up to which the driver finishes
-    * @param maxIter label-propagation round cap for an over-bound forest
     * @return (id: long, comp: long) for every node appearing in a non-self
-    *         edge; comp = min node id of the component. */
-  def run(edges: DataFrame, smallEdgeBound: Int = SmallEdgeBound,
-      maxIter: Int = 25): DataFrame = {
+    *         edge, each once; comp = min node id of the component.
+    * @throws IllegalStateException when an over-bound forest reaches no
+    *         fixpoint within `MaxRounds` contraction rounds */
+  def run(edges: DataFrame, smallEdgeBound: Int = SmallEdgeBound): DataFrame = {
     // Lazy checkpoint fused with the count: one job contracts every
     // partition and materializes the forest, which is all the rest reads.
     // The count runs on the RDD: a SQL count() under AQE is two jobs.
-    val forest = Materialize(
+    var forest = Materialize(
       nonSelf(edges).mapPartitions((it: Iterator[(Long, Long)]) =>
-        unionFind(it).filter(p => p._1 != p._2))(pairs).toDF("src", "dst"),
+        unionFind(it).iterator.filter(p => p._1 != p._2))(pairs).toDF("src", "dst"),
       eager = false)
     val labels =
       if (forest.queryExecution.toRdd.count() <= smallEdgeBound)
         labelsDF(edges.sparkSession,
-          unionFind(forest.as[(Long, Long)](pairs).collect().iterator))
-      else propagate(forest, maxIter)
+          unionFind(forest.as[(Long, Long)](pairs).collect().iterator).iterator)
+      else {
+        var rounds = 0
+        var changed = true
+        while (changed) {
+          if (rounds == MaxRounds) {
+            Materialize.release(forest)
+            throw new IllegalStateException(
+              s"connected components: no fixpoint after $MaxRounds contraction rounds")
+          }
+          val acc = edges.sparkSession.sparkContext.longAccumulator
+          val next = contractRound(forest, acc)
+          Materialize.release(forest)
+          forest = next
+          changed = !acc.isZero
+          rounds += 1
+        }
+        Materialize(forest.union(forest.select(col("dst"), col("dst")))
+          .distinct().toDF("id", "comp"))
+      }
     Materialize.release(forest)
     labels
   }
 
-  /** Iterative minimum-label propagation with pointer jumping, pure
-    * DataFrame algebra. Each round every node adopts the min label among
-    * itself and its neighbors, then jumps to its parent's label
-    * (comp ← comp(comp)), doubling the horizon per round. Labels only
-    * decrease, so the exact decimal sum of comp strictly decreases until
-    * the fixpoint; the sum is computed by the job that materializes the
-    * iterate. `FusedRounds` rounds run per job through lazily materialized
-    * intermediates, since per-job driver latency dominates these cheap
-    * rounds. */
-  private def propagate(forest: DataFrame, maxIter: Int): DataFrame = {
-    // Symmetric adjacency (both directions), deduped, materialized once —
-    // lazily, so the first iteration's job does it (no separate barrier).
-    // repartition BEFORE distinct: hashpartitioning(src) satisfies the
-    // (src, dst) aggregate's clustering requirement, so the dedup runs in
-    // place and lands partitioned by src for the per-round message join.
-    val adj = Materialize(
+  /** One contraction round over `forest`, materialized. Every row `(x, r)`
+    * goes to the tasks of both `x` and `r`, hashed to the forest's own
+    * partition count (no setting; AQE never coalesces an explicit count),
+    * so each node's whole neighborhood meets in one task and its
+    * union-find jumps pointers across it. A key switched between node and
+    * root cannot do this: a row and its parent row never share it.
+    *
+    * A task emits its union-find forest without root rows, and raises
+    * `changed` unless every input row already points at its node's root,
+    * i.e. unless output and input are the same row set. A round in which no
+    * task raises it has reached a star forest rooted at component minima:
+    * every row of node v sits in v's task, where an unchanged output gives
+    * v at most one parent, makes v a root if it is anyone's parent, and
+    * makes every root the min of its children. */
+  private def contractRound(forest: DataFrame, changed: LongAccumulator): DataFrame =
+    Materialize(
       forest
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .repartition(col("src"))
-        .distinct(),
-      eager = false)
-
-    var labels = Materialize(
-      adj.select(col("src").as("id")).distinct().withColumn("comp", col("id")),
-      eager = false)
-
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).collect()(0)
-        .getDecimal(0)
-
-    // One round: (a) neighbor-min — each edge forwards the src's current
-    // comp to dst; (b) pointer jumping — comp <- comp(comp). The label and
-    // message relations are a few narrow columns, so every join is hinted
-    // SHUFFLE_HASH rather than paying sort-merge's sort of both sides.
-    def round(cur: DataFrame): DataFrame = {
-      val msgs = adj
-        .join(cur.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("comp").as("nbr_comp"))
-      val stepped = cur
-        .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-      val parents = stepped
-        .select(col("id").as("comp"), col("comp").as("pcomp"))
-      stepped
-        .join(parents.hint("shuffle_hash"), Seq("comp"), "left")
-        .select(col("id"), coalesce(col("pcomp"), col("comp")).as("comp"))
-    }
-
-    // Intermediate rounds must be SHARED by the next round's consumers.
-    // localCheckpoint(eager=false) does that; Dataset.checkpoint(eager=false)
-    // does NOT — with a reliable checkpoint dir Spark checkpoints only the
-    // LAST marked RDD per job, so intermediates persist() instead.
-    val reliable = forest.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def midMaterialize(df: DataFrame): DataFrame =
-      if (reliable) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else Materialize(df, eager = false)
-    def midRelease(df: DataFrame): Unit =
-      if (reliable) { df.unpersist(); () } else Materialize.release(df)
-
-    var prevSum: java.math.BigDecimal = null
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val mids = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var cur = labels
-      for (r <- 1 to FusedRounds) {
-        cur =
-          if (r < FusedRounds) { val m = midMaterialize(round(cur)); mids += m; m }
-          else Materialize(round(cur), eager = false)
-      }
-      val next = cur
-      val nextSum = labelSum(next)
-      // Early fixpoint: equal sums for the last intermediate round and the
-      // final round mean the final round changed nothing, so the
-      // confirming iteration is provably a no-op.
-      val earlyFix = labelSum(mids.last).compareTo(nextSum) == 0
-      Materialize.release(labels)
-      mids.foreach(midRelease)
-      labels = next
-      converged = earlyFix ||
-        (prevSum != null && nextSum.compareTo(prevSum) == 0)
-      prevSum = nextSum
-      iter += 1
-    }
-    Materialize.release(adj)
-    labels
-  }
+        .withColumn("key", explode(array(col("src"), col("dst"))))
+        .repartition(forest.queryExecution.toRdd.getNumPartitions, col("key"))
+        .select("src", "dst").as[(Long, Long)](pairs)
+        .mapPartitions { (rows: Iterator[(Long, Long)]) =>
+          val in = rows.toArray
+          val root = unionFind(in.iterator)
+          if (in.exists { case (x, r) => root(x) != r }) changed.add(1)
+          root.iterator.filter(p => p._1 != p._2)
+        }(pairs).toDF("src", "dst"))
 }

@@ -412,8 +412,8 @@ object DedupPipeline {
   }
 
   /** Distinct verified edges (public contract; clustering goes through
-    * edgesRaw — ConnectedComponents dedups in its adjacency build, so a
-    * pre-distinct would just add a full exchange of the edge set). */
+    * edgesRaw — ConnectedComponents' union-find absorbs duplicate edges,
+    * so a pre-distinct would just add a full exchange of the edge set). */
   def edges(sigs: DataFrame, cfg: DedupConfig): DataFrame =
     edgesRaw(sigs, cfg).distinct()
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 /**
@@ -249,7 +250,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       keys.limit(maxSigIdPushdown + 1).collect()
     }
     if (sample.length <= maxSigIdPushdown)
-      df.where(col(keyCol).isin(sample.map(_.getLong(0)): _*))
+      df.where(col(keyCol).isin(ArraySeq.unsafeWrapArray(sample.map(_.getLong(0))): _*))
     else {
       // Explicit broadcast: every caller passes a delta-bounded key set, but
       // it sits behind filters/joins whose selectivity the planner can't

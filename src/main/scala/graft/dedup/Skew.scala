@@ -4,19 +4,20 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Explicit skew-handling helpers (north_rule: "salted repartitioning for
- * hot-domain skew"). Web corpora are Zipf-distributed by domain — parked
- * domains and boilerplate templates put 10^6+ pages behind single keys.
+ * Salted two-phase shapes for hot-key skew (north_rule: "salted
+ * repartitioning for hot-domain skew"). Web corpora are Zipf-distributed by
+ * domain — parked domains and boilerplate templates put 10^6+ pages behind
+ * single keys.
  *
- * Layered defense used by the pipeline:
- *  1. Candidate generation emits star edges per bucket (O(s), never O(s²)),
- *     so a hot bucket can't explode pair counts — see DedupPipeline.
- *  2. All bucket aggregations are algebraic (min/count) ⇒ Spark's partial
- *     aggregation already combines map-side; residual reduce-side skew is
- *     bounded by the mapper count, not the key count.
+ * The dedup pipeline never calls these helpers; only `SkewSpec` does. The
+ * pipeline bounds skew in other ways:
+ *  1. Candidate generation emits star edges once a bucket passes the cap
+ *     (O(s) edges, never O(s²)) — see `DedupPipeline.bucketPairs`.
+ *  2. Nothing combines a bucket map-side: a hot bucket's sorted stream is
+ *     ONE reduce task, which holds O(cap) rows but spends O(s) time.
  *  3. AQE skew-join splitting handles oversized join partitions at runtime.
- *  4. For non-algebraic aggregations or when AQE is unavailable, the salted
- *     two-phase shapes below spread one hot key over `s` reducers.
+ * The shapes below spread one hot key over `s` reducers, for an
+ * aggregation or join that needs more than that.
  */
 object Skew {
 

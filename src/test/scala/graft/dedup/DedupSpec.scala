@@ -26,9 +26,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   /** Every entry point on `edges` spread over 1, 3 and 8 partitions:
     * `run` (per-partition contraction, driver finish), `runAuto` (driver
-    * union-find under the bound) and `runAuto` with a 2-row bound, which
-    * sends the edges through `run` and the forest through the
-    * label-propagation fallback. */
+    * union-find under the bound), and `runAuto` with a 16- and a 2-row
+    * bound, which send the edges through `run` and the forest through the
+    * contraction rounds. No entry point may emit an id twice. */
   private def labelings(edges: Seq[(Long, Long)]): Seq[(String, Map[Long, Long])] =
     for {
       parts <- Seq(1, 3, 8)
@@ -36,8 +36,33 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (name, cc) <- Seq[(String, org.apache.spark.sql.DataFrame)](
         "run" -> ConnectedComponents.run(df),
         "runAuto" -> ConnectedComponents.runAuto(df),
+        "runAuto(bound=16)" -> ConnectedComponents.runAuto(df, smallEdgeBound = 16),
         "runAuto(bound=2)" -> ConnectedComponents.runAuto(df, smallEdgeBound = 2))
-    } yield (s"$name on $parts partitions", cc.as[(Long, Long)].collect().toMap)
+    } yield {
+      val how = s"$name on $parts partitions"
+      val rows = cc.as[(Long, Long)].collect()
+      val ids = rows.map(_._1).distinct.length
+      assert(ids == rows.length, s"$how emits ${rows.length} rows for $ids ids")
+      (how, rows.toMap)
+    }
+
+  /** Ids 0 until n in a seeded random order. */
+  private def shuffledIds(n: Int, seed: Int): Vector[Long] =
+    new scala.util.Random(seed).shuffle((0L until n.toLong).toVector)
+
+  /** A path through `n` nodes whose ids are not in path order: the case
+    * that keeps a component spread over every partition longest. */
+  private def randomPath(n: Int, seed: Int): Seq[(Long, Long)] =
+    shuffledIds(n, seed).sliding(2).map(s => (s(0), s(1))).toSeq
+
+  private def assertOracle(edges: Seq[(Long, Long)], components: Int): Unit = {
+    val exp = ufComponents(edges)
+    assert(exp.values.toSet.size == components)
+    for ((how, got) <- labelings(edges)) {
+      val wrong = exp.count { case (id, c) => !got.get(id).contains(c) }
+      assert(got.size == exp.size && wrong == 0, s"$how: ${got.size} ids, $wrong wrong")
+    }
+  }
 
   test("CC matches union-find on random graphs") {
     val rnd = new scala.util.Random(7)
@@ -59,6 +84,21 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("CC empty edges") {
     for ((how, got) <- labelings(Seq.empty)) assert(got.isEmpty, how)
+  }
+
+  test("CC on a 2,000-node random-id path") {
+    assertOracle(randomPath(2000, 11), components = 1)
+  }
+
+  test("CC on a 10^5-leaf star and a 10^5-node random-id path") {
+    val ids = shuffledIds(100001, 12)
+    assertOracle(ids.tail.map(leaf => (ids.head, leaf)), components = 1)
+    assertOracle(randomPath(100000, 13), components = 1)
+  }
+
+  test("CC on 5,000 disjoint pairs stops at the fixpoint") {
+    val ids = shuffledIds(10000, 14)
+    assertOracle(ids.grouped(2).map(p => (p(0), p(1))).toSeq, components = 5000)
   }
 }
 
