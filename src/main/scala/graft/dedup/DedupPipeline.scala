@@ -330,28 +330,34 @@ object DedupPipeline {
         maxHamming)
     }
 
-  /** The driver enumeration behind `pairsFromBucketsAuto`, exposed so a
-    * caller that ALSO has driver-side follow-up filters (the incremental
-    * delta path's involves-a-new-doc filter) can apply them on the raw
-    * pair seq instead of planning literal-IN predicates over a local
-    * relation. Rows are grouped by (pass, bucket_key) in a hash map and
-    * sorted by doc_id only within each group. Returns None when the
-    * relation exceeds the bound. */
+  /** The driver enumeration behind `pairsFromBucketsAuto`: the relation's
+    * rows collect (at most `smallRowBound + 1` of them) and run through
+    * `localBucketPairs`. Returns None when the relation exceeds the bound. */
   private[graft] def pairsFromBucketsLocal(bucketedRel: DataFrame,
       smallCap: Int, alwaysStarPass: Int, maxHamming: Int = AnyHamming,
       smallRowBound: Int = SmallBucketRowBound): Option[Seq[(Int, Long, Long)]] = {
     val sample = bucketRows(bucketedRel).limit(smallRowBound + 1).collect()
-    if (sample.length > smallRowBound) return None
+    if (sample.length > smallRowBound) None
+    else Some(localBucketPairs(sample, smallCap, alwaysStarPass, maxHamming))
+  }
+
+  /** `bucketPairs` over driver-held (pass, bucket_key, doc_id, aux) rows in
+    * any order, distinct. Rows are grouped by (pass, bucket_key) in a hash
+    * map and sorted by doc_id only within each group. Exposed so a caller
+    * that collects its bucket rows with more columns (the incremental delta
+    * path tags its new rows) enumerates the same pairs. */
+  private[graft] def localBucketPairs(rows: Iterable[(Int, Long, Long, Long)],
+      smallCap: Int, alwaysStarPass: Int,
+      maxHamming: Int): Seq[(Int, Long, Long)] = {
     val groups = new java.util.HashMap[(Int, Long),
       scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long)]]()
-    sample.foreach { r =>
+    rows.foreach { r =>
       groups.computeIfAbsent((r._1, r._2),
         _ => scala.collection.mutable.ArrayBuffer.empty) += r
     }
-    val rows = scala.jdk.CollectionConverters.CollectionHasAsScala(
+    val sorted = scala.jdk.CollectionConverters.CollectionHasAsScala(
       groups.values()).asScala.iterator.flatMap(_.sortInPlaceBy(_._3))
-    Some(bucketPairs(rows, smallCap, alwaysStarPass, maxHamming)
-      .distinct.toVector)
+    bucketPairs(sorted, smallCap, alwaysStarPass, maxHamming).distinct.toVector
   }
 
   /** (pass, src, dst) pair seq as a local DataFrame. */

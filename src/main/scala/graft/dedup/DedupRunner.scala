@@ -82,10 +82,10 @@ object DedupRunner {
     * carry the flag, so champion counts must count distinct triples (see
     * DedupPipeline.clusters). */
   def main(args: Array[String]): Unit = {
-    // --bucket-parts N: the incremental store's partition fan-out — a
+    // --bucket-parts N: the incremental store's bpt granularity — a
     // STORE-CREATION choice (pinned in CONFIG; see IncrementalDedup), so a
-    // web-scale deployment sets it to its cluster parallelism (e.g. 4096)
-    // at first ingest and must pass the same value on every later run.
+    // web-scale deployment sets a finer value (e.g. 4096) at first ingest
+    // and must pass the same value on every later run.
     val bpIdxs = args.zipWithIndex.collect {
       case ("--bucket-parts", i) => i
     }
@@ -103,8 +103,8 @@ object DedupRunner {
       "usage: DedupRunner [--normalize-urls] [--bucket-parts N] " +
         "<pages_parquet> <out_parquet> <stage_root> [batch_id | --compact]")
     // the flag configures the INCREMENTAL store; silently ignoring it on a
-    // from-scratch recluster would leave the user believing a fan-out was
-    // set that no store ever received
+    // from-scratch recluster would leave the user believing a granularity
+    // was set that no store ever received
     require(bpIdx < 0 || pos.length >= 4,
       "--bucket-parts applies only to incremental ingest " +
         "(pass a batch_id or --compact)")

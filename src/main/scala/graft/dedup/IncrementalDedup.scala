@@ -1,7 +1,8 @@
 package graft.dedup
 
 import graft.tables.StageStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -31,31 +32,31 @@ import scala.jdk.CollectionConverters._
  * already-committed batch is a no-op read.
  *
  * Store shape (the 100-TB design): the bucket relation is a PERSISTED
- * hive-partitioned table, not a per-ingest re-derivation from stored
- * signature columns —
+ * table, not a per-ingest re-derivation from stored signature columns —
  *
  *   sigs_<batch>/     (url, doc_id, warc_ts, band_keys|simhash|winnow_fps)
  *                     doc_id-sorted + bloomed (point reads prune at rest)
- *   buckets_<batch>/  (pass, bucket_key, doc_id, aux) partitioned by
- *                     bpt = pmod(bucket_key, bucketParts); aux is the
- *                     SimHash fingerprint on SimHash rows, 0 elsewhere
- *                     (DedupPipeline.bucketedAux)
+ *   buckets_<batch>/  (doc_id, pass, bucket_key, aux, bpt) sorted by
+ *                     (bpt, pass, bucket_key), bpt = pmod(bucket_key,
+ *                     bucketParts); aux is the SimHash fingerprint on
+ *                     SimHash rows, 0 elsewhere (DedupPipeline.bucketedAux)
  *   labels_<batch>/   (id, comp) — DELTA: only the rows this batch's scoped
  *                     CC re-derived; the full view is min(comp) per id
  *                     across stages (labels are monotonically
  *                     non-increasing), comp-sorted + id/comp bloomed
  *
- * Each batch APPENDS one partitioned bucket stage (the Iceberg
- * partition-append analogue); the touched-bucket read then prunes at the
- * SCAN with a static `bpt IN (...)` partition filter computed from the new
- * batch's keys, before the exact (pass, bucket_key) semi-join — per-batch
- * read cost scales with the touched key space, not the stored corpus. The
- * per-batch stage unions grow with batch count, so `compact()` folds all
- * committed batches into one generation (mirroring IndexStore.compact):
- * fold stages are written first, then the BATCHES list is atomically
- * rewritten to the single fold id — the commit point; a crash before it
- * leaves invisible orphan stages that an identical re-compact reuses by
- * fingerprint. Labels are byte-identical across a compact.
+ * Each batch APPENDS one bucket stage: a few files (one for a small batch)
+ * whose row groups each cover a narrow bpt span. The touched-bucket read
+ * is one multi-path scan over every stored bucket stage with a static
+ * `bpt IN (...)` filter computed from the new batch's keys, which skips row
+ * groups by their min/max statistics, before the exact (pass, bucket_key)
+ * semi-join — per-batch read cost scales with the touched key space, not
+ * the stored corpus. The stage count grows with batch count, so `compact()`
+ * folds all committed batches into one generation (mirroring
+ * IndexStore.compact): fold stages are written first, then the BATCHES list
+ * is atomically rewritten to the single fold id — the commit point; a crash
+ * before it leaves invisible orphan stages that an identical re-compact
+ * reuses by fingerprint. Labels are byte-identical across a compact.
  *
  * Semantics vs a from-scratch recluster: EXACTLY equal whenever no candidate
  * bucket exceeds `smallCap` (the common case; equality is what the
@@ -74,13 +75,15 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     // (streaming micro-batches land one stage each) at a bounded stage
     // fan-in without the caller scheduling maintenance. 0 = manual compact.
     autoCompactAfter: Int = 0,
-    // Hive-partition fan-out of the persisted bucket table — a STORE-CREATION
-    // parameter, not a compile-time constant: a web-scale store wants its
-    // fan-out to track the cluster's parallelism (e.g. 4096) while a local
-    // test store wants a value small batches demonstrably prune. Part of the
-    // pinned config fingerprint (it is physical layout): opening a store
-    // with a different value fails with the config-mismatch message instead
-    // of silently mis-pruning partition filters.
+    // Bucket-key fan-out of the persisted bucket table: rows carry
+    // bpt = pmod(bucket_key, bucketParts) and each bucket stage is sorted by
+    // it, so the touched-bucket read's `bpt IN (...)` filter skips row
+    // groups. A STORE-CREATION parameter, not a compile-time constant: a
+    // web-scale store wants a finer granularity (e.g. 4096) than a local
+    // test store, whose small batches must still leave some bpt values
+    // untouched. Part of the pinned config fingerprint (it is physical
+    // layout): opening a store with a different value fails with the
+    // config-mismatch message instead of silently mis-pruning.
     bucketParts: Int = IncrementalDedup.BucketParts,
     // Max doc_id keys pushed as an IN-literal into a stored-sigs scan;
     // larger key sets resolve by join. A pure READ-path knob — it changes no
@@ -92,18 +95,6 @@ final class IncrementalDedup(spark: SparkSession, root: String,
 
   private val store = new StageStore(spark, root)
 
-  // Partitioned-stage reads (buckets_* has `bucketParts` hive dirs) launch
-  // a DISTRIBUTED listing job whenever the path count exceeds Spark's
-  // parallel-discovery threshold (default 32) — measured ~120 ms of job
-  // overhead per stage read on a local FS where a driver-side listing of
-  // 64 dirs takes single-digit ms. Lift the threshold so bounded fan-outs
-  // list driver-side; genuinely wide stores (e.g. bucketParts=4096 on an
-  // object store) stay on the distributed listing, and an explicit user
-  // setting is never overridden.
-  locally {
-    val k = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    if (spark.conf.get(k, "32") == "32") spark.conf.set(k, "128")
-  }
   private val cfgFp = {
     import cfg._
     s"w=$shingleW|k=$minhashK|b=$bands|r=$rowsPerBand|tau=$tau|d=$simhashMaxHamming|" +
@@ -121,7 +112,10 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       // bucket-row format: buckets_<batch> rows carry `aux`. A store
       // written without it fails this pin up front instead of an
       // AnalysisException on the missing column mid-ingest.
-      "bk=aux"
+      "bk=aux|" +
+      // bucket-stage layout: one bpt-sorted table per batch with bpt as a
+      // column. A store of hive-partitioned bpt directories fails the pin.
+      "bl=sorted"
   }
 
   private def batchesPath = Paths.get(root, "BATCHES")
@@ -190,94 +184,116 @@ final class IncrementalDedup(spark: SparkSession, root: String,
   private def bucketStage(id: String) = s"buckets_$id"
   private def labelStage(id: String) = s"labels_$id"
 
-  /** Scan partitions of a many-stage union track the store's FILE count,
+  /** Scan partitions of a many-stage read track the store's FILE count,
     * and a checkpoint or shuffle-free consumer inherits that layout — on a
     * 20-batch store that measured 1000+ near-empty tasks per consumer.
-    * Coalesce (no shuffle) to the session's parallelism; bucketParts keeps
-    * a floor matching the bucket table's partition fan-out. */
-  private def unionParts: Int =
-    math.max(spark.sparkContext.defaultParallelism, bucketParts)
-
-  /** `capParts = true` is the DELTA-read layout fix above and is wrong for
+    * Delta reads coalesce (no shuffle) to the session's parallelism.
+    *
+    * `capParts = true` is that DELTA-read layout fix and is wrong for
     * corpus-sized reads: the compact() fold streams the ENTIRE stored sigs
     * relation through this read, and coalescing that to unionParts caps the
     * fold's read/write parallelism at a handful of oversized tasks on a
     * large store. Corpus-scale callers (compact, clusters) pass false and
     * keep the native one-partition-per-file layout. */
-  /** Data paths of `stageNames`, zero-row stages skipped (their rows
-    * contribute nothing, and a zero-row PARTITIONED stage's fallback file
-    * has a different directory shape than its siblings — see
-    * StageStore.committedRows). When every stage is empty the first path is
-    * kept as the schema source. */
-  private def dataPaths(stageNames: Seq[String]): Seq[String] = {
-    val nonEmpty = stageNames.filter(n => store.committedRows(n).forall(_ > 0))
-    (if (nonEmpty.nonEmpty) nonEmpty else stageNames.take(1))
-      .map(n => s"$root/$n/data")
+  private def unionParts: Int = spark.sparkContext.defaultParallelism
+
+  // ONE multi-path read (StageStore.read), not a per-stage unionByName fold
+  // (r7): stage schemas are identical by construction (single pinned
+  // config), and an N-branch union costs N scan subtrees in every plan that
+  // touches the store. The schema comes from the stage manifests, so the
+  // read runs no schema-inference job.
+  private def readStages(names: Seq[String], capParts: Boolean): DataFrame = {
+    val df = store.read(names)
+    if (capParts) df.coalesce(unionParts) else df
   }
 
   private def readSigs(ids: Seq[String],
       capParts: Boolean = true): Option[DataFrame] =
-    if (ids.isEmpty) None
-    else Some {
-      // ONE multi-path read, not a per-stage unionByName fold (r7): stage
-      // schemas are identical by construction (single pinned config), and
-      // an N-branch union costs N scan subtrees in every plan that touches
-      // the store — analysis/optimization time grew with batch count on
-      // every delta read (driver gaps between the delta path's jobs).
-      val df = spark.read.parquet(dataPaths(ids.map(sigStage)): _*)
-      if (capParts) df.coalesce(unionParts) else df
-    }
+    if (ids.isEmpty) None else Some(readStages(ids.map(sigStage), capParts))
 
   /** Stored signatures restricted to `docIds` — the sigs stages are written
     * doc_id-sorted with a doc_id bloom filter (the same at-rest mechanism as
     * the index's term/vh stages), so a small key set pushes `doc_id IN
     * (...)` into every stage scan: row groups + bloom filters prune AT REST
     * and the read costs O(|docIds|), not O(stored corpus). Key sets past
-    * `MaxSigIdPushdown` fall back to a semi-join (no driver-side giant
+    * `maxSigIdPushdown` fall back to a semi-join (no driver-side giant
     * IN-literal, no codegen bloat) — still row-pruned before any wide-array
     * column ships, just without the at-rest scan skip. */
   private[dedup] def readSigsFor(ids: Seq[String], docIds: DataFrame): DataFrame =
     keyFiltered(readSigs(ids).get, "doc_id", docIds)
 
-  /** `df` restricted to keyCol ∈ keys (a single-column relation): the keys
-    * collect into an IN literal pushed to the parquet scans when few
-    * (≤ MaxSigIdPushdown — row groups + bloom filters then prune at rest),
-    * and degrade to a semi-join when many (no giant literal, no codegen
+  /** `df` restricted to keyCol ∈ keys, for keys the driver holds: an IN
+    * literal pushed to the parquet scans when few (≤ maxSigIdPushdown —
+    * row groups + bloom filters then prune at rest), else a semi-join
+    * against the keys as a local relation (no giant literal, no codegen
     * bloat — still row-pruned before any wide column ships). */
   private def keyFiltered(df: DataFrame, keyCol: String,
-      keys: DataFrame): DataFrame = {
-    val sample = graft.tables.JobLabel(spark, s"inc:keyprobe:$keyCol") {
-      keys.limit(maxSigIdPushdown + 1).collect()
-    }
-    if (sample.length <= maxSigIdPushdown)
-      df.where(col(keyCol).isin(ArraySeq.unsafeWrapArray(sample.map(_.getLong(0))): _*))
+      keys: Array[Long]): DataFrame =
+    if (keys.length <= maxSigIdPushdown)
+      df.where(col(keyCol).isin(ArraySeq.unsafeWrapArray(keys): _*))
     else {
-      // Explicit broadcast: every caller passes a delta-bounded key set, but
-      // it sits behind filters/joins whose selectivity the planner can't
-      // estimate, so without the hint this plans sort-merge and EXCHANGES
-      // the full stored relation (measured: a 1 GB sigs shuffle per delta
-      // batch) instead of streaming it past a broadcast hash probe.
-      //
-      // Bounded, though: "delta-bounded" can still be millions of rows (a
-      // real daily crawl's duplicate-id probe passes the WHOLE incoming
-      // batch's doc_ids), and an unconditional hint would build an
-      // arbitrarily large broadcast relation — driver/executor OOM. Above
-      // MaxBroadcastKeys (8-byte keys ⇒ ~tens of MB of relation) the hint
-      // is dropped and AQE picks the join strategy from the key set's
-      // actual runtime size. The bound probe is one cheap limit+count job
-      // on the (narrow) key relation, paid only past the IN-pushdown cap.
-      val bounded = keys.limit(IncrementalDedup.MaxBroadcastKeys + 1).count() <=
-        IncrementalDedup.MaxBroadcastKeys
-      val rhs = keys.toDF(keyCol)
-      df.join(if (bounded) broadcast(rhs) else rhs, Seq(keyCol), "left_semi")
+      import spark.implicits._
+      semiJoin(df, keyCol, ArraySeq.unsafeWrapArray(keys).toDF(keyCol),
+        keys.length <= IncrementalDedup.MaxBroadcastKeys)
     }
+
+  /** `keyFiltered` for a key relation (a single long column). A relation
+    * the optimizer folds to driver-held rows collects without a job; any
+    * other pays one `limit(cap+1)` collect, and a key set past the cap
+    * stays distributed as a semi-join. */
+  private def keyFiltered(df: DataFrame, keyCol: String,
+      keys: DataFrame): DataFrame =
+    driverKeys(keys, keyCol) match {
+      case Some(k) => keyFiltered(df, keyCol, k)
+      case None =>
+        // The bound probe is one cheap limit+count job on the (narrow) key
+        // relation, paid only past the IN-pushdown cap.
+        semiJoin(df, keyCol, keys, keys.limit(
+          IncrementalDedup.MaxBroadcastKeys + 1).count() <=
+            IncrementalDedup.MaxBroadcastKeys)
+    }
+
+  /** The single long column of `keys` in the driver when it has at most
+    * maxSigIdPushdown rows, else None. */
+  private def driverKeys(keys: DataFrame, keyCol: String): Option[Array[Long]] = {
+    val sample = localRows(keys).getOrElse(
+      graft.tables.JobLabel(spark, s"inc:keyprobe:$keyCol") {
+        keys.limit(maxSigIdPushdown + 1).collect()
+      })
+    if (sample.length <= maxSigIdPushdown) Some(sample.map(_.getLong(0)))
+    else None
+  }
+
+  /** The rows of `df` when its optimized plan is a local relation — rows
+    * the driver already holds, so the collect runs no job — else None. */
+  private def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect())
+      case _ => None
+    }
+
+  private def semiJoin(df: DataFrame, keyCol: String, keys: DataFrame,
+      bounded: Boolean): DataFrame = {
+    // Explicit broadcast: every caller passes a delta-bounded key set, but
+    // it sits behind filters/joins whose selectivity the planner can't
+    // estimate, so without the hint this plans sort-merge and EXCHANGES
+    // the full stored relation (measured: a 1 GB sigs shuffle per delta
+    // batch) instead of streaming it past a broadcast hash probe.
+    //
+    // Bounded, though: "delta-bounded" can still be millions of rows (a
+    // real daily crawl's duplicate-id probe passes the WHOLE incoming
+    // batch's doc_ids), and an unconditional hint would build an
+    // arbitrarily large broadcast relation — driver/executor OOM. Above
+    // MaxBroadcastKeys (8-byte keys ⇒ ~tens of MB of relation) the hint
+    // is dropped and AQE picks the join strategy from the key set's
+    // actual runtime size.
+    val rhs = keys.toDF(keyCol)
+    df.join(if (bounded) broadcast(rhs) else rhs, Seq(keyCol), "left_semi")
   }
 
   private def readLabels(ids: Seq[String],
       capParts: Boolean = true): DataFrame =
-    spark.read.parquet(dataPaths(ids.map(labelStage)): _*)
-      .select("id", "comp") // one multi-path scan — see readSigs
-      .transform(df => if (capParts) df.coalesce(unionParts) else df)
+    readStages(ids.map(labelStage), capParts).select("id", "comp")
 
   /** The current FULL label view over the delta label stages: one row per
     * labeled doc, comp = its current component. Labels are monotonically
@@ -290,35 +306,30 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       capParts: Boolean = true): DataFrame =
     readLabels(ids, capParts).groupBy("id").agg(min("comp").as("comp"))
 
-  /** The stored bucket relation of `ids`, read with a STATIC partition
-    * filter on the touched bucket partitions — the filter is applied per
-    * stage scan (before the union), so every scan prunes to the `bpt`
-    * directories a new batch actually touches. */
+  /** The stored bucket rows of `ids` in the touched `bpt` values: one scan
+    * over every bucket stage with a static `bpt IN (...)` filter. The
+    * stages are bpt-sorted, so the pushed filter skips every row group
+    * whose bpt range misses the touched set. */
   private[dedup] def prunedStoredBuckets(ids: Seq[String],
       touchedPts: Seq[Int]): DataFrame =
-    // Stays a per-stage union (unlike readSigs/readLabels' multi-path
-    // read): each bucket stage is its own hive-partitioned root, and Spark
-    // rejects one partitioned read over multiple roots
-    // (CONFLICTING_DIRECTORY_STRUCTURES — basePath can only name one).
-    ids.map { id =>
-      spark.read.parquet(s"$root/${bucketStage(id)}/data")
-        .where(col("bpt").isin(touchedPts: _*))
-        .select("pass", "bucket_key", "doc_id", "aux")
-    }.reduce(_ unionByName _)
-      // see unionParts — measured 800+ near-empty tasks per consumer
-      // without it, on a 10-batch store
-      .coalesce(unionParts)
+    readStages(ids.map(bucketStage), capParts = true)
+      .where(col("bpt").isin(touchedPts: _*))
+      .select("pass", "bucket_key", "doc_id", "aux")
+
+  /** The bucket stages' sort order: bpt first, so a row group spans few
+    * bpt values. */
+  private val bucketSortCols = Seq("bpt", "pass", "bucket_key")
 
   private def bptCol = pmod(col("bucket_key"), lit(bucketParts.toLong)).cast("int")
 
-  /** Stores ingested before the partitioned bucket-table format have
-    * sigs_/labels_ stages but no buckets_ stage; fail with a migration
-    * message instead of a path-not-found mid-job. */
+  /** Stores ingested before the bucket-table format have sigs_/labels_
+    * stages but no buckets_ stage; fail with a migration message instead
+    * of a path-not-found mid-job. */
   private def requireBucketStages(ids: Seq[String]): Unit =
     ids.find(id => !Files.exists(
         Paths.get(root, bucketStage(id), "MANIFEST.json"))).foreach { old =>
       throw new IllegalStateException(
-        s"batch '$old' predates the partitioned bucket-table store format " +
+        s"batch '$old' predates the bucket-table store format " +
           "(no committed buckets stage) — re-ingest the corpus into a " +
           "fresh store root")
     }
@@ -395,17 +406,13 @@ final class IncrementalDedup(spark: SparkSession, root: String,
           Seq("doc_id"), "left_anti")
       }
     }
-    // The batch's bucket rows, appended as one partitioned stage: this is
-    // the persisted form every later batch's touched-bucket read prunes.
+    // The batch's bucket rows, appended as one bpt-sorted stage: this is
+    // the persisted form every later batch's touched-bucket read prunes by
+    // row-group statistics. The range sort writes a handful of files (AQE
+    // coalesces a delta batch's into one), not one file per bpt value.
     val bucketsNew = store.runStage(bucketStage(batchId), cfgFp,
-      inputs = Seq(sigStage(batchId)), partitionCols = Seq("bpt")) {
-      // Cluster by bpt before the partitioned write: without it every write
-      // task emits a file into every bpt dir (tasks × 64 small files per
-      // stage); clustered, a dir gets one file and the store's file count —
-      // which bounds the scan fan-in of every later touched-bucket read —
-      // stays at bucketParts per batch.
+      inputs = Seq(sigStage(batchId)), sortCols = bucketSortCols) {
       DedupPipeline.bucketedAux(sigsNew, cfg).withColumn("bpt", bptCol)
-        .repartition(bucketParts, col("bpt"))
     }
 
     // DELTA label stage: only the rows the scoped CC re-derives (new-edge
@@ -425,29 +432,18 @@ final class IncrementalDedup(spark: SparkSession, root: String,
           .select(col("id"), col("comp"))
       else {
         val newEdges = graft.tables.JobLabel(spark, "inc:deltaEdges") {
-          val e = Materialize(
-            deltaEdges(prior, sigsNew, bucketsNew, releasables)
-              .select("src", "dst"))
-          releasables += e
-          e
+          deltaEdges(prior, sigsNew, bucketsNew, releasables)
         }
-        // Eagerly materialize the (delta-sized) CC input: runAuto's probe
-        // and an over-bound batch's contraction both read it, and without
-        // blocks each would rescan the label store.
+        // runAuto collects the (delta-sized) CC input once, within its
+        // bound, and runs the driver union-find on it; a crawl-sized batch
+        // falls back to the per-partition contraction of `run`, which
+        // reads the input once more (its label reads are key-pruned scans).
         val ccInput = graft.tables.JobLabel(spark, "inc:relabelInputs") {
-          val c = Materialize(
-            relabelInputs(readLabels(prior), newEdges, releasables))
-          releasables += c
-          c
+          relabelInputs(readLabels(prior), newEdges, releasables)
         }
-        // runAuto: ccInput is delta-scoped AND materialized (blocks), so
-        // the small-graph probe is a cheap block read and a small batch's
-        // CC runs as a driver union-find after that one probe; a crawl-sized
-        // batch falls back to the per-partition contraction of `run`.
-        val out = graft.tables.JobLabel(spark, "inc:cc") {
+        graft.tables.JobLabel(spark, "inc:cc") {
           ConnectedComponents.runAuto(ccInput)
         }.select(col("id"), col("comp"))
-        out
       }
     }
     releasables.foreach(Materialize.release)
@@ -494,123 +490,119 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       newEdges: DataFrame,
       releasables: scala.collection.mutable.Buffer[DataFrame] =
         scala.collection.mutable.ArrayBuffer.empty): DataFrame = {
-    val endpoints = newEdges.select(col("src").as("id"))
-      .unionByName(newEdges.select(col("dst").as("id"))).distinct()
-    // comps containing a new-edge endpoint: delta-bounded (≤ |endpoints|),
-    // materialized once; both lookups push their key sets into the
-    // comp-sorted + bloomed label scans via keyFiltered.
-    val touchedComps = Materialize(
-      keyFiltered(priorLabels, "id", endpoints).select("comp").distinct())
-    releasables += touchedComps
-    val touchedStars = keyFiltered(priorLabels, "comp", touchedComps)
-      .where(col("id") =!= col("comp"))
+    // comps containing a new-edge endpoint: delta-bounded (≤ |endpoints|);
+    // both lookups push their key sets into the comp-sorted + bloomed label
+    // scans via keyFiltered. Edges the driver holds (deltaEdges' driver
+    // shape) give the endpoints without a job and their comps in one
+    // collect; distributed edges keep both key sets distributed.
+    val touched = localRows(newEdges.select("src", "dst")) match {
+      case Some(edges) =>
+        val ends = edges.flatMap(r => Array(r.getLong(0), r.getLong(1))).distinct
+        keyFiltered(priorLabels, "comp", keyFiltered(priorLabels, "id", ends)
+          .select("comp").collect().map(_.getLong(0)).distinct)
+      case None =>
+        val endpoints = newEdges.select(col("src").as("id"))
+          .unionByName(newEdges.select(col("dst").as("id"))).distinct()
+        val touchedComps = Materialize(
+          keyFiltered(priorLabels, "id", endpoints).select("comp").distinct())
+        releasables += touchedComps
+        keyFiltered(priorLabels, "comp", touchedComps)
+    }
+    val touchedStars = touched.where(col("id") =!= col("comp"))
       .select(col("id").as("src"), col("comp").as("dst"))
     newEdges.select("src", "dst").unionByName(touchedStars)
   }
 
-  /** Verified edges involving at least one new document, under the batch
-    * path's candidate and verify policy (DedupPipeline.bucketPairs with
-    * the SimHash Hamming test inline, then DedupPipeline.verified). The
+  /** Verified (src, dst) edges involving at least one new document, under
+    * the batch path's candidate and verify policy (DedupPipeline.bucketPairs
+    * with the SimHash Hamming test inline, then DedupPipeline.verified). The
     * stored side is the persisted bucket table read with (1) a static
-    * `bpt IN (touched)` partition filter — pruned at the scan — then (2) a
+    * `bpt IN (touched)` filter — row groups pruned at the scan — then (2) a
     * left-semi join on the exact (pass, bucket_key) key set of the new
     * batch; per-batch cost scales with the delta and its touched buckets,
     * not the corpus. Stored signatures are read ONLY for the MinHash
     * candidates' old endpoints (readSigsFor — doc_id pushdown against the
     * sorted + bloomed sigs stages), so no step of delta ingest scans the
     * stored corpus. `smallRowBound` is the driver-shape bound (see
-    * DedupPipeline.pairsFromBucketsAuto). */
+    * DedupPipeline.pairsFromBucketsAuto); the driver shape returns its
+    * edges as a local relation, the distributed shape materialized. */
   private[dedup] def deltaEdges(priorIds: Seq[String],
       sigsNew: DataFrame, bucketsNew: DataFrame,
       releasables: scala.collection.mutable.Buffer[DataFrame] =
         scala.collection.mutable.ArrayBuffer.empty,
       smallRowBound: Int = DedupPipeline.SmallBucketRowBound): DataFrame = {
-    import DedupPipeline.PassWinnow
-    val bNew = bucketsNew.select("pass", "bucket_key", "doc_id", "aux", "bpt")
-    // The new-key set materializes ONCE before the semi-join: Catalyst
-    // pushes the semi-join below the stored-stage union, so an inline
-    // aggregate subtree would be re-planned (scan + exchange + aggregate +
-    // broadcast build) once PER STORED STAGE branch; as checkpoint blocks
-    // the per-branch build is a block read and exchange reuse can kick in.
-    // bpt rides along (pmod of bucket_key — deterministic, so the distinct
-    // stays one row per (pass, bucket_key)): the touched-partition collect
-    // below then reads these blocks instead of re-evaluating the new bucket
-    // stage a second time (r7 — was a separate distinct+collect job).
-    val newKeys = graft.tables.JobLabel(spark, "inc:newKeys") {
-      Materialize(bNew.select("pass", "bucket_key", "bpt").distinct())
-    }
-    releasables += newKeys
-    // The touched partition set is at most bucketParts values — a driver
-    // scalar, now a tiny block-read aggregate over the materialized keys.
+    import DedupPipeline.{PassMinhash, PassWinnow}
+    import spark.implicits._
+    val bNew = bucketsNew.select("pass", "bucket_key", "doc_id", "aux")
+    // The touched bpt values in one job: each partition returns its own
+    // distinct set (at most bucketParts values), with no exchange.
     val touchedPts = graft.tables.JobLabel(spark, "inc:touchedPts") {
-      newKeys.select("bpt").distinct().collect().map(_.getInt(0)).toSeq
+      bucketsNew.select("bpt").as[Int]
+        .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
     }
-    val touched = prunedStoredBuckets(priorIds, touchedPts)
-      .join(newKeys.select("pass", "bucket_key"),
-        Seq("pass", "bucket_key"), "left_semi")
-    // Materialized: the driver probe below and, over its bound, the
-    // distributed fallback both read this stream, whose lineage is a full
-    // stored-bucket semi-join — the checkpoint is delta-sized (touched
-    // buckets only).
-    val stream = graft.tables.JobLabel(spark, "inc:touchedBuckets") {
-      Materialize(touched.unionByName(
-        bNew.select("pass", "bucket_key", "doc_id", "aux")))
-    }
-    releasables += stream
-    // Candidate pairs, then "involves a new document" (old-old pairs in a
-    // touched bucket were found when their docs arrived). Two shapes, as in
-    // DedupPipeline.pairsFromBucketsAuto:
-    //  - stream within the bound (the steady-state micro-batch): pairs
-    //    enumerate in the driver and the filter is a set test on the new
-    //    doc_ids — no Catalyst plan at all, where the distributed shape
-    //    pays a bucket shuffle + distinct + a key filter plan (r7: the
-    //    candidate step fell from 2.4 s / 7 jobs to one LocalTableScan).
-    //    Every new doc that can be a pair endpoint has a row in the
-    //    stream, so collecting the new rows' ids is bounded with it.
-    //  - over-bound stream: the distributed generator, kept where either
-    //    endpoint is new through keyFiltered (an IN filter for few ids, a
-    //    bounded-broadcast semi-join for many).
-    val newIds = sigsNew.select("doc_id")
-    val localPairs = graft.tables.JobLabel(spark, "inc:candLocal") {
-      DedupPipeline.pairsFromBucketsLocal(stream, cfg.smallCap,
-        alwaysStarPass = PassWinnow, cfg.simhashMaxHamming, smallRowBound)
-    }
-    val candDelta = localPairs match {
-      case Some(pairs) =>
-        val ids = graft.tables.JobLabel(spark, "inc:newIdProbe") {
-          bNew.select("doc_id").collect().map(_.getLong(0)).toSet
-        }
-        graft.tables.JobLabel(spark, "inc:candDelta") {
-          DedupPipeline.localPairsDF(spark,
-            pairs.filter(p => ids(p._2) || ids(p._3)))
-        }
-      case None => graft.tables.JobLabel(spark, "inc:candDelta") {
-        val cand = Materialize(DedupPipeline.pairsFromBuckets(stream,
-          cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming))
-        releasables += cand
-        val m = Materialize(keyFiltered(cand, "src", newIds)
-          .unionByName(keyFiltered(cand, "dst", newIds)).distinct())
-        releasables += m
-        m
-      }
-    }
-    // Stored signatures are read ONLY for the MinHash candidates' old
-    // endpoints (real near-dup collisions, typically well under the
-    // pushdown cap, so the small key set prunes the wide shingle arrays at
-    // rest); materialized once because the verify joins reference it twice
-    // (src and dst side).
-    DedupPipeline.verified(candDelta, cfg) { mh =>
+    // The semi-join's key side is the new bucket stage's own scan (a
+    // broadcast build for a delta batch). The batch's own rows are tagged,
+    // so the one collect below yields both the pairs and the new ids.
+    val stream = prunedStoredBuckets(priorIds, touchedPts)
+      .join(bNew.select("pass", "bucket_key"), Seq("pass", "bucket_key"),
+        "left_semi")
+      .withColumn("new", lit(false))
+      .unionByName(bNew.withColumn("new", lit(true)))
+    def endpointSigs(stored: => DataFrame): DataFrame =
+      // materialized once because the verify joins reference it twice
+      // (src and dst side)
       graft.tables.JobLabel(spark, "inc:endpointSigs:minhash") {
-        val oldEnds = mh.select(col("src").as("doc_id"))
-          .unionByName(mh.select(col("dst").as("doc_id")))
-          .distinct()
-          .join(newIds, Seq("doc_id"), "left_anti")
-        val m = Materialize(readSigsFor(priorIds, oldEnds)
-          .select("doc_id", "shingles")
+        val m = Materialize(stored.select("doc_id", "shingles")
           .unionByName(sigsNew.select("doc_id", "shingles")))
         releasables += m
         m
       }
+    // Candidate pairs, then "involves a new document" (old-old pairs in a
+    // touched bucket were found when their docs arrived). Two shapes, as in
+    // DedupPipeline.pairsFromBucketsAuto:
+    //  - stream within the bound (the steady-state micro-batch): one
+    //    single-task collect (a limit over many partitions scans them in
+    //    several jobs), then pairs enumerate in the driver, the filter is a
+    //    set test on the tagged new ids, and the MinHash old endpoints are a
+    //    driver key set for readSigsFor. The verified edges collect: the
+    //    driver already held every candidate.
+    //  - over-bound stream: the distributed generator, kept where either
+    //    endpoint is new through keyFiltered (an IN filter for few ids, a
+    //    bounded-broadcast semi-join for many).
+    val rows = graft.tables.JobLabel(spark, "inc:candLocal") {
+      stream.select(col("pass"), col("bucket_key"), col("doc_id"),
+          coalesce(col("aux"), lit(0L)), col("new"))
+        .coalesce(1).limit(smallRowBound + 1).collect()
+    }
+    if (rows.length <= smallRowBound) {
+      val newIds = rows.iterator.filter(_.getBoolean(4)).map(_.getLong(2)).toSet
+      val pairs = DedupPipeline.localBucketPairs(
+          rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))),
+          cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming)
+        .filter(p => newIds(p._2) || newIds(p._3))
+      val oldEnds = pairs.iterator.filter(_._1 == PassMinhash)
+        .flatMap(p => Iterator(p._2, p._3)).filterNot(newIds).toArray.distinct
+      val edges = DedupPipeline.verified(DedupPipeline.localPairsDF(spark, pairs),
+          cfg)(_ => endpointSigs(
+            keyFiltered(readSigs(priorIds).get, "doc_id", oldEnds)))
+        .as[(Long, Long)].collect()
+      ArraySeq.unsafeWrapArray(edges).toDF("src", "dst")
+    } else {
+      val newIds = sigsNew.select("doc_id")
+      val cand = Materialize(DedupPipeline.pairsFromBuckets(stream,
+        cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming))
+      releasables += cand
+      val candDelta = Materialize(keyFiltered(cand, "src", newIds)
+        .unionByName(keyFiltered(cand, "dst", newIds)).distinct())
+      releasables += candDelta
+      val edges = Materialize(DedupPipeline.verified(candDelta, cfg) { mh =>
+        endpointSigs(readSigsFor(priorIds, mh.select(col("src").as("doc_id"))
+          .unionByName(mh.select(col("dst").as("doc_id")))
+          .distinct()
+          .join(newIds, Seq("doc_id"), "left_anti")))
+      }.select("src", "dst"))
+      releasables += edges
+      edges
     }
   }
 
@@ -640,11 +632,8 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       readSigs(ids, capParts = false).get
     }
     store.runStage(bucketStage(foldId), cfgFp,
-      inputs = ids.map(bucketStage), partitionCols = Seq("bpt")) {
-      ids.map(id => spark.read.parquet(s"$root/${bucketStage(id)}/data")
-          .select("pass", "bucket_key", "doc_id", "aux", "bpt"))
-        .reduce(_ unionByName _)
-        .repartition(bucketParts, col("bpt")) // one file per dir (see addBatch)
+      inputs = ids.map(bucketStage), sortCols = bucketSortCols) {
+      readStages(ids.map(bucketStage), capParts = false)
     }
     store.runStage(labelStage(foldId), cfgFp,
       inputs = ids.map(labelStage),
@@ -674,9 +663,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     requireConfigMatch()
     val ids = batches()
     require(ids.nonEmpty, "no batches ingested")
-    ids.map(id => spark.read.parquet(s"$root/${bucketStage(id)}/data")
-        .select("pass", "bucket_key", "doc_id"))
-      .reduce(_ unionByName _)
+    readStages(ids.map(bucketStage), capParts = false)
       .groupBy("pass", "bucket_key").agg(count(lit(1)).as("sz"))
       .where(col("sz") > 1)
       .groupBy("pass")
@@ -700,10 +687,10 @@ final class IncrementalDedup(spark: SparkSession, root: String,
 }
 
 object IncrementalDedup {
-  /** Default hive-partition fan-out of the persisted bucket table (see the
+  /** Default bpt granularity of the persisted bucket table (see the
     * `bucketParts` constructor parameter — a store-creation choice pinned
     * in CONFIG). Sized so local test batches demonstrably prune; a
-    * web-scale store passes its cluster parallelism (e.g. 4096). */
+    * web-scale store passes a finer value (e.g. 4096). */
   val BucketParts = 64
 
   /** Default for the `maxSigIdPushdown` constructor parameter: max doc_id

@@ -54,9 +54,9 @@ object StreamOps {
       cfg: graft.dedup.DedupConfig = graft.dedup.DedupConfig(),
       checkpointDir: String,
       autoCompactAfter: Int = 64,
-      // store-creation fan-out, pinned in the store CONFIG (see
+      // store-creation bpt granularity, pinned in the store CONFIG (see
       // IncrementalDedup.bucketParts) — a long-lived streaming store at web
-      // scale wants this set to the cluster's parallelism up front
+      // scale wants a finer value set up front
       bucketParts: Int = graft.dedup.IncrementalDedup.BucketParts)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = pages.sparkSession

@@ -1,7 +1,9 @@
 package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
@@ -18,9 +20,10 @@ import java.nio.charset.StandardCharsets
  *  - checkpoint resume: a re-run with an unchanged fingerprint (config +
  *    input lineage) reads the committed parquet instead of recomputing;
  *  - lineage: every manifest records its input stage names + fingerprints;
+ *  - schema: every manifest records the committed `StructType` as JSON, so
+ *    `read` plans a committed stage without Spark's schema-inference job;
  *  - metrics: per-stage, per-file row counts appended driver-side to a
- *    `stage_metrics.jsonl` journal (parquet-footer based; pre-r7 stores'
- *    `_metrics` parquet dir is still read by metrics()). The name is NOT
+ *    `stage_metrics.jsonl` journal (parquet-footer based). The name is NOT
  *    underscore-prefixed on purpose: Spark's file index silently filters
  *    `_`-prefixed files, so an `_metrics.jsonl` would read as empty.
  *
@@ -73,61 +76,76 @@ final class StageStore(val spark: SparkSession, val root: String) {
   def isCommitted(name: String, fingerprint: String): Boolean =
     readManifest(name).exists(_.get("fingerprint").contains(fingerprint))
 
-  /** Committed row count of `name` from its manifest (every commit records
-    * it), None if the stage is not committed. Lets readers skip zero-row
-    * stages — a zero-row PARTITIONED stage falls back to one unpartitioned
-    * empty file (see runStage), whose directory shape would poison a
-    * multi-path partitioned read. */
-  def committedRows(name: String): Option[Long] =
-    readManifest(name).flatMap(_.get("rows")).map(_.toLong)
-
-  private def fingerprintFor(configFingerprint: String,
-      inputs: Seq[String]): String = {
-    val lineage = inputs.map { in =>
-      val fp = readManifest(in).flatMap(_.get("fingerprint")).getOrElse("?")
-      s"$in=$fp"
+  /** `input=fingerprint` per input stage, each manifest read once: the
+    * lineage a manifest records and the input half of a stage fingerprint. */
+  private def lineageOf(inputs: Seq[String]): String =
+    inputs.map { in =>
+      s"$in=${readManifest(in).flatMap(_.get("fingerprint")).getOrElse("?")}"
     }.mkString(";")
+
+  private def fingerprintOf(configFingerprint: String, lineage: String): String =
     s"$configFingerprint|$lineage".hashCode.toHexString + ":" + configFingerprint
-  }
 
   /** True if a runStage(name, configFingerprint, inputs) call would resume
     * (read) rather than compute — lets callers keep opens read-only. */
   def wouldResume(name: String, configFingerprint: String,
       inputs: Seq[String] = Nil): Boolean =
-    isCommitted(name, fingerprintFor(configFingerprint, inputs))
+    isCommitted(name, fingerprintOf(configFingerprint, lineageOf(inputs)))
+
+  /** One multi-path read of the committed stages `names`, each manifest
+    * read once. Zero-row stages are skipped (when every stage is empty the
+    * first stays as the schema source). The schema comes from the
+    * manifests, so the read plans without Spark's schema-inference job; a
+    * manifest written before the schema was recorded reads by inference. */
+  def read(names: Seq[String]): DataFrame = {
+    require(names.nonEmpty, "no stages to read")
+    val committed = names.map { n =>
+      n -> readManifest(n).getOrElse(throw new IllegalStateException(
+        s"stage $n is not committed under $root"))
+    }
+    val nonEmpty = committed.filter(_._2.get("rows").forall(_ != "0"))
+    readData(if (nonEmpty.nonEmpty) nonEmpty else committed.take(1))
+  }
+
+  private def readData(stages: Seq[(String, Map[String, String])]): DataFrame = {
+    val paths = stages.map(s => dataDir(s._1))
+    stages.map(_._2.get("schema_json")).distinct match {
+      case Seq(Some(json)) =>
+        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
+          .parquet(paths: _*)
+      case _ => spark.read.parquet(paths: _*)
+    }
+  }
 
   /** Run (or resume) a stage. `inputs` are upstream stage names — their
     * fingerprints are folded into this stage's fingerprint, so an upstream
     * config change invalidates everything downstream.
     *
-    * `partitionCols` hive-partitions the stage parquet (the Iceberg
-    * partition-spec analogue): readers filtering on a partition column get
-    * static partition pruning at the scan. A zero-row partitioned write
-    * emits no schema-bearing files, so empty relations fall back to one
-    * unpartitioned empty file (pruning is moot on nothing).
-    *
     * `sortCols` range-sorts the stage before writing (the Iceberg
     * sort-order analogue): each parquet row group then covers a narrow key
     * span, so pushed point/IN predicates on those columns skip row groups
-    * via min/max statistics. `bloomCols` additionally writes parquet bloom
+    * via min/max statistics. A relation whose rows the driver already
+    * holds (a local relation, e.g. a driver union-find's labels) is sorted
+    * in one task into one file instead, without the range sort's sample
+    * and exchange jobs. `bloomCols` additionally writes parquet bloom
     * filters for point-lookup pruning on high-cardinality keys. */
   def runStage(name: String, configFingerprint: String,
-      inputs: Seq[String] = Nil, partitionCols: Seq[String] = Nil,
+      inputs: Seq[String] = Nil,
       sortCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil)(
       compute: => DataFrame): DataFrame = {
-    val lineage = inputs.map { in =>
-      val fp = readManifest(in).flatMap(_.get("fingerprint")).getOrElse("?")
-      s"$in=$fp"
-    }.mkString(";")
-    val fingerprint = fingerprintFor(configFingerprint, inputs)
-    if (isCommitted(name, fingerprint)) {
-      spark.read.parquet(dataDir(name))
-    } else JobLabel(spark, s"stage:$name") {
+    val lineage = lineageOf(inputs)
+    val fingerprint = fingerprintOf(configFingerprint, lineage)
+    val resumed =
+      readManifest(name).filter(_.get("fingerprint").contains(fingerprint))
+    if (resumed.isDefined) readData(Seq(name -> resumed.get))
+    else JobLabel(spark, s"stage:$name") {
       val t0 = System.nanoTime()
       val df0 = compute
       val df =
         if (sortCols.isEmpty) df0
-        else df0.sort(sortCols.map(org.apache.spark.sql.functions.col): _*)
+        else if (df0.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+          df0.coalesce(1).sortWithinPartitions(sortCols.map(col): _*)
+        else df0.sort(sortCols.map(col): _*)
       def writer = bloomCols.foldLeft(df.write.mode(SaveMode.Overwrite)) {
         (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
       }
@@ -137,20 +155,8 @@ final class StageStore(val spark: SparkSession, val root: String) {
       // a later run under the old fingerprint would resume a torn stage.
       Files.deleteIfExists(manifestPath(name))
       JobLabel(spark, s"stage:$name:write") {
-        if (partitionCols.isEmpty)
-          writer.parquet(dataDir(name))
-        else {
-          writer.partitionBy(partitionCols: _*).parquet(dataDir(name))
-          val anyFile = {
-            val s = Files.walk(Paths.get(dataDir(name)))
-            try s.anyMatch(p => p.toString.endsWith(".parquet"))
-            finally s.close()
-          }
-          if (!anyFile)
-            df.limit(0).write.mode(SaveMode.Overwrite).parquet(dataDir(name))
-        }
+        writer.parquet(dataDir(name))
       }
-      val committed = spark.read.parquet(dataDir(name))
       // Per-file row counts from the parquet FOOTERS, read driver-side (r7):
       // this replaces a full post-write re-read job per stage (a
       // groupBy(spark_partition_id) scan of everything just written — one
@@ -182,9 +188,9 @@ final class StageStore(val spark: SparkSession, val root: String) {
       // listing measured ~0.5 s of driver time per stage on the
       // incremental path — for a handful of rows already sitting in driver
       // memory. One buffered file append under the same lock; metrics()
-      // reads the journal (and any legacy parquet dir) back as the same
-      // relation. Best-effort diagnostics, not part of the stage commit
-      // point, so a torn tail line on crash loses only that stage's rows.
+      // reads the journal back as a relation. Best-effort diagnostics, not
+      // part of the stage commit point, so a torn tail line on crash loses
+      // only that stage's rows.
       val metricsJson = perPart.map { case (p, r) =>
         s"""{"partition_id":$p,"rows":$r,"stage":"${FlatJson.escape(name)}",""" +
           s""""run_fingerprint":"${FlatJson.escape(fingerprint)}"}"""
@@ -197,44 +203,32 @@ final class StageStore(val spark: SparkSession, val root: String) {
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       }
-      writeManifest(name, Map(
+      val manifest = Map(
         "stage" -> name,
         "fingerprint" -> fingerprint,
         "rows" -> rows.toString,
         "duration_ms" -> f"$durMs%.1f",
         "inputs" -> lineage,
-        "schema" -> committed.schema.simpleString.take(4000)))
-      committed
+        "schema_json" -> df.schema.json)
+      writeManifest(name, manifest)
+      readData(Seq(name -> manifest))
     }
   }
 
   def metrics(): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("partition_id",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("rows",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("stage",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("run_fingerprint",
-        org.apache.spark.sql.types.StringType)))
     val journal = Paths.get(root, "stage_metrics.jsonl")
-    val legacy = Paths.get(root, "_metrics") // pre-r7 parquet Append dir
-    val parts = Seq(
-      if (Files.exists(journal))
-        Some(spark.read.schema(schema).json(journal.toString)) else None,
-      if (Files.exists(legacy))
-        Some(spark.read.parquet(legacy.toString)
-          .select("partition_id", "rows", "stage", "run_fingerprint"))
-      else None).flatten
-    require(parts.nonEmpty, s"no stage metrics recorded under $root")
-    parts.reduce(_ unionByName _)
+    require(Files.exists(journal), s"no stage metrics recorded under $root")
+    spark.read.schema(StructType(Seq(
+      StructField("partition_id", IntegerType),
+      StructField("rows", LongType),
+      StructField("stage", StringType),
+      StructField("run_fingerprint", StringType)))).json(journal.toString)
   }
 }
 
 object StageStore {
-  /** Guards the `_metrics` Append across stage-running threads (one lock
-    * JVM-wide: metrics writes are driver-side one-row-group files, so
-    * coarse serialization costs nothing). */
+  /** Guards the `stage_metrics.jsonl` append across stage-running threads
+    * (one lock JVM-wide: each append is a few driver-side lines, so coarse
+    * serialization costs nothing). */
   private[tables] val metricsLock = new Object
 }

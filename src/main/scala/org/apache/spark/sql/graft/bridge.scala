@@ -32,7 +32,10 @@ object bridge {
   def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
+        // What RDD.unpersist does, minus its WARN for every locally
+        // checkpointed RDD (its lineage cannot be recomputed — the contract
+        // above): drop the blocks and forget the persisted RDD.
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
         // Reliable checkpoints are files, and Spark's cleaner does not
         // delete them by default (spark.cleaner.referenceTracking
         // .cleanCheckpoints=false) — an iterative job would otherwise leak

@@ -47,7 +47,7 @@ class DedupRunnerSpec extends AnyFunSuite {
     assert(r2 == r1)
   }
 
-  test("incremental store: partitioned bucket reads prune; compact keeps labels") {
+  test("incremental store: sorted bucket reads prune; compact keeps labels") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val corpus = SyntheticCorpus.pages(spark,
@@ -68,11 +68,13 @@ class DedupRunnerSpec extends AnyFunSuite {
       .as[(Long, Long, Boolean)].collect().toSet
     assert(before == full)
 
-    // the touched-bucket read is PRUNED AT THE SCAN: a static bpt partition
-    // filter on the persisted (hive-partitioned) bucket table, per stage
+    // the touched-bucket read is PRUNED AT THE SCAN: the static bpt filter
+    // is pushed into the scan of the bpt-sorted bucket stages, where row
+    // group statistics skip the untouched bpt ranges
+    val pushedBpt = """PushedFilters: \[[^\]]*In\(bpt""".r
     val pruned = inc.prunedStoredBuckets(ids.dropRight(1), Seq(1, 2, 3))
     val plan = pruned.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*bpt""".r.findFirstIn(plan).isDefined, plan)
+    assert(pushedBpt.findFirstIn(plan).isDefined, plan)
     // and it actually restricts rows to those partitions
     assert(pruned.count() <
       inc.prunedStoredBuckets(ids.dropRight(1),
@@ -82,10 +84,10 @@ class DedupRunnerSpec extends AnyFunSuite {
     assert(inc.compact().size == 1)
     assert(inc.batches().size == 1)
     assert(snap() == before)
-    // the folded bucket stage is still partitioned (reads still prune)
+    // the folded bucket stage is still bpt-sorted (reads still prune)
     val plan2 = inc.prunedStoredBuckets(inc.batches(), Seq(1, 2, 3))
       .queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*bpt""".r.findFirstIn(plan2).isDefined, plan2)
+    assert(pushedBpt.findFirstIn(plan2).isDefined, plan2)
 
     // ingest on the compacted store: an all-duplicate batch is a no-op
     inc.addBatch("day_dup", corpus.where(abs(xxhash64(col("url"))) % nb === 0))
@@ -169,6 +171,10 @@ class DedupRunnerSpec extends AnyFunSuite {
     val cc4 = inc.relabelInputs(labels123, e4)
     assert(e4.count() == 3) // new doc pairs with each of cluster 101's docs
     assert(cc4.count() == e4.count() + 2) // + the touched comp's 2 stars
+    // edges the driver does not hold take the distributed key-set shape
+    // and give the same CC input
+    assert(inc.relabelInputs(labels123, e4.localCheckpoint())
+      .as[(Long, Long)].collect().toSet == cc4.as[(Long, Long)].collect().toSet)
 
     // labels stay value-identical to a from-scratch recluster of everything
     val all = pages(1).unionByName(pages(2)).unionByName(pages(3))
@@ -281,10 +287,17 @@ class DedupRunnerSpec extends AnyFunSuite {
     }
     // fan-out is physical layout only: labels identical across values
     assert(stores(0)._3 == stores(1)._3 && stores(0)._3.nonEmpty)
-    // the bp=8 store's bucket table really fans out to <= 8 partition dirs
-    val dirs8 = new java.io.File(s"${stores(0)._2}/buckets_b0/data")
-      .listFiles().count(_.getName.startsWith("bpt="))
-    assert(dirs8 > 0 && dirs8 <= 8, s"bpt dirs: $dirs8")
+    // the bp=8 store's bucket rows carry bpt in [0, 8), in a few sorted
+    // files (at most one per shuffle partition), not one file per bpt value
+    val data8 = s"${stores(0)._2}/buckets_b0/data"
+    val bpts = spark.read.parquet(data8).select("bpt").distinct().as[Int]
+      .collect()
+    assert(bpts.nonEmpty && bpts.forall(b => b >= 0 && b < 8), bpts.toSeq)
+    val files8 = new java.io.File(data8).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files8 > 0 &&
+      files8 <= spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"bucket stage files: $files8")
     // reopen under the same bucketParts: config pin passes, labels resume
     stores.foreach { case (bp, root, before) =>
       val re = new IncrementalDedup(spark, root, bucketParts = bp)
@@ -304,19 +317,61 @@ class DedupRunnerSpec extends AnyFunSuite {
     val pages = SyntheticCorpus.pages(spark,
       SyntheticCorpus.Config(nClusters = 20))
     new IncrementalDedup(spark, root).addBatch("b0", pages)
-    // a store written before buckets_<batch> carried `aux` has the same
-    // CONFIG pin minus the bucket-format token
+    // a store written before buckets_<batch> carried `aux`, or before the
+    // bucket stages were bpt-sorted tables, has the same CONFIG pin minus
+    // that format token
     val conf = java.nio.file.Paths.get(root, "CONFIG")
     val pinned = java.nio.file.Files.readString(conf).trim
-    assert(pinned.endsWith("|bk=aux"), pinned)
-    java.nio.file.Files.writeString(conf, pinned.stripSuffix("|bk=aux"))
-    for (op <- Seq[IncrementalDedup => Any](
-        _.checkConfig(), _.addBatch("b1", pages))) {
-      val e = intercept[IllegalArgumentException] {
-        op(new IncrementalDedup(spark, root))
+    for (token <- Seq("|bk=aux", "|bl=sorted")) {
+      assert(pinned.contains(token), pinned)
+      java.nio.file.Files.writeString(conf, pinned.replace(token, ""))
+      for (op <- Seq[IncrementalDedup => Any](
+          _.checkConfig(), _.addBatch("b1", pages))) {
+        val e = intercept[IllegalArgumentException] {
+          op(new IncrementalDedup(spark, root))
+        }
+        assert(e.getMessage.contains("built with config"))
       }
-      assert(e.getMessage.contains("built with config"))
     }
+  }
+
+  test("delta ingest runs a bounded number of Spark jobs per batch") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val corpus = SyntheticCorpus.pages(spark,
+      SyntheticCorpus.Config(nClusters = 60)).cache()
+    val root = java.nio.file.Files.createTempDirectory("incjobs").toString
+    val inc = new IncrementalDedup(spark, root)
+    inc.addBatch("b0", corpus.where(abs(xxhash64(col("url"))) % 2 === 0))
+    // Jobs of the second addBatch, counted by job group: the listener bus
+    // is asynchronous, so a marker job in a second group is awaited after
+    // it (one queue delivers job starts in submission order).
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("inc-jobs") => jobs.incrementAndGet()
+          case Some("inc-jobs-marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("inc-jobs", "second addBatch")
+      inc.addBatch("b1", corpus.where(abs(xxhash64(col("url"))) % 2 === 1))
+      sc.setJobGroup("inc-jobs-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      corpus.unpersist()
+    }
+    // the delta path runs 22 jobs on this store; 2 of slack. A return of
+    // per-call key probes or of re-reads of held key sets fails this.
+    assert(jobs.get() <= 22 + 2, s"second addBatch ran ${jobs.get()} jobs")
   }
 
   test("deltaEdges: driver and distributed candidate shapes agree") {

@@ -238,6 +238,17 @@ class MaterializeSpec extends AnyFunSuite {
       org.apache.spark.sql.graft.bridge.clearCheckpointDir(sc)
     }
   }
+
+  test("release drops a local checkpoint's blocks") {
+    val sc = spark.sparkContext
+    val df = Materialize(spark.range(1000).toDF("id"))
+    val rddId = df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    assert(sc.getPersistentRDDs.contains(rddId))
+    Materialize.release(df)
+    assert(!sc.getPersistentRDDs.contains(rddId),
+      "the released checkpoint must leave the context's persistent RDDs")
+  }
 }
 
 /** Anchor-extend span evidence: winnowSpans must recover the EXACT length
