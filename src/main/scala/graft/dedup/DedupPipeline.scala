@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions._
+import graft.tables.JobLabel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -394,9 +395,9 @@ object DedupPipeline {
     // Materialized because the per-pass split in verified would otherwise
     // recompute the whole generation per branch. Pairs are ~20 bytes each —
     // this is the small relation of the job.
-    verified(Materialize(pairsFromBuckets(bucketedAux(sigs, cfg),
-      cfg.smallCap, alwaysStarPass = PassWinnow, cfg.simhashMaxHamming)),
-      cfg)(_ => sigs)
+    verified(JobLabel(sigs.sparkSession, "dedup:candidates")(Materialize(
+      pairsFromBuckets(bucketedAux(sigs, cfg), cfg.smallCap,
+        alwaysStarPass = PassWinnow, cfg.simhashMaxHamming))), cfg)(_ => sigs)
 
   /** The verify policy over (pass, src, dst) candidates that `bucketPairs`
     * enumerated from `bucketedAux` rows with `cfg.simhashMaxHamming`, as
@@ -422,11 +423,6 @@ object DedupPipeline {
     * so a pre-distinct would just add a full exchange of the edge set). */
   def edges(sigs: DataFrame, cfg: DedupConfig): DataFrame =
     edgesRaw(sigs, cfg).distinct()
-
-  /** Single-pass entry points kept for the per-family ops/specs. */
-  def minhashCandidates(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    candidateEdges(sigs, cfg.copy(runSimhash = false, runWinnow = false))
-      .select("src", "dst")
 
   /** Verify candidate pairs with exact Jaccard >= tau on shingle sets.
     *
@@ -540,8 +536,11 @@ object DedupPipeline {
     * (UnsafeRow), NOT through .cache(): the columnar cache re-encodes every
     * array column into column batches on write and decodes them on every
     * read — measured 5× slower to build and ~9× slower for the edges
-    * consumers than checkpoint blocks at 52k docs (tools/CacheExp). */
+    * consumers than checkpoint blocks at 52k docs, timed in one session.
+    * Jobs carry `dedup:<phase>` labels (see graft.obs.PhaseTrace); the
+    * resolve joins run in the caller's action on the returned relation. */
   def clustersFromSigs(sigsIn: DataFrame, cfg: DedupConfig): DataFrame = {
+    val spark = sigsIn.sparkSession
     // Store the 16 band keys instead of the 128-long sig they derive from:
     // the materialized relation is the pipeline's most-read intermediate,
     // and nothing downstream needs the raw signature.
@@ -549,18 +548,19 @@ object DedupPipeline {
       if (cfg.runMinhash)
         sigsIn.withColumn("band_keys", bandKeysCol(cfg)).drop("sig")
       else sigsIn
-    val sigs = Materialize(trimmed)
+    val sigs = JobLabel(spark, "dedup:signatures")(Materialize(trimmed))
     // Edge set materialized eagerly (r7; ~16 B/edge blocks), for two
     // consumers: runAuto's small-graph probe reads blocks instead of
     // re-evaluating the whole candidate/verify lineage, and an over-bound
     // edge set's per-partition contraction reads the same blocks.
-    val e = Materialize(edgesRaw(sigs, cfg))
-    val comps = ConnectedComponents.runAuto(e) // (id, comp)
+    val e = JobLabel(spark, "dedup:verify")(Materialize(edgesRaw(sigs, cfg)))
+    val comps = JobLabel(spark, "dedup:cc")(ConnectedComponents.runAuto(e)) // (id, comp)
     Materialize.release(e) // fully consumed by runAuto's return
     // CC is done with the edges, so the wide signatures relation
     // (shingle/sig/fingerprint arrays) has served its purpose — keep only
     // the narrow doc projection and release the blocks.
-    val docs = Materialize(sigs.select("url", "doc_id", "warc_ts"))
+    val docs =
+      JobLabel(spark, "dedup:resolve")(Materialize(sigs.select("url", "doc_id", "warc_ts")))
     Materialize.release(sigs)
     resolveClusters(docs, comps)
   }

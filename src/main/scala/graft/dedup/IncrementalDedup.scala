@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.tables.StageStore
+import org.apache.parquet.column.statistics.IntStatistics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -534,12 +535,14 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     import DedupPipeline.{PassMinhash, PassWinnow}
     import spark.implicits._
     val bNew = bucketsNew.select("pass", "bucket_key", "doc_id", "aux")
-    // The touched bpt values in one job: each partition returns its own
-    // distinct set (at most bucketParts values), with no exchange.
-    val touchedPts = graft.tables.JobLabel(spark, "inc:touchedPts") {
-      bucketsNew.select("bpt").as[Int]
-        .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
-    }
+    // The touched bpt values, from the new stage's parquet footers: the union
+    // of its row-group bpt ranges, a superset the exact semi-join absorbs.
+    val touchedPts = bucketsNew.inputFiles.toSeq.flatMap(f =>
+      StageStore.footer(spark, f)(_.getRowGroups.asScala.toSeq.flatMap(
+        _.getColumns.asScala.find(_.getPath.toDotString == "bpt").get.getStatistics match {
+          case s: IntStatistics if s.hasNonNullValue => s.getMin to s.getMax
+          case _ => 0 until bucketParts
+        }))).distinct
     // The semi-join's key side is the new bucket stage's own scan (a
     // broadcast build for a delta batch). The batch's own rows are tagged,
     // so the one collect below yields both the pairs and the new ids.

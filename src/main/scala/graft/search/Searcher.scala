@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.tables.JobLabel
 import graft.text.TextPipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -210,7 +211,8 @@ object Searcher {
   def search(idx: SearchIndex, query: String, algo: Algo = IndexDefault,
       limit: Int = 1000, fuzzy: Boolean = true): Either[String, DataFrame] =
     QueryParser.parse(query).map { root =>
-      val p = prepare(idx, root, fuzzy)
+      val p = JobLabel(idx.termStats.sparkSession, "search:query:resolve")(
+        prepare(idx, root, fuzzy))
       val queryTerms = p.resolved.values.toSeq.distinct
       // docCount == 0 happens with a live dictionary: fully-deleted terms
       // stay interned (df=0) after every doc is removed — resolve succeeds

@@ -172,13 +172,7 @@ final class StageStore(val spark: SparkSession, val root: String) {
             .map(_.toString).sorted
           finally s.close()
         }
-        val conf = spark.sparkContext.hadoopConfiguration
-        files.zipWithIndex.map { case (f, i) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try (i, r.getRecordCount) finally r.close()
-        }
+        files.zipWithIndex.map { case (f, i) => (i, StageStore.footer(spark, f)(_.getRecordCount)) }
       }
       val rows = perPart.map(_._2).sum
       val durMs = (System.nanoTime() - t0) / 1e6
@@ -231,4 +225,13 @@ object StageStore {
     * (one lock JVM-wide: each append is a few driver-side lines, so coarse
     * serialization costs nothing). */
   private[tables] val metricsLock = new Object
+
+  /** Applies `f` to one parquet file's footer, opened in the driver. */
+  private[graft] def footer[T](spark: SparkSession, file: String)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try f(r) finally r.close()
+  }
 }

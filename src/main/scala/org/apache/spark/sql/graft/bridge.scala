@@ -50,6 +50,10 @@ object bridge {
       case _ =>
     }
 
+  /** Blocks until every listener event posted so far is delivered. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** Test-only: clear the context's checkpoint dir (private[spark] field —
     * there is no public unset API), restoring localCheckpoint behavior for
     * suites that share one SparkSession. */

@@ -348,11 +348,14 @@ class DedupRunnerSpec extends AnyFunSuite {
     // it (one queue delivers job starts in submission order).
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val labels = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("inc-jobs") => jobs.incrementAndGet()
+          case Some("inc-jobs") =>
+            jobs.incrementAndGet()
+            labels.add(e.properties.getProperty("spark.job.description"))
           case Some("inc-jobs-marker") => marker.countDown()
           case _ =>
         }
@@ -369,9 +372,14 @@ class DedupRunnerSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
       corpus.unpersist()
     }
-    // the delta path runs 22 jobs on this store; 2 of slack. A return of
+    // the delta path runs 21 jobs on this store; 2 of slack. A return of
     // per-call key probes or of re-reads of held key sets fails this.
-    assert(jobs.get() <= 22 + 2, s"second addBatch ran ${jobs.get()} jobs")
+    assert(jobs.get() <= 21 + 2, s"second addBatch ran ${jobs.get()} jobs")
+    // the phase labels that benchmark attribution matches by equality
+    import scala.jdk.CollectionConverters._
+    assert(labels.asScala.filter(_.startsWith("inc:")).toSet == Set(
+      "inc:deltaEdges", "inc:candLocal", "inc:keyprobe:doc_id",
+      "inc:endpointSigs:minhash", "inc:relabelInputs", "inc:cc"))
   }
 
   test("deltaEdges: driver and distributed candidate shapes agree") {
