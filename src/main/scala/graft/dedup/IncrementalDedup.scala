@@ -1,12 +1,11 @@
 package graft.dedup
 
-import graft.tables.StageStore
+import graft.tables.{FsUtil, StageStore}
 import org.apache.parquet.column.statistics.IntStatistics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
@@ -119,45 +118,37 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       "bl=sorted"
   }
 
-  private def batchesPath = Paths.get(root, "BATCHES")
-  private def configPath = Paths.get(root, "CONFIG")
+  private def batchesPath = s"$root/BATCHES"
+  private def configPath = s"$root/CONFIG"
 
   /** The store is single-config: the persisted bucket/signature keys are
     * functions of the shingle/band/seed parameters, so a batch ingested
     * with a DIFFERENT config would silently never collide with stored
     * documents (cross-batch recall quietly gone). First ingest pins the
     * config; every later construction must match — the dedup-layer
-    * analogue of IndexStore.requireParamsMatch. */
-  private def requireConfigMatch(pin: Boolean = false): Unit = {
-    if (Files.exists(configPath)) {
-      val stored = new String(Files.readAllBytes(configPath)).trim
-      if (stored != cfgFp)
+    * analogue of IndexStore.requireParamsMatch. A store that lists batches
+    * but has no CONFIG predates the pin and is refused like a mismatch. */
+  private def requireConfigMatch(pin: Boolean = false): Unit =
+    FsUtil.read(configPath).map(_.trim) match {
+      case Some(stored) if stored == cfgFp =>
+      case None if batches().isEmpty =>
+        // only the ingest path pins a fresh store's config
+        if (pin) FsUtil.publish(configPath, cfgFp)
+      case stored =>
         throw new IllegalArgumentException(
-          s"store at $root was built with config [$stored] but this " +
-            s"IncrementalDedup carries [$cfgFp] — use the original config " +
-            "or a fresh root")
-    } else if (pin) { // only the ingest path pins a fresh store's config
-      Files.createDirectories(Paths.get(root))
-      val tmp = Paths.get(root, "CONFIG.tmp")
-      Files.write(tmp, cfgFp.getBytes)
-      Files.move(tmp, configPath,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+          s"store at $root was built with config " +
+            s"[${stored.getOrElse("none: batches without a CONFIG pin")}] " +
+            s"but this IncrementalDedup carries [$cfgFp] — use the original " +
+            "config or a fresh root")
     }
-  }
 
   /** Committed batch ids, ingest order (a compacted store lists its single
     * fold id). */
   def batches(): Seq[String] =
-    if (!Files.exists(batchesPath)) Nil
-    else Files.readAllLines(batchesPath).asScala.toSeq.filter(_.nonEmpty)
+    FsUtil.read(batchesPath).toSeq.flatMap(_.split('\n')).filter(_.nonEmpty)
 
-  private def writeBatches(all: Seq[String]): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, "BATCHES.tmp")
-    Files.write(tmp, all.mkString("", "\n", "\n").getBytes)
-    Files.move(tmp, batchesPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeBatches(all: Seq[String]): Unit =
+    FsUtil.publish(batchesPath, all.mkString("", "\n", "\n"))
 
   private def appendBatch(id: String): Unit = {
     require(!id.contains('\n') && !id.contains('/'), s"bad batch id: $id")
@@ -178,8 +169,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     * callers (e.g. bench harnesses) probe the invariant through one
     * accessor instead of re-implementing store-layout knowledge. */
   def incompleteBatch(): Option[String] =
-    batches().find(id => !Files.exists(
-      Paths.get(root, labelStage(id), "MANIFEST.json")))
+    batches().find(id => !store.committed(labelStage(id)))
 
   private def sigStage(id: String) = s"sigs_$id"
   private def bucketStage(id: String) = s"buckets_$id"
@@ -323,18 +313,6 @@ final class IncrementalDedup(spark: SparkSession, root: String,
 
   private def bptCol = pmod(col("bucket_key"), lit(bucketParts.toLong)).cast("int")
 
-  /** Stores ingested before the bucket-table format have sigs_/labels_
-    * stages but no buckets_ stage; fail with a migration message instead
-    * of a path-not-found mid-job. */
-  private def requireBucketStages(ids: Seq[String]): Unit =
-    ids.find(id => !Files.exists(
-        Paths.get(root, bucketStage(id), "MANIFEST.json"))).foreach { old =>
-      throw new IllegalStateException(
-        s"batch '$old' predates the bucket-table store format " +
-          "(no committed buckets stage) — re-ingest the corpus into a " +
-          "fresh store root")
-    }
-
   /** Ingest one batch of pages(url, warc_ts, html, text, lang). Returns the
     * updated labels (doc_id, comp) covering every doc in any duplicate
     * relation so far. Re-running a committed batch id resumes/reads, never
@@ -362,13 +340,9 @@ final class IncrementalDedup(spark: SparkSession, root: String,
             s"batch '$bad' is partially ingested — re-run addBatch(\"$bad\", ...) " +
               "to resume it before ingesting new batches")
         }
-        // Migration check BEFORE the BATCHES append: appending first would
-        // wedge the list with a stage-less id whose 'resume' re-throws this.
-        requireBucketStages(b)
         appendBatch(batchId); b
       }
     }
-    requireBucketStages(prior)
     val priorSigStages = prior.map(sigStage)
     // doc_id sort + bloom at rest: every later batch's delta-verify and
     // duplicate-id reads probe these stages by doc_id key sets (readSigsFor)
@@ -537,12 +511,12 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     val bNew = bucketsNew.select("pass", "bucket_key", "doc_id", "aux")
     // The touched bpt values, from the new stage's parquet footers: the union
     // of its row-group bpt ranges, a superset the exact semi-join absorbs.
-    val touchedPts = bucketsNew.inputFiles.toSeq.flatMap(f =>
-      StageStore.footer(spark, f)(_.getRowGroups.asScala.toSeq.flatMap(
-        _.getColumns.asScala.find(_.getPath.toDotString == "bpt").get.getStatistics match {
+    val touchedPts = StageStore.footers(bucketsNew)(_.getRowGroups.asScala.toSeq
+      .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == "bpt").get
+        .getStatistics match {
           case s: IntStatistics if s.hasNonNullValue => s.getMin to s.getMax
           case _ => 0 until bucketParts
-        }))).distinct
+        })).flatten.distinct
     // The semi-join's key side is the new bucket stage's own scan (a
     // broadcast build for a delta batch). The batch's own rows are tagged,
     // so the one collect below yields both the pairs and the new ids.
@@ -624,7 +598,6 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       throw new IllegalStateException(
         s"batch '$bad' is partially ingested — resume it before compacting")
     }
-    requireBucketStages(ids)
     if (ids.size == 1) return ids
     // Deterministic for an identical fold input (a crashed compact's orphan
     // stages are then reused by fingerprint), different once batches change.
@@ -649,11 +622,8 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     }
     writeBatches(Seq(foldId)) // commit point
     // best-effort cleanup of the folded batches
-    ids.foreach { id =>
-      Seq(sigStage(id), bucketStage(id), labelStage(id))
-        .foreach(s => graft.tables.FsUtil.deleteRecursively(
-          new java.io.File(s"$root/$s")))
-    }
+    ids.foreach(id =>
+      Seq(sigStage(id), bucketStage(id), labelStage(id)).foreach(store.drop))
     Seq(foldId)
   }
 

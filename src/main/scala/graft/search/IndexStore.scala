@@ -1,11 +1,9 @@
 package graft.search
 
-import graft.tables.StageStore
+import graft.tables.{FlatJson, FsUtil, StageStore}
 import graft.text.PipelineConfig
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /**
  * Durable search index — the reference's index lifecycle (append to
@@ -42,7 +40,7 @@ object IndexStore {
   // a file; durable indexes must express custom filters as registry-named
   // `custom:<name>` filter entries (graft.text.CustomFilters).
 
-  private def paramsPath(root: String) = Paths.get(root, "params.json")
+  private def paramsPath(root: String) = s"$root/params.json"
 
   private def algoName(a: Searcher.Algo): String = a match {
     case Searcher.TfIdf => "tfidf"
@@ -50,43 +48,30 @@ object IndexStore {
   }
 
   private def writeParams(root: String, cfg: PipelineConfig,
-      algo: Searcher.Algo): Unit = {
-    val json = Seq(
+      algo: Searcher.Algo): Unit =
+    FsUtil.publish(paramsPath(root), FlatJson.render(Seq(
       "filters" -> cfg.filters.mkString(","),
       "lang" -> cfg.lang,
       "stopwords" -> cfg.stopwordsEnabled.toString,
-      "algo" -> algoName(algo))
-      .map { case (k, v) => s""""$k": "${graft.tables.FlatJson.escape(v)}"""" }
-      .mkString("{\n  ", ",\n  ", "\n}")
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, "params.json.tmp")
-    Files.write(tmp, json.getBytes)
-    Files.move(tmp, paramsPath(root),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+      "algo" -> algoName(algo))))
 
   /** The persisted pipeline params + ranking algo, when the index has been
     * built — the reference's full params.db triple (filters, lang, algo;
     * /root/reference/src/core/params.c:159-198, nxs_impl.h:39-41). A
     * params.json written before the algo field defaults to BM25 (the
     * reference default). */
-  def readParamsFull(root: String): Option[(PipelineConfig, Searcher.Algo)] = {
-    val p = paramsPath(root)
-    if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p))
-    // same escaped-string shape as StageStore manifests; iterative parse
-    // (a regex scrape overflows the stack on long values — see FlatJson)
-    val m = graft.tables.FlatJson.parse(s)
-    val cfg = PipelineConfig(
-      filters = m.getOrElse("filters", "").split(',').toSeq.filter(_.nonEmpty),
-      lang = m.getOrElse("lang", "en"),
-      stopwordsEnabled = m.get("stopwords").forall(_.toBoolean))
-    val algo = m.get("algo") match {
-      case Some("tfidf") => Searcher.TfIdf
-      case _ => Searcher.Bm25
+  def readParamsFull(root: String): Option[(PipelineConfig, Searcher.Algo)] =
+    FsUtil.read(paramsPath(root)).map(FlatJson.parse).map { m =>
+      val cfg = PipelineConfig(
+        filters = m.getOrElse("filters", "").split(',').toSeq.filter(_.nonEmpty),
+        lang = m.getOrElse("lang", "en"),
+        stopwordsEnabled = m.get("stopwords").forall(_.toBoolean))
+      val algo = m.get("algo") match {
+        case Some("tfidf") => Searcher.TfIdf
+        case _ => Searcher.Bm25
+      }
+      (cfg, algo)
     }
-    Some((cfg, algo))
-  }
 
   /** The persisted pipeline params, when the index has been built. */
   def readParams(root: String): Option[PipelineConfig] =
@@ -113,13 +98,15 @@ object IndexStore {
     * the next generation's stages and atomically bumps the file — the
     * single commit point; stale stages/mutations of older generations are
     * invisible from then on and deleted best-effort. */
-  private def generation(root: String): Int = {
-    val p = Paths.get(root, "GENERATION")
-    if (Files.exists(p)) new String(Files.readAllBytes(p)).trim.toInt else 0
-  }
+  private def generation(root: String): Int =
+    FsUtil.read(s"$root/GENERATION").fold(0)(_.trim.toInt)
 
   private def stageName(base: String, gen: Int): String =
     if (gen == 0) base else s"$base@$gen"
+
+  /** The index's stage bases; each generation's stages carry `@<gen>`. */
+  private val StageBases = Seq("postings", "doc_stats", "term_stats",
+    "index_stats", "fuzzy_variants")
 
   /** Build-or-resume the index under `root`. `docs` is only evaluated for
     * stages that are not already committed. `algo` pins the index's ranking
@@ -176,15 +163,6 @@ object IndexStore {
     // tables are algo-independent (the reference stores algo in params.db
     // but its index files don't depend on it).
     val storedFull = readParamsFull(root)
-    // Migration BEFORE any params write: stamp pfp-less legacy mutation
-    // manifests with the CURRENTLY-STORED params' fingerprint — the only
-    // params they can have been committed under. Ordering matters: if this
-    // ran after a params-changing writeParams, a crash between the write
-    // and the post-commit mutation cleanup would leave legacy entries that
-    // the grandfathering clause then replays onto the NEW-params base
-    // (mixed configs). Stamping first makes the legacy store
-    // indistinguishable from a new-format one for every later code path.
-    storedFull.foreach(p => stampLegacyMutations(root, fp(p._1)))
     val pipelineChanged = !storedFull.map(p => fp(p._1)).contains(fp(cfg))
     val effAlgo = algoOpt.orElse(storedFull.map(_._2)).getOrElse(Searcher.Bm25)
     if (pipelineChanged || !storedFull.map(_._2).contains(effAlgo))
@@ -209,8 +187,7 @@ object IndexStore {
     // threads (guide §2.6: actions are only sequential because the driver
     // calls them sequentially; the second chain's tasks back-fill the
     // executor slots the first chain's tail leaves idle). Stage dirs and
-    // manifests are disjoint; the shared _metrics append is serialized
-    // inside StageStore.
+    // manifests are disjoint, so the chains share no file.
     val docStatsChain = java.util.concurrent.CompletableFuture.supplyAsync(() => {
       val docStats = store.runStage(n("doc_stats"), f,
         inputs = Seq(n("postings"))) {
@@ -262,8 +239,7 @@ object IndexStore {
     // The new base is committed: stale-pipeline mutation dirs (already
     // invisible to replay via their pfp mismatch) can now be removed.
     if (pipelineChanged && storedFull.isDefined)
-      graft.tables.FsUtil.deleteRecursively(
-        new java.io.File(s"$root/mutations"))
+      FsUtil.delete(s"$root/mutations")
     val stats = statsDf.collect()(0)
     SearchIndex(postings.drop("first_pos"), docStats, termStats,
       stats.getLong(0), stats.getLong(1), cfg, fuzzyVariants = fuzzy,
@@ -274,99 +250,68 @@ object IndexStore {
   //
   // The reference persists BOTH sides of its mutation surface: document
   // delete appends a tombstone marker and zeroes the doc block in nxsdtmap.db
-  // (/root/reference/src/index/dtmap.c:546-655), add appends term/doc blocks
+  // (src/index/dtmap.c:546-655), add appends term/doc blocks
   // (terms.c:155-314, dtmap.c:246-355), and every open re-syncs from the
   // files. Relationally that is an append-only MUTATION LOG next to the base
-  // stage tables:
+  // stage tables, scoped to the current compaction generation:
   //
-  //   root/mutations/NNNN_add/postings   (doc_id, term, cnt, first_pos, _seq)
-  //   root/mutations/NNNN_add/term_ids   (term, term_id)  — new terms only
-  //   root/mutations/NNNN_remove/tombstones (doc_id, _seq)
+  //   root/mutations/gen_G/NNNN_add/postings   (doc_id, term, cnt, first_pos)
+  //   root/mutations/gen_G/NNNN_add/term_ids   (term, term_id) — new terms only
+  //   root/mutations/gen_G/NNNN_remove/tombstones (doc_id)
   //
-  // each directory committed by an atomically-moved MANIFEST marker (the
-  // same publish discipline as StageStore): a crash mid-write leaves an
-  // unmarked directory that the replay ignores and the next mutation with
-  // that sequence number overwrites. `openIndex` replays the log over the
-  // base tables; a postings generation is dead iff a LATER tombstone covers
-  // its doc (so delete → re-add of the same id works), and term ids are
-  // stable because new-term assignments are persisted at mutation time, not
-  // re-derived at open.
+  // Each directory is committed by its MANIFEST, published through
+  // FsUtil.publish like every other commit point of the stores; the
+  // manifest carries the pipeline fingerprint (`pfp`) the mutation was
+  // tokenized under. A crash mid-write leaves an unmarked directory: replay
+  // ignores it, and the next mutation takes its sequence number (and
+  // overwrites it when of the same kind). `openIndex` replays the log over
+  // the base tables; a
+  // postings generation is dead iff a LATER tombstone covers its doc (so
+  // delete → re-add of the same id works), and term ids are stable because
+  // new-term assignments are persisted at mutation time, not re-derived at
+  // open. This is the only mutation path: add and remove are durable.
 
   private def mutDir(root: String) = s"$root/mutations/gen_${generation(root)}"
 
-  /** Stamp every committed pfp-less (pre-upgrade) mutation manifest in the
-    * current generation with `pfp` — atomic per manifest, idempotent. */
-  private def stampLegacyMutations(root: String, pfp: String): Unit = {
-    val d = Paths.get(mutDir(root))
-    if (!Files.isDirectory(d)) return
-    val s = Files.list(d)
-    val items = try s.toArray.toSeq.map(_.toString) finally s.close()
-    items.foreach { p =>
-      val mf = Paths.get(p, "MANIFEST")
-      if (Files.exists(mf)) {
-        val body = new String(Files.readAllBytes(mf))
-        if (!body.contains("\"pfp\"")) {
-          val stamped = body.stripSuffix("}") + s""","pfp":"$pfp"}"""
-          val tmp = Paths.get(p, "MANIFEST.tmp")
-          Files.write(tmp, stamped.getBytes)
-          Files.move(tmp, mf, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        }
+  /** Committed mutations of the current generation as (seq, kind, path,
+    * manifest), replay order. */
+  private def committedMutations(root: String)
+      : Seq[(Int, String, String, Map[String, String])] = {
+    val d = mutDir(root)
+    FsUtil.list(d).flatMap { name =>
+      name.split("_", 2) match {
+        case Array(seq, kind) if seq.nonEmpty && seq.forall(_.isDigit) =>
+          FsUtil.read(s"$d/$name/MANIFEST")
+            .map(m => (seq.toInt, kind, s"$d/$name", FlatJson.parse(m)))
+        case _ => None
       }
-    }
+    }.sortBy(_._1)
   }
 
   /** Committed mutations as (seq, kind, path), replay order. Only entries
     * whose manifest pipeline fingerprint matches `pfp` replay — a mutation
     * committed under different pipeline params is invisible (its postings
     * were tokenized under another config; see buildOrOpenGen's rebuild
-    * discipline). A manifest WITHOUT a pfp field (written before the field
-    * existed) is grandfathered as matching — such entries can only exist
-    * under the currently-stored params, and buildOrOpenGen stamps them with
-    * that fingerprint (stampLegacyMutations) before ANY params change can
-    * happen, so the grandfathering clause is only ever exercised for reads
-    * that precede the first post-upgrade open of the store. */
-  private def listMutations(root: String, pfp: String): Seq[(Int, String, String)] = {
-    val d = Paths.get(mutDir(root))
-    if (!Files.isDirectory(d)) return Nil
-    // Files.list holds a directory fd until closed — this runs on every
-    // openIndex/addDocs/removeDocs, so a leak here exhausts fds in a
-    // long-running driver.
-    val s = Files.list(d)
-    val items = try s.toArray.toSeq.map(_.toString) finally s.close()
-    items.flatMap { p =>
-      val name = Paths.get(p).getFileName.toString
-      val mf = Paths.get(p, "MANIFEST")
-      name.split("_", 2) match {
-        case Array(seq, kind) if Files.exists(mf) =>
-          val stamped = graft.tables.FlatJson
-            .parse(new String(Files.readAllBytes(mf))).get("pfp")
-          if (stamped.forall(_ == pfp)) Some((seq.toInt, kind, p)) else None
-        case _ => None
-      }
-    }.sortBy(_._1)
-  }
+    * discipline). A manifest without a `pfp` field predates the field; its
+    * params are unknown, so the open refuses it rather than guess (replay
+    * could mix configs, hiding it would lose the mutation). */
+  private def listMutations(root: String, pfp: String): Seq[(Int, String, String)] =
+    committedMutations(root).collect {
+      case (seq, kind, path, m) if m.getOrElse("pfp",
+          throw new IllegalStateException(s"mutation $path has no pipeline " +
+            "fingerprint (pfp): it predates the fingerprinted log — rebuild " +
+            "the index into a fresh root")) == pfp => (seq, kind, path)
+    }
 
   /** Next mutation sequence number — computed over EVERY committed entry
     * regardless of pfp, so a new mutation can never reuse (and its
     * SaveMode.Overwrite physically destroy) the directory of an entry that
     * is merely invisible to the current params. */
-  private def nextSeq(root: String): Int = {
-    val d = Paths.get(mutDir(root))
-    if (!Files.isDirectory(d)) return 1
-    val s = Files.list(d)
-    val items = try s.toArray.toSeq.map(_.toString) finally s.close()
-    val seqs = items.flatMap { p =>
-      Paths.get(p).getFileName.toString.split("_", 2) match {
-        case Array(seq, _) if seq.forall(_.isDigit) => Some(seq.toInt)
-        case _ => None
-      }
-    }
-    (seqs :+ 0).max + 1
-  }
+  private def nextSeq(root: String): Int =
+    (committedMutations(root).map(_._1) :+ 0).max + 1
 
-  /** Write `tables` under an uncommitted mutation dir, then publish it with
-    * one atomic MANIFEST move (stamped with the pipeline fingerprint the
+  /** Write `tables` under an uncommitted mutation dir, then commit it by
+    * publishing its MANIFEST (stamped with the pipeline fingerprint the
     * mutation was tokenized under). */
   private def commitMutation(root: String, seq: Int, kind: String, pfp: String,
       tables: Seq[(String, DataFrame)]): Unit = {
@@ -374,11 +319,8 @@ object IndexStore {
     tables.foreach { case (name, df) =>
       df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
     }
-    val tmp = Paths.get(dir, "MANIFEST.tmp")
-    Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, s"""{"seq":$seq,"kind":"$kind","pfp":"$pfp"}""".getBytes)
-    Files.move(tmp, Paths.get(dir, "MANIFEST"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    FsUtil.publish(s"$dir/MANIFEST", FlatJson.render(Seq(
+      "seq" -> seq.toString, "kind" -> kind, "pfp" -> pfp)))
   }
 
   /** Open the index with the mutation log replayed — the durable analogue of
@@ -402,9 +344,8 @@ object IndexStore {
     val muts = listMutations(root, fp(cfg))
     if (muts.isEmpty) return base
 
-    val gen = generation(root)
-    val basePostings = spark.read
-      .parquet(s"$root/${stageName("postings", gen)}/data")
+    val basePostings = new StageStore(spark, root)
+      .read(Seq(stageName("postings", generation(root))))
       .withColumn("_seq", lit(0))
     val addPostings = muts.collect { case (seq, "add", p) =>
       spark.read.parquet(s"$p/postings").withColumn("_seq", lit(seq))
@@ -483,15 +424,14 @@ object IndexStore {
     // orphan stages at gen+1 that may predate later mutations; they are
     // invisible (gen never bumped), so delete them rather than letting the
     // fingerprint check reuse a stale fold.
-    Seq("postings", "doc_stats", "term_stats", "index_stats",
-      "fuzzy_variants")
-      .foreach(b => graft.tables.FsUtil.deleteRecursively(new java.io.File(s"$root/${n(b)}")))
+    StageBases.foreach(b => store.drop(n(b)))
     store.runStage(n("postings"), f,
       sortCols = Seq("term"), bloomCols = Seq("term")) { state.postings }
     store.runStage(n("doc_stats"), f, inputs = Seq(n("postings"))) {
       state.docStats
     }
-    store.runStage(n("term_stats"), f, inputs = Seq(n("postings")),
+    val termStats = store.runStage(n("term_stats"), f,
+      inputs = Seq(n("postings")),
       sortCols = Seq("term"), bloomCols = Seq("term")) {
       state.termStats
     }
@@ -500,18 +440,11 @@ object IndexStore {
         coalesce(sum("dl"), lit(0L)).as("token_count"))
     }
     // the fold's fuzzy index (compact is a build — opens never write it)
-    runFuzzyStage(store, n("fuzzy_variants"), f, n("term_stats"),
-      spark.read.parquet(s"$root/${n("term_stats")}/data"))
-    // commit point
-    val tmp = Paths.get(root, "GENERATION.tmp")
-    Files.write(tmp, next.toString.getBytes)
-    Files.move(tmp, Paths.get(root, "GENERATION"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    runFuzzyStage(store, n("fuzzy_variants"), f, n("term_stats"), termStats)
+    FsUtil.publish(s"$root/GENERATION", next.toString) // commit point
     // best-effort cleanup of the superseded generation
-    graft.tables.FsUtil.deleteRecursively(new java.io.File(s"$root/mutations/gen_$gen"))
-    Seq("postings", "doc_stats", "term_stats", "index_stats",
-      "fuzzy_variants")
-      .foreach(b => graft.tables.FsUtil.deleteRecursively(new java.io.File(s"$root/${stageName(b, gen)}")))
+    FsUtil.delete(s"$root/mutations/gen_$gen")
+    StageBases.foreach(b => store.drop(stageName(b, gen)))
     openIndex(docs, cfg, spark, root)
   }
 
@@ -519,32 +452,22 @@ object IndexStore {
     * (/root/reference/src/core/nxs.c:303-345): refuses to touch a directory
     * that is not an index (no params.json), then removes only the artifacts
     * the store recognizes (params, generation marker, stage dirs incl.
-    * every generation's, mutation log, metrics) and finally the root if
+    * every generation's, mutation log) and finally the root if
     * empty — an unrelated file someone put there survives and keeps the
     * directory, like the reference's failing rmdir. */
   def destroy(root: String): Unit = {
-    if (!Files.exists(paramsPath(root)))
+    if (FsUtil.read(paramsPath(root)).isEmpty)
       throw new IllegalStateException(
         s"$root is not a built index (no params.json) — refusing to delete")
-    val stageBases = Seq("postings", "doc_stats", "term_stats", "index_stats",
-      "fuzzy_variants")
-    val owned = Files.list(Paths.get(root))
-    val names = try owned.toArray.toSeq.map(_.toString)
-      .map(p => Paths.get(p).getFileName.toString) finally owned.close()
-    names.foreach { name =>
-      val isStage = stageBases.exists(b => name == b || name.startsWith(s"$b@"))
-      if (isStage || name == "mutations" || name == "_metrics" ||
-          name == "stage_metrics.jsonl")
-        graft.tables.FsUtil.deleteRecursively(new java.io.File(root, name))
-    }
     // our own crash leftovers (a .tmp beside an otherwise-complete index)
-    // are recognized artifacts too
-    Files.deleteIfExists(Paths.get(root, "GENERATION"))
-    Files.deleteIfExists(Paths.get(root, "GENERATION.tmp"))
-    Files.deleteIfExists(Paths.get(root, "params.json.tmp"))
-    Files.deleteIfExists(paramsPath(root))
-    try Files.deleteIfExists(Paths.get(root)): Unit
-    catch { case _: java.nio.file.DirectoryNotEmptyException => } // foreign files stay
+    // are recognized artifacts too; params.json goes last
+    val owned = Seq("mutations", "GENERATION", "GENERATION.tmp",
+      "params.json.tmp")
+    FsUtil.list(root).filter(name => owned.contains(name) ||
+        StageBases.exists(b => name == b || name.startsWith(s"$b@")))
+      .foreach(name => FsUtil.delete(s"$root/$name"))
+    FsUtil.delete(paramsPath(root))
+    if (FsUtil.list(root).isEmpty) FsUtil.delete(root) // foreign files stay
   }
 
   /** Durable add: tokenizes `newDocs(doc_id, text)`, rejects ids that are

@@ -237,4 +237,17 @@ object Searcher {
           .limit(limit)
       }
     }
+
+  /** JSON response in the reference wire shape, `{"results":[{"doc_id":..,
+    * "score":..}],"count":n}` (src/core/results.c:152-220), in the order
+    * `search` returns: descending score. */
+  def toJsonResponse(results: DataFrame): String = {
+    val rows = results.select("doc_id", "score").collect()
+    val items = rows.map { r =>
+      val score = String.format(java.util.Locale.ROOT, "%.6f",
+        Double.box(r.getDouble(1)))
+      s"""{"doc_id":${r.getLong(0)},"score":$score}"""
+    }
+    s"""{"results":[${items.mkString(",")}],"count":${rows.length}}"""
+  }
 }

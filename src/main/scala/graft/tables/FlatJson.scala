@@ -1,7 +1,7 @@
 package graft.tables
 
-/** Iterative parser for the flat string-valued JSON this engine writes
-  * itself (StageStore MANIFEST.json, IndexStore params.json and mutation
+/** Iterative parser, and the one writer (`render`), for the flat
+  * string-valued JSON this engine writes itself (StageStore stage manifests, IndexStore params.json and mutation
   * manifests): `{"k": "v", ...}` with values escaped by `escape`.
   *
   * Replaces the regex scrape `"((?:[^"\\]|\\.)*)"` at those sites: Java's
@@ -18,8 +18,8 @@ object FlatJson {
 
   /** `s` as the body of a JSON string literal: backslash, double quote
     * and every control character below 0x20 are escaped, so a value can
-    * never break a JSONL line. The one escaper for every JSON this engine
-    * writes. */
+    * never break the line it sits on. The one escaper for every JSON this
+    * engine writes. */
   def escape(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)
     s.foreach {
@@ -33,6 +33,13 @@ object FlatJson {
     }
     sb.toString
   }
+
+  /** `fields` as one flat JSON object, keys sorted, values escaped: the
+    * one writer of every manifest and params file the stores publish. */
+  def render(fields: Iterable[(String, String)]): String =
+    fields.toSeq.sortBy(_._1)
+      .map { case (k, v) => s""""${escape(k)}": "${escape(v)}"""" }
+      .mkString("{\n  ", ",\n  ", "\n}")
 
   /** Every `"key": "value"` pair in `s`, values unescaped. Non-string
     * values (none are ever written) are skipped, like the old scrape. */

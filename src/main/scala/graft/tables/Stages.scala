@@ -1,12 +1,9 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
 
 /**
  * Iceberg-style stage persistence (SURVEY.md §7.1: no Iceberg runtime jar is
@@ -14,18 +11,20 @@ import java.nio.charset.StandardCharsets
  * implemented directly):
  *
  *  - atomic commit: stage output parquet is only visible once its JSON
- *    manifest is atomically moved into place (write-tmp + ATOMIC_MOVE —
- *    the same publish discipline as the reference's atomic data_len header
- *    publish, /root/reference/src/index/terms.c:302-305);
+ *    manifest is published (FsUtil.publish: write-tmp + atomic move — the
+ *    reference's atomic data_len header publish, src/index/terms.c:302-305);
  *  - checkpoint resume: a re-run with an unchanged fingerprint (config +
  *    input lineage) reads the committed parquet instead of recomputing;
  *  - lineage: every manifest records its input stage names + fingerprints;
  *  - schema: every manifest records the committed `StructType` as JSON, so
  *    `read` plans a committed stage without Spark's schema-inference job;
- *  - metrics: per-stage, per-file row counts appended driver-side to a
- *    `stage_metrics.jsonl` journal (parquet-footer based). The name is NOT
- *    underscore-prefixed on purpose: Spark's file index silently filters
- *    `_`-prefixed files, so an `_metrics.jsonl` would read as empty.
+ *  - metrics: every manifest records its stage's per-file row counts (read
+ *    from the parquet footers), and `metrics()` reads them back from the
+ *    committed manifests, so a commit writes one file, never an append.
+ *
+ * The on-disk layout, `<root>/<stage>/MANIFEST.json` beside
+ * `<root>/<stage>/data`, is known to this class only: the other stores go
+ * through `read`, `committed` and `drop`.
  *
  * Swapping this for a real Iceberg catalog is a config change: `runStage`
  * maps to `writeTo(...).createOrReplace()` + snapshot lookup.
@@ -47,34 +46,27 @@ final class StageStore(val spark: SparkSession, val root: String) {
 
   private def dir(name: String) = s"$root/$name"
   private def dataDir(name: String) = s"${dir(name)}/data"
-  private def manifestPath(name: String) = Paths.get(dir(name), "MANIFEST.json")
+  private def manifestPath(name: String) = s"${dir(name)}/MANIFEST.json"
 
-  private def readManifest(name: String): Option[Map[String, String]] = {
-    val p = manifestPath(name)
-    if (!Files.exists(p)) None
-    else {
-      // flat string-map JSON, written by us; iterative parse — the manifest
-      // `inputs` lineage grows with stage fan-in and a regex scrape
-      // overflows the stack on long values (see FlatJson)
-      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      Some(FlatJson.parse(s))
-    }
-  }
-
-  private def writeManifest(name: String, fields: Map[String, String]): Unit = {
-    Files.createDirectories(Paths.get(dir(name)))
-    val json = fields.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": "${FlatJson.escape(v)}"""" }
-      .mkString("{\n  ", ",\n  ", "\n}")
-    val tmp = Paths.get(dir(name), s"MANIFEST.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  // flat string-map JSON, written by us; iterative parse — the manifest
+  // `inputs` lineage grows with stage fan-in and a regex scrape overflows
+  // the stack on long values (see FlatJson)
+  private def readManifest(name: String): Option[Map[String, String]] =
+    FsUtil.read(manifestPath(name)).map(FlatJson.parse)
 
   /** True if `name` is committed with the given fingerprint. */
   def isCommitted(name: String, fingerprint: String): Boolean =
     readManifest(name).exists(_.get("fingerprint").contains(fingerprint))
+
+  /** True if `name` is committed under any fingerprint. */
+  def committed(name: String): Boolean = readManifest(name).isDefined
+
+  /** Deletes stage `name`: the manifest first, so a crash part-way leaves
+    * an uncommitted directory, never a manifest over missing data. */
+  def drop(name: String): Unit = {
+    FsUtil.delete(manifestPath(name))
+    FsUtil.delete(dir(name))
+  }
 
   /** `input=fingerprint` per input stage, each manifest read once: the
     * lineage a manifest records and the input half of a stage fingerprint. */
@@ -135,9 +127,9 @@ final class StageStore(val spark: SparkSession, val root: String) {
       compute: => DataFrame): DataFrame = {
     val lineage = lineageOf(inputs)
     val fingerprint = fingerprintOf(configFingerprint, lineage)
-    val resumed =
-      readManifest(name).filter(_.get("fingerprint").contains(fingerprint))
-    if (resumed.isDefined) readData(Seq(name -> resumed.get))
+    val current = readManifest(name)
+    if (current.exists(_.get("fingerprint").contains(fingerprint)))
+      readData(Seq(name -> current.get))
     else JobLabel(spark, s"stage:$name") {
       val t0 = System.nanoTime()
       val df0 = compute
@@ -153,85 +145,63 @@ final class StageStore(val spark: SparkSession, val root: String) {
       // manifest before it, or a write that fails part-way leaves that
       // manifest claiming its fingerprint over deleted or partial data, and
       // a later run under the old fingerprint would resume a torn stage.
-      Files.deleteIfExists(manifestPath(name))
+      if (current.isDefined) FsUtil.delete(manifestPath(name))
       JobLabel(spark, s"stage:$name:write") {
         writer.parquet(dataDir(name))
       }
-      // Per-file row counts from the parquet FOOTERS, read driver-side (r7):
-      // this replaces a full post-write re-read job per stage (a
-      // groupBy(spark_partition_id) scan of everything just written — one
-      // extra stage-output read on every stage of every index build /
-      // incremental batch). Footer metadata is exact (the writer records
-      // per-row-group counts), the file walk is the same driver-side
-      // listing the committer already did, and one write file ≈ one write
-      // partition, so the metrics keep their skew-visibility meaning.
-      val perPart: Array[(Int, Long)] = {
-        val files = {
-          val s = Files.walk(Paths.get(dataDir(name)))
-          try s.filter(p => p.toString.endsWith(".parquet")).toArray
-            .map(_.toString).sorted
-          finally s.close()
-        }
-        files.zipWithIndex.map { case (f, i) => (i, StageStore.footer(spark, f)(_.getRecordCount)) }
-      }
-      val rows = perPart.map(_._2).sum
+      val schemaJson = df.schema.json
+      val out = readData(Seq(name -> Map("schema_json" -> schemaJson)))
+      // Per-file row counts from the parquet FOOTERS of the files the read
+      // above listed, opened driver-side: exact (the writer records
+      // per-row-group counts) and no re-read job. One write file ≈ one
+      // write partition, so the counts keep their skew-visibility meaning.
+      val perFile = StageStore.footers(out)(_.getRecordCount)
       val durMs = (System.nanoTime() - t0) / 1e6
-      // Per-partition metrics (lineage + skew visibility at scale) as a
-      // DRIVER-SIDE JSONL journal append (r7): the parquet Append here was
-      // a scheduled Spark job per stage whose committer setup + output
-      // listing measured ~0.5 s of driver time per stage on the
-      // incremental path — for a handful of rows already sitting in driver
-      // memory. One buffered file append under the same lock; metrics()
-      // reads the journal back as a relation. Best-effort diagnostics, not
-      // part of the stage commit point, so a torn tail line on crash loses
-      // only that stage's rows.
-      val metricsJson = perPart.map { case (p, r) =>
-        s"""{"partition_id":$p,"rows":$r,"stage":"${FlatJson.escape(name)}",""" +
-          s""""run_fingerprint":"${FlatJson.escape(fingerprint)}"}"""
-      }.mkString("", "\n", "\n")
-      // Serialized across threads: concurrent stage runs (IndexStore
-      // overlaps independent stages) must not interleave their appends.
-      StageStore.metricsLock.synchronized {
-        Files.write(Paths.get(root, "stage_metrics.jsonl"),
-          metricsJson.getBytes(StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      }
-      val manifest = Map(
+      FsUtil.publish(manifestPath(name), FlatJson.render(Map(
         "stage" -> name,
         "fingerprint" -> fingerprint,
-        "rows" -> rows.toString,
+        "rows" -> perFile.sum.toString,
+        "partition_rows" -> perFile.mkString(","),
         "duration_ms" -> f"$durMs%.1f",
         "inputs" -> lineage,
-        "schema_json" -> df.schema.json)
-      writeManifest(name, manifest)
-      readData(Seq(name -> manifest))
+        "schema_json" -> schemaJson)))
+      out
     }
   }
 
+  /** Per-partition row counts of every stage committed under `root`, as
+    * (partition_id, rows, stage, run_fingerprint): one row per written file
+    * of the stage's last committed run, from its manifest. A manifest
+    * committed before the counts moved into it has none and is skipped. */
   def metrics(): DataFrame = {
-    val journal = Paths.get(root, "stage_metrics.jsonl")
-    require(Files.exists(journal), s"no stage metrics recorded under $root")
-    spark.read.schema(StructType(Seq(
+    val rows = FsUtil.list(root).flatMap { name =>
+      readManifest(name).toSeq.flatMap { m =>
+        m.get("partition_rows").toSeq.flatMap(_.split(',').filter(_.nonEmpty))
+          .zipWithIndex.map { case (r, i) =>
+            Row(i, r.toLong, name, m.getOrElse("fingerprint", ""))
+          }
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
       StructField("partition_id", IntegerType),
       StructField("rows", LongType),
       StructField("stage", StringType),
-      StructField("run_fingerprint", StringType)))).json(journal.toString)
+      StructField("run_fingerprint", StringType))))
   }
 }
 
 object StageStore {
-  /** Guards the `stage_metrics.jsonl` append across stage-running threads
-    * (one lock JVM-wide: each append is a few driver-side lines, so coarse
-    * serialization costs nothing). */
-  private[tables] val metricsLock = new Object
-
-  /** Applies `f` to one parquet file's footer, opened in the driver. */
-  private[graft] def footer[T](spark: SparkSession, file: String)(
-      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
-    try f(r) finally r.close()
+  /** `f` applied to the footer of every parquet file `df` reads, in file
+    * name order, each opened in the driver: metadata only, no job. */
+  private[graft] def footers[T](df: DataFrame)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): Seq[T] = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val files = df.inputFiles
+    files.sorted.toSeq.map { uri =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.net.URI(uri)), conf))
+      try f(r) finally r.close()
+    }
   }
 }

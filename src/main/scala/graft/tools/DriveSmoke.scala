@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.search.{IndexMaintenance, SearchIndex, Searcher}
+import graft.search.{IndexStore, Searcher}
 import graft.text.TextPipeline
 import graft.dedup.{DedupConfig, DedupPipeline}
 import org.apache.spark.sql.SparkSession
@@ -15,30 +15,34 @@ object DriveSmoke {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    // --- search surface: build → query → delete → re-query → JSON ---
+    // --- search surface, durable: build → query → remove → add → JSON,
+    // through IndexStore on a temporary index root ---
+    val root = java.nio.file.Files.createTempDirectory("drivesmoke").toString
+    val cfg = TextPipeline.default
     val docs = Seq(
       1L -> "Cats chase the lasers, naïve façades glow",   // non-ASCII: slow path
       2L -> "dogs chase cats down the résumé café street",
       3L -> "quiet pages about nothing at all").toDF("doc_id", "text")
-    val idx = SearchIndex.build(docs, TextPipeline.default)
+    val idx = IndexStore.buildOrOpen(docs, cfg, spark, root)
     val r1 = Searcher.search(idx, "cats AND chase").fold(sys.error, identity)
-    println("Q1 cats AND chase -> " + IndexMaintenance.toJsonResponse(r1))
+    println("Q1 cats AND chase -> " + Searcher.toJsonResponse(r1))
 
-    val idx2 = IndexMaintenance.remove(idx, Seq(1L).toDF("doc_id"))
+    val idx2 = IndexStore.removeDocs(docs, cfg, spark, root, Seq(1L).toDF("doc_id"))
     val r2 = Searcher.search(idx2, "cats AND chase").fold(sys.error, identity)
-    println("Q2 after remove(1) -> " + IndexMaintenance.toJsonResponse(r2))
+    println("Q2 after remove(1) -> " + Searcher.toJsonResponse(r2))
 
-    val idx3 = IndexMaintenance.add(idx2,
+    val idx3 = IndexStore.addDocs(docs, cfg, spark, root,
       Seq(9L -> "cats chase everything chase chase").toDF("doc_id", "text"))
     val r3 = Searcher.search(idx3, "cats AND chase").fold(sys.error, identity)
-    println("Q3 after add(9) -> " + IndexMaintenance.toJsonResponse(r3))
+    println("Q3 after add(9) -> " + Searcher.toJsonResponse(r3))
 
     // probe: malformed query at the public surface
     println("Q4 malformed -> " + Searcher.search(idx3, "cats AND (dogs"))
     // probe: query that normalizes to nothing
     println("Q5 stopword-only -> " +
       Searcher.search(idx3, "the").fold(e => s"err: $e",
-        d => IndexMaintenance.toJsonResponse(d)))
+        d => Searcher.toJsonResponse(d)))
+    IndexStore.destroy(root)
 
     // --- dedup surface: tiny corpus incl. null text + non-ASCII ---
     val pages = Seq(

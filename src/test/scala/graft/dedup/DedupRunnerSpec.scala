@@ -319,12 +319,17 @@ class DedupRunnerSpec extends AnyFunSuite {
     new IncrementalDedup(spark, root).addBatch("b0", pages)
     // a store written before buckets_<batch> carried `aux`, or before the
     // bucket stages were bpt-sorted tables, has the same CONFIG pin minus
-    // that format token
+    // that format token; a store written before the config pin lists
+    // batches but has no CONFIG at all
     val conf = java.nio.file.Paths.get(root, "CONFIG")
     val pinned = java.nio.file.Files.readString(conf).trim
-    for (token <- Seq("|bk=aux", "|bl=sorted")) {
-      assert(pinned.contains(token), pinned)
-      java.nio.file.Files.writeString(conf, pinned.replace(token, ""))
+    val olderStores = Seq[() => Unit](
+      () => java.nio.file.Files.writeString(conf, pinned.replace("|bk=aux", "")),
+      () => java.nio.file.Files.writeString(conf, pinned.replace("|bl=sorted", "")),
+      () => java.nio.file.Files.delete(conf))
+    assert(pinned.contains("|bk=aux") && pinned.contains("|bl=sorted"), pinned)
+    for (makeOlder <- olderStores) {
+      makeOlder()
       for (op <- Seq[IncrementalDedup => Any](
           _.checkConfig(), _.addBatch("b1", pages))) {
         val e = intercept[IllegalArgumentException] {

@@ -4,12 +4,13 @@ import graft.SparkTestBase
 import graft.text.TextPipeline
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Delete (tombstone) semantics mirror
-  * /root/reference/src/tests/t_index_remove.c: a removed doc disappears from
-  * results, counters decrement, and re-adding the same id is rejected while
-  * present (nxs.c:498-511). Incremental add mirrors the terms/dtmap sync
-  * path (terms.c:320-414): stats after add(idx, d2) == stats of
-  * build(d1 ∪ d2). */
+/** Delete (tombstone) semantics mirror the reference's
+  * src/tests/t_index_remove.c: a removed doc disappears from results,
+  * counters decrement, and re-adding the same id is rejected while present
+  * (nxs.c:498-511). Incremental add mirrors the terms/dtmap sync path
+  * (terms.c:320-414): stats after add(idx, d2) == stats of build(d1 ∪ d2).
+  * Every mutation runs through the durable path (IndexStore.removeDocs /
+  * addDocs) on a fresh index root. */
 class IndexMaintenanceSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -19,17 +20,33 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     2L -> "dogs eat meat",
     3L -> "cats and dogs play")
 
+  private val cfg = TextPipeline.noStopwords
+
   private def build(docs: Seq[(Long, String)]): SearchIndex =
-    SearchIndex.build(docs.toDF("doc_id", "text"), TextPipeline.noStopwords)
+    SearchIndex.build(docs.toDF("doc_id", "text"), cfg)
+
+  /** A durable index of `base` under a fresh root: (root, index). */
+  private def store(): (String, SearchIndex) = {
+    val root = java.nio.file.Files.createTempDirectory("idxmaint").toString
+    (root, IndexStore.buildOrOpen(base.toDF("doc_id", "text"), cfg, spark, root))
+  }
+
+  private def remove(root: String, ids: Long*): SearchIndex =
+    IndexStore.removeDocs({ fail("no recompute"); null }, cfg, spark, root,
+      ids.toDF("doc_id"))
+
+  private def add(root: String, docs: (Long, String)*): SearchIndex =
+    IndexStore.addDocs({ fail("no recompute"); null }, cfg, spark, root,
+      docs.toDF("doc_id", "text"))
 
   private def searchIds(idx: SearchIndex, q: String): Set[Long] =
     Searcher.search(idx, q).fold(e => fail(e),
       _.select("doc_id").as[Long].collect().toSet)
 
   test("remove tombstones a doc: gone from results, counters decremented") {
-    val idx = build(base)
+    val (root, idx) = store()
     assert(searchIds(idx, "cats") == Set(1L, 3L))
-    val idx2 = IndexMaintenance.remove(idx, Seq(1L).toDF("doc_id"))
+    val idx2 = remove(root, 1L)
     assert(searchIds(idx2, "cats") == Set(3L))
     assert(idx2.docCount == idx.docCount - 1)
     assert(idx2.tokenCount == idx.tokenCount - 3)
@@ -49,12 +66,11 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("fully-deleted term keeps its interned id across delete/re-add") {
-    val idx = build(base)
+    val (root, idx) = store()
     val fishId = idx.termStats.where("term = 'fish'")
       .select("term_id").as[Long].collect().head
-    val removed = IndexMaintenance.remove(idx, Seq(1L).toDF("doc_id"))
-    val readded = IndexMaintenance.add(removed,
-      Seq(7L -> "fish swim").toDF("doc_id", "text"))
+    remove(root, 1L)
+    val readded = add(root, 7L -> "fish swim")
     val after = readded.termStats.where("term = 'fish'")
       .select("term_id", "df").as[(Long, Long)].collect()
     assert(after.toSeq == Seq((fishId, 1L)))
@@ -63,8 +79,8 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
   test("incremental add equals full rebuild; duplicate ids rejected") {
     val extra = Seq(4L -> "fish play in water", 1L -> "duplicate id ignored")
-    val idx = build(base)
-    val added = IndexMaintenance.add(idx, extra.toDF("doc_id", "text"))
+    val (root, _) = store()
+    val added = add(root, extra: _*)
     val full = build(base :+ (4L -> "fish play in water"))
     assert(added.docCount == full.docCount)
     assert(added.tokenCount == full.tokenCount)
@@ -80,10 +96,9 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("remove then re-add the same id succeeds (t_index_remove.c flow)") {
-    val idx = build(base)
-    val removed = IndexMaintenance.remove(idx, Seq(2L).toDF("doc_id"))
-    val readded = IndexMaintenance.add(removed,
-      Seq(2L -> "dogs eat meat").toDF("doc_id", "text"))
+    val (root, idx) = store()
+    remove(root, 2L)
+    val readded = add(root, 2L -> "dogs eat meat")
     assert(searchIds(readded, "dogs") == Set(2L, 3L))
     assert(readded.docCount == idx.docCount)
     assert(readded.tokenCount == idx.tokenCount)
@@ -92,7 +107,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   test("json response matches the reference wire shape (results.c:152-220)") {
     val idx = build(base)
     val res = Searcher.search(idx, "cats").fold(e => fail(e), identity)
-    val json = IndexMaintenance.toJsonResponse(res)
+    val json = Searcher.toJsonResponse(res)
     assert(json.matches(
       """\{"results":\[(\{"doc_id":\d+,"score":\d+\.\d{6}\},?)+\],"count":2\}"""))
   }

@@ -111,6 +111,24 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(ids(idx2, "cats") == Set(1L, 3L))
   }
 
+  test("a mutation manifest without its pfp field fails the open, naming it") {
+    val root = java.nio.file.Files.createTempDirectory("idxnopfp").toString
+    val cfg = TextPipeline.noStopwords
+    IndexStore.buildOrOpen(base.toDF("doc_id", "text"), cfg, spark, root)
+    IndexStore.addDocs({ fail("no recompute"); null }, cfg, spark, root,
+      Seq(9L -> "cats chase fish").toDF("doc_id", "text"))
+    val entry = java.nio.file.Paths.get(root, "mutations", "gen_0", "0001_add")
+    val mf = entry.resolve("MANIFEST")
+    val m = graft.tables.FlatJson.parse(java.nio.file.Files.readString(mf))
+    assert(m.contains("pfp"), m)
+    java.nio.file.Files.writeString(mf, graft.tables.FlatJson.render(m - "pfp"))
+    // neither replayed under a guessed pipeline nor silently skipped
+    val e = intercept[IllegalStateException] {
+      IndexStore.openIndex({ fail("no recompute"); null }, cfg, spark, root)
+    }
+    assert(e.getMessage.contains(entry.toString), e.getMessage)
+  }
+
   test("durable add/remove survive restart (dtmap.c:546-655 tombstone + append)") {
     val root = java.nio.file.Files.createTempDirectory("idxmut").toString
     val cfg = TextPipeline.noStopwords

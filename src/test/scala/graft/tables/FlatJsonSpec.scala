@@ -53,10 +53,7 @@ class FlatJsonSpec extends AnyFunSuite {
   }
 
   test("round-trips a StageStore-style writer") {
-    def write(fields: Map[String, String]): String =
-      fields.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k": "${FlatJson.escape(v)}"""" }
-        .mkString("{\n  ", ",\n  ", "\n}")
+    def write(fields: Map[String, String]): String = FlatJson.render(fields)
     val fields = Map(
       "stage" -> "labels_delta_404200",
       "inputs" -> (1 to 30).map(i => s"s$i=f$i").mkString(";"),

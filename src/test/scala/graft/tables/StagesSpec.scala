@@ -3,6 +3,8 @@ package graft.tables
 import graft.SparkTestBase
 import graft.corpus.SyntheticCorpus
 import graft.dedup.{DedupConfig, DedupRunner}
+import graft.search.IndexStore
+import graft.text.TextPipeline
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path}
@@ -85,6 +87,28 @@ class StagesSpec extends AnyFunSuite {
     assert(m.columns.toSet == Set("partition_id", "rows", "stage", "run_fingerprint"))
     assert(m.where($"stage" === "m1").agg(org.apache.spark.sql.functions.sum("rows"))
       .collect()(0).getLong(0) == 100)
+
+    // An index build runs its two stage chains on concurrent driver
+    // threads: every committed stage still reports per-partition rows whose
+    // sum is its manifest's `rows`, and no journal file is written.
+    val idxRoot = tmpRoot()
+    IndexStore.buildOrOpen(Seq(1L -> "cats eat fish", 2L -> "dogs eat meat",
+      3L -> "cats and dogs play").toDF("doc_id", "text"),
+      TextPipeline.noStopwords, spark, idxRoot)
+    val manifestRows = new java.io.File(idxRoot).listFiles.toSeq
+      .map(d => d.toPath.resolve("MANIFEST.json"))
+      .filter(Files.isRegularFile(_))
+      .map(mf => mf.getParent.getFileName.toString ->
+        FlatJson.parse(Files.readString(mf))("rows").toLong).toMap
+    assert(manifestRows.keySet == Set("postings", "doc_stats", "index_stats",
+      "term_stats", "fuzzy_variants"))
+    val sums = new StageStore(spark, idxRoot).metrics()
+      .groupBy("stage").agg(org.apache.spark.sql.functions.sum("rows"))
+      .as[(String, Long)].collect().toMap
+    assert(sums == manifestRows)
+    val journal = Files.walk(Path.of(idxRoot))
+    try assert(journal.noneMatch(_.getFileName.toString == "stage_metrics.jsonl"))
+    finally journal.close()
   }
 
   test("dedup pipeline kill/restart resume (e2e)") {
