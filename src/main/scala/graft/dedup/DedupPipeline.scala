@@ -477,10 +477,10 @@ object DedupPipeline {
     * plain equi-join that AQE can skew-split. */
   private[graft] def resolveClusters(docs: DataFrame,
       labels: DataFrame): DataFrame = {
-    // Both resolve joins hinted shuffle_hash (r7, same rationale as the CC
-    // per-round joins): the build sides (labels; per-cluster champion rows)
-    // are narrow two/three-column relations, while sort-merge paid sorts of
-    // the full doc relation on every run of the resolve tail.
+    // Both resolve joins hinted shuffle_hash (r7): the build sides (labels;
+    // per-cluster champion rows) are narrow two/three-column relations,
+    // while sort-merge paid sorts of the full doc relation on every run of
+    // the resolve tail.
     val labeled = docs
       .join(labels.withColumnRenamed("id", "doc_id").hint("shuffle_hash"),
         Seq("doc_id"), "left")

@@ -878,15 +878,20 @@ object RelationalOps {
   val fuzzyProbes: Seq[String] = Seq("sprk", "jion", "hsah", "mergee", "zzzzzzz")
 
   /** Bounded fuzzy term resolution (reference BK-tree fuzzysearch,
-    * /root/reference/src/index/idxterm.c:210-249) over the split-token term
+    * the reference's src/index/idxterm.c:210-249) over the split-token term
     * stats: each probe resolves to the most-popular term within Levenshtein
-    * distance <= 2 via the symmetric-delete equi-join access path
-    * (Searcher.fuzzyCandidates). The DuckDB oracle re-derives the same
-    * resolution with a direct levenshtein scan — same result, different
-    * access path, which is exactly the claim under test. */
-  def fuzzyResolve(spark: SparkSession, dir: String): DataFrame =
-    graft.search.Searcher.fuzzyCandidates(
-      RelationalOps.termStats(spark, dir), fuzzyProbes)
+    * distance <= 2 through the production resolve — the symmetric-delete
+    * equi-join candidates (Searcher.fuzzyCandidates), collected, then the
+    * driver pick every query uses (Searcher.resolveFuzzy). The DuckDB oracle
+    * re-derives the same resolution with a direct levenshtein scan — same
+    * result, different access path, which is exactly the claim under test. */
+  def fuzzyResolve(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val s = graft.search.Searcher
+    s.resolveFuzzy(s.fuzzyCandidates(RelationalOps.termStats(spark, dir),
+      fuzzyProbes), fuzzyProbes)
+      .toSeq.map { case (q, (t, _)) => (q, t) }.toDF("qtok", "term")
+  }
 
   /** Multi-table relational join (TPC-H Q5 shape): revenue per region/nation
     * over customer ⋈ orders ⋈ lineitem with the two small dimension tables

@@ -11,17 +11,21 @@ import org.apache.spark.sql.functions._
  * /root/reference/src/index/terms.c:155-414, dtmap.c:246-544) re-expressed
  * as committed StageStore tables:
  *
- *   postings   (doc_id, term, cnt, first_pos) — the doc-term map (S5)
+ *   postings   (doc_id, term, dl, cnt, first_pos) — the doc-term map (S5);
+ *              dl, the doc's length, rides on each of its rows
  *   doc_stats  (doc_id, dl)                   — per-doc counters
  *   term_stats (term, term_id, df, total)     — the interned terms file (S3)
  *   index_stats(doc_count, token_count)       — the dtmap header counters
+ *   fuzzy_variants (vh, term, total, df)      — the fuzzy-resolve table
  *
  * Each table is parquet + an atomically-published manifest (StageStore), so
  * a killed build resumes at the first uncommitted stage, and reopening after
  * a crash — or from a different session — reads the committed tables without
  * touching the corpus: the relational analogue of the reference's mmap
  * re-sync. A pipeline-config change fingerprints differently and rebuilds;
- * stage lineage invalidates downstream tables automatically.
+ * stage lineage invalidates downstream tables automatically. The postings
+ * layout is pinned in params.json (`PostingsFormat`); a root written in
+ * another layout refuses to open or build in place.
  */
 object IndexStore {
 
@@ -47,21 +51,36 @@ object IndexStore {
     case _ => "bm25"
   }
 
+  /** The on-disk postings layout, pinned in params.json ("format"): rows
+    * carry their doc's `dl`. A root without this value was written in
+    * another layout. There is no reader for another layout, and rebuilding
+    * in place would hide the root's mutation log (its entries carry the
+    * pipeline fingerprint, not the layout), so every entry point that reads
+    * params refuses such a root; `destroy` still removes it. */
+  private val PostingsFormat = "postings=dl"
+
   private def writeParams(root: String, cfg: PipelineConfig,
       algo: Searcher.Algo): Unit =
     FsUtil.publish(paramsPath(root), FlatJson.render(Seq(
       "filters" -> cfg.filters.mkString(","),
       "lang" -> cfg.lang,
       "stopwords" -> cfg.stopwordsEnabled.toString,
-      "algo" -> algoName(algo))))
+      "algo" -> algoName(algo),
+      "format" -> PostingsFormat)))
 
   /** The persisted pipeline params + ranking algo, when the index has been
     * built — the reference's full params.db triple (filters, lang, algo;
     * /root/reference/src/core/params.c:159-198, nxs_impl.h:39-41). A
     * params.json written before the algo field defaults to BM25 (the
-    * reference default). */
+    * reference default). Throws when the root's postings layout is not
+    * `PostingsFormat`. */
   def readParamsFull(root: String): Option[(PipelineConfig, Searcher.Algo)] =
     FsUtil.read(paramsPath(root)).map(FlatJson.parse).map { m =>
+      if (!m.get("format").contains(PostingsFormat))
+        throw new IllegalStateException(
+          s"index at $root has postings format " +
+            s"[${m.getOrElse("format", "none")}], not [$PostingsFormat] — " +
+            "rebuild the index into a fresh root")
       val cfg = PipelineConfig(
         filters = m.getOrElse("filters", "").split(',').toSeq.filter(_.nonEmpty),
         lang = m.getOrElse("lang", "en"),
@@ -124,7 +143,7 @@ object IndexStore {
       algo.filter(_ != Searcher.IndexDefault))
 
   private def fuzzyFpOf(f: String): String =
-    s"$f|fuzzy=d${Searcher.FuzzyTolerance}l${Searcher.FuzzyMaxLen}"
+    s"$f|fuzzy=d${Searcher.FuzzyTolerance}l${Searcher.FuzzyMaxLen}|cols=df"
 
   /** The fuzzy_variants stage write, shared by build and compact (see the
     * comment at its build-time call site). */
@@ -132,10 +151,7 @@ object IndexStore {
       termStatsStage: String, termStats: DataFrame): DataFrame =
     store.runStage(name, fuzzyFpOf(f), inputs = Seq(termStatsStage),
       sortCols = Seq("vh"), bloomCols = Seq("vh")) {
-      termStats.select(
-        explode(graft.functions.delete_variants(col("term"),
-          Searcher.FuzzyTolerance, Searcher.FuzzyMaxLen)).as("vh"),
-        col("term"), col("total"))
+      Searcher.variantRows(termStats)
     }
 
   private def buildOrOpenGen(docs: => org.apache.spark.sql.DataFrame,
@@ -213,8 +229,9 @@ object IndexStore {
     // (docStatsChain is joined AFTER the fuzzy stage below, so the fuzzy
     // build overlaps the chain's tail as well.)
     // Symmetric-delete fuzzy index (the reference's BK-tree re-expressed as
-    // an at-rest table, /root/reference/src/algo/bktree.c:160-275): one row
-    // per (deletion-variant hash, term), vh-sorted so row groups span
+    // an at-rest table, src/algo/bktree.c:160-275): one row per
+    // (deletion-variant hash, term) with the term's total and df, so a
+    // query's one resolve collect reads both; vh-sorted so row groups span
     // narrow hash ranges (IN-predicate row-group pruning) with a bloom
     // filter for point probes. Built alongside a fresh build (and by
     // compact for each fold); the tolerance/length params are part of its
@@ -255,7 +272,7 @@ object IndexStore {
   // files. Relationally that is an append-only MUTATION LOG next to the base
   // stage tables, scoped to the current compaction generation:
   //
-  //   root/mutations/gen_G/NNNN_add/postings   (doc_id, term, cnt, first_pos)
+  //   root/mutations/gen_G/NNNN_add/postings   (doc_id, term, dl, cnt, first_pos)
   //   root/mutations/gen_G/NNNN_add/term_ids   (term, term_id) — new terms only
   //   root/mutations/gen_G/NNNN_remove/tombstones (doc_id)
   //

@@ -20,15 +20,15 @@ import org.apache.spark.sql.functions._
  * partitioned tables; term dictionary joins are broadcastable.
  */
 final case class SearchIndex(
-    postings: DataFrame,   // (doc_id, term, cnt)
+    postings: DataFrame,   // (doc_id, term, dl, cnt)
     docStats: DataFrame,   // (doc_id, dl)
     termStats: DataFrame,  // (term, term_id, df, total)
     docCount: Long,
     tokenCount: Long,
     pipeline: PipelineConfig,
     cached: Seq[DataFrame] = Nil,
-    // Persisted symmetric-delete variant table (vh, term, total), sorted by
-    // vh with parquet bloom filters — the durable analogue of the
+    // Persisted symmetric-delete variant table (vh, term, total, df), sorted
+    // by vh with parquet bloom filters — the durable analogue of the
     // reference's BK-tree (built once per index generation, probed per
     // fuzzy query). Present only when it exactly matches the dictionary:
     // IndexStore sets it on committed opens with an empty mutation log and
@@ -83,15 +83,21 @@ object SearchIndex {
   /** Reference id width: term ids are u32 (terms.c:47 MAX_TERM_ID). */
   val MaxTermId = 0xFFFFFFFFL
 
-  /** Postings with the per-(doc, term) first occurrence position kept
-    * (consumed by termStatsOf's interning, dropped from the public index). */
+  /** Postings (doc_id, term, dl, cnt, first_pos): the per-(doc, term)
+    * first occurrence position is kept for termStatsOf's interning (dropped
+    * from the public index), and every row carries its doc's length `dl`
+    * (the tokens that pass the MaxTermBytes cap), so scoring needs no
+    * docStats join. `dl` is computed once per doc, on the token array
+    * before the explode; a doc's `dl` never changes after it is indexed. */
   def postingsOf(docs: DataFrame, cfg: PipelineConfig): DataFrame =
     docs
-      .select(col("doc_id"),
-        posexplode(nxs_tokenize_filters(col("text"), lit(cfg.lang), cfg.filters,
-          cfg.stopwordsEnabled)).as(Seq("pos", "term")))
+      .select(col("doc_id"), nxs_tokenize_filters(col("text"), lit(cfg.lang),
+        cfg.filters, cfg.stopwordsEnabled).as("toks"))
+      .select(col("doc_id"), col("toks"),
+        size(filter(col("toks"), t => octet_length(t) <= MaxTermBytes)).cast("long").as("dl"))
+      .select(col("doc_id"), col("dl"), posexplode(col("toks")).as(Seq("pos", "term")))
       .where(octet_length(col("term")) <= MaxTermBytes)
-      .groupBy("doc_id", "term")
+      .groupBy("doc_id", "term", "dl") // dl: one value per doc
       .agg(count(lit(1)).as("cnt"), min("pos").as("first_pos"))
 
   def docStatsOf(postings: DataFrame): DataFrame =

@@ -39,6 +39,15 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     IndexStore.addDocs({ fail("no recompute"); null }, cfg, spark, root,
       docs.toDF("doc_id", "text"))
 
+  /** Every postings row carries its doc's length: dl == the doc's sum(cnt). */
+  private def assertDlOnRows(idx: SearchIndex): Unit = {
+    val rows = idx.postings.select("doc_id", "cnt", "dl")
+      .as[(Long, Long, Long)].collect()
+    val dl = rows.groupMapReduce(_._1)(_._2)(_ + _)
+    assert(rows.nonEmpty)
+    rows.foreach { case (d, _, l) => assert(l == dl(d), s"doc $d: dl $l != ${dl(d)}") }
+  }
+
   private def searchIds(idx: SearchIndex, q: String): Set[Long] =
     Searcher.search(idx, q).fold(e => fail(e),
       _.select("doc_id").as[Long].collect().toSet)
@@ -81,6 +90,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     val extra = Seq(4L -> "fish play in water", 1L -> "duplicate id ignored")
     val (root, _) = store()
     val added = add(root, extra: _*)
+    assertDlOnRows(added)
     val full = build(base :+ (4L -> "fish play in water"))
     assert(added.docCount == full.docCount)
     assert(added.tokenCount == full.tokenCount)
@@ -99,6 +109,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     val (root, idx) = store()
     remove(root, 2L)
     val readded = add(root, 2L -> "dogs eat meat")
+    assertDlOnRows(readded)
     assert(searchIds(readded, "dogs") == Set(2L, 3L))
     assert(readded.docCount == idx.docCount)
     assert(readded.tokenCount == idx.tokenCount)

@@ -4,6 +4,8 @@ import graft.SparkTestBase
 import graft.text.TextPipeline
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Durable-index lifecycle (build → kill → reopen), term interning order,
   * and query-error positions — reference semantics:
   * terms.c:226-235 (ids 1..N first-seen), query.c:47-58 (line:offset +
@@ -308,8 +310,10 @@ class IndexStoreSpec extends AnyFunSuite {
     val toks = Seq("catz", "doggs")
     val probe = Searcher.fuzzyProbe(idx.fuzzyVariants.get, toks)
     val derive = Searcher.fuzzyCandidates(idx.termStats, toks)
-    val got = probe.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == derive.collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    // the same candidate rows (vh, term, total, df), hence the same pick
+    assert(probe.collect().toSet == derive.collect().toSet)
+    val got = Searcher.resolveFuzzy(probe, toks)
+    assert(got == Searcher.resolveFuzzy(derive, toks))
     assert(got.nonEmpty)
     // the variant-hash predicate reaches the parquet scan
     val plan = probe.queryExecution.executedPlan.toString
@@ -328,9 +332,9 @@ class IndexStoreSpec extends AnyFunSuite {
     val idx3 = IndexStore.compact(
       { fail("no recompute"); null }, cfg, spark, root)
     assert(idx3.fuzzyVariants.isDefined)
-    val z = Searcher.fuzzyProbe(idx3.fuzzyVariants.get, Seq("zebraa"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(z.get("zebraa").contains("zebra"), z)
+    val z = Searcher.resolveFuzzy(
+      Searcher.fuzzyProbe(idx3.fuzzyVariants.get, Seq("zebraa")), Seq("zebraa"))
+    assert(z.get("zebraa").map(_._1).contains("zebra"), z)
 
     // OPENS ARE READ-ONLY: an index whose fuzzy stage is missing (built
     // before the fuzzy index existed, or its params were bumped) opens
@@ -347,6 +351,54 @@ class IndexStoreSpec extends AnyFunSuite {
     val viaDerive = Searcher.search(idx4, "zebraa", fuzzy = true)
       .fold(e => fail(e), _.select("doc_id").as[Long].collect().toSet)
     assert(viaDerive == Set(9L), viaDerive)
+  }
+
+  test("a root without the pinned postings format refuses every entry " +
+    "point, naming the root, and is left untouched") {
+    import java.nio.file.{Files, Paths}
+    val cfg = TextPipeline.noStopwords
+    def docs = base.toDF("doc_id", "text")
+    def stripFormat(root: String): Unit = {
+      val p = Paths.get(root, "params.json")
+      Files.writeString(p, graft.tables.FlatJson.render(
+        graft.tables.FlatJson.parse(Files.readString(p)) - "format"))
+    }
+    def tree(root: String): Set[(String, Long, Long)] = {
+      val s = Files.walk(Paths.get(root))
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).map(f =>
+        (f.toString, Files.size(f), Files.getLastModifiedTime(f).toMillis)).toSet
+      finally s.close()
+    }
+    val built = Files.createTempDirectory("idxfmt").toString
+    IndexStore.buildOrOpen(docs, cfg, spark, built)
+    // a pending add mutation: a rebuild in place would hide it
+    val pending = Files.createTempDirectory("idxfmtmut").toString
+    IndexStore.buildOrOpen(docs, cfg, spark, pending)
+    IndexStore.addDocs(docs, cfg, spark, pending,
+      Seq(9L -> "zebra zebra").toDF("doc_id", "text"))
+    for (root <- Seq(built, pending)) {
+      stripFormat(root)
+      val before = tree(root)
+      val calls: Seq[(String, () => Any)] = Seq(
+        "open" -> (() => IndexStore.openIndex(spark, root)),
+        "open(cfg)" -> (() => IndexStore.openIndex(docs, cfg, spark, root)),
+        "build" -> (() => IndexStore.buildOrOpen(docs, cfg, spark, root)),
+        "rebuild with new params" ->
+          (() => IndexStore.buildOrOpen(docs, TextPipeline.default, spark, root)),
+        "add" -> (() => IndexStore.addDocs(docs, cfg, spark, root,
+          Seq(10L -> "new doc").toDF("doc_id", "text"))),
+        "remove" -> (() => IndexStore.removeDocs(docs, cfg, spark, root,
+          Seq(1L).toDF("doc_id"))),
+        "compact" -> (() => IndexStore.compact(docs, cfg, spark, root)))
+      for ((name, call) <- calls) {
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(root) && e.getMessage.contains("fresh root"),
+          s"$name: ${e.getMessage}")
+      }
+      assert(tree(root) == before, s"$root changed")
+      IndexStore.destroy(root)
+      assert(!new java.io.File(root).exists())
+    }
   }
 
   test("destroy removes only recognized index artifacts (nxs.c:303-345)") {

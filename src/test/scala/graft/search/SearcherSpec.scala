@@ -132,16 +132,40 @@ class SearcherSpec extends AnyFunSuite {
 
   test("fuzzy resolve is an equi-join on deletion-neighborhood keys, not BNLJ") {
     val idx = buildIndex(logicDocs)
-    val df = Searcher.fuzzyCandidates(idx.termStats, Seq("unxi", "documnt"))
+    val toks = Seq("unxi", "documnt")
+    val df = Searcher.fuzzyCandidates(idx.termStats, toks)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("BroadcastHashJoin") || plan.contains("SortMergeJoin"),
       plan)
     // resolution values unchanged from the scan-based path
-    val got = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val got = Searcher.resolveFuzzy(df, toks).map { case (q, (t, _)) => q -> t }
     assert(got("unxi") == "unix", got)
     // symmetric-delete edge: full 2-substitution on a 2-cp token still found
     // iff a dictionary term is within distance 2 (empty-variant bucket)
+  }
+
+  test("every query kind runs at most 3 Spark jobs on a stored index: " +
+    "one resolve collect, then the aggregate and the top-k") {
+    val root = java.nio.file.Files.createTempDirectory("idxjobs").toString
+    val idx = IndexStore.buildOrOpen(logicDocs.toDF("doc_id", "text"),
+      TextPipeline.noStopwords, spark, root)
+    assert(idx.fuzzyVariants.isDefined)
+    val mix = Seq(
+      "and" -> ("textbook AND linux", false),
+      "or" -> ("erlang OR java", false),
+      "and_not" -> ("textbook AND NOT windows", false),
+      "head" -> ("textbook", false),
+      "fuzzy hit" -> ("textbook AND unix", true),
+      "fuzzy miss" -> ("unxi OR erlang", true))
+    val jobs = mix.map { case (kind, (q, fuzzy)) =>
+      val (rows, phases) = graft.obs.PhaseTrace(spark)(
+        Searcher.search(idx, q, fuzzy = fuzzy).fold(e => fail(e), _.collect()))
+      assert(rows.nonEmpty, s"$kind [$q]")
+      kind -> phases.map(_.jobs).sum
+    }
+    assert(jobs.forall(_._2 <= 3), jobs)
+    IndexStore.destroy(root)
   }
 
   test("limit caps results (top-k)") {
