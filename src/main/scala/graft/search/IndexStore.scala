@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.tables.{FlatJson, FsUtil, StageStore}
+import graft.tables.{FlatJson, FsUtil, JobLabel, StageStore}
 import graft.text.PipelineConfig
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,19 +13,20 @@ import org.apache.spark.sql.functions._
  *
  *   postings   (doc_id, term, dl, cnt, first_pos) — the doc-term map (S5);
  *              dl, the doc's length, rides on each of its rows
- *   doc_stats  (doc_id, dl)                   — per-doc counters
  *   term_stats (term, term_id, df, total)     — the interned terms file (S3)
- *   index_stats(doc_count, token_count)       — the dtmap header counters
  *   fuzzy_variants (vh, term, total, df)      — the fuzzy-resolve table
+ *   index_stats(doc_count, token_count)       — the dtmap header counters,
+ *              one aggregate over postings; committed last
  *
- * Each table is parquet + an atomically-published manifest (StageStore), so
- * a killed build resumes at the first uncommitted stage, and reopening after
- * a crash — or from a different session — reads the committed tables without
- * touching the corpus: the relational analogue of the reference's mmap
- * re-sync. A pipeline-config change fingerprints differently and rebuilds;
- * stage lineage invalidates downstream tables automatically. The postings
- * layout is pinned in params.json (`PostingsFormat`); a root written in
- * another layout refuses to open or build in place.
+ * Each table is parquet + an atomically-published manifest (StageStore),
+ * written in the order above (`writeGeneration`), so a killed build resumes
+ * at the first uncommitted stage, and reopening after a crash — or from a
+ * different session — reads the committed tables without touching the
+ * corpus: the relational analogue of the reference's mmap re-sync. A
+ * pipeline-config change fingerprints differently and rebuilds; stage
+ * lineage invalidates downstream tables automatically. The layout is
+ * pinned in params.json (`PostingsFormat`); a root written in another
+ * layout refuses to open or build in place.
  */
 object IndexStore {
 
@@ -51,13 +52,15 @@ object IndexStore {
     case _ => "bm25"
   }
 
-  /** The on-disk postings layout, pinned in params.json ("format"): rows
-    * carry their doc's `dl`. A root without this value was written in
-    * another layout. There is no reader for another layout, and rebuilding
-    * in place would hide the root's mutation log (its entries carry the
-    * pipeline fingerprint, not the layout), so every entry point that reads
-    * params refuses such a root; `destroy` still removes it. */
-  private val PostingsFormat = "postings=dl"
+  /** The on-disk layout, pinned in params.json ("format"): postings rows
+    * carry their doc's `dl`, and there is no per-doc stage (`doc_stats`,
+    * which the `postings=dl` layout still wrote). A root without this value
+    * was written in another layout. There is no reader for another layout,
+    * and rebuilding in place would hide the root's mutation log (its
+    * entries carry the pipeline fingerprint, not the layout), so every
+    * entry point that reads params refuses such a root; `destroy` still
+    * removes it. */
+  private val PostingsFormat = "postings=dl;no-doc_stats"
 
   private def writeParams(root: String, cfg: PipelineConfig,
       algo: Searcher.Algo): Unit =
@@ -124,8 +127,8 @@ object IndexStore {
     if (gen == 0) base else s"$base@$gen"
 
   /** The index's stage bases; each generation's stages carry `@<gen>`. */
-  private val StageBases = Seq("postings", "doc_stats", "term_stats",
-    "index_stats", "fuzzy_variants")
+  private val StageBases = Seq("postings", "term_stats", "fuzzy_variants",
+    "index_stats")
 
   /** Build-or-resume the index under `root`. `docs` is only evaluated for
     * stages that are not already committed. `algo` pins the index's ranking
@@ -141,18 +144,6 @@ object IndexStore {
     // circular and the conflict error nonsensical).
     buildOrOpenGen(docs, cfg, spark, root, generation(root),
       algo.filter(_ != Searcher.IndexDefault))
-
-  private def fuzzyFpOf(f: String): String =
-    s"$f|fuzzy=d${Searcher.FuzzyTolerance}l${Searcher.FuzzyMaxLen}|cols=df"
-
-  /** The fuzzy_variants stage write, shared by build and compact (see the
-    * comment at its build-time call site). */
-  private def runFuzzyStage(store: StageStore, name: String, f: String,
-      termStatsStage: String, termStats: DataFrame): DataFrame =
-    store.runStage(name, fuzzyFpOf(f), inputs = Seq(termStatsStage),
-      sortCols = Seq("vh"), bloomCols = Seq("vh")) {
-      Searcher.variantRows(termStats)
-    }
 
   private def buildOrOpenGen(docs: => org.apache.spark.sql.DataFrame,
       cfg: PipelineConfig, spark: SparkSession, root: String,
@@ -183,84 +174,69 @@ object IndexStore {
     val effAlgo = algoOpt.orElse(storedFull.map(_._2)).getOrElse(Searcher.Bm25)
     if (pipelineChanged || !storedFull.map(_._2).contains(effAlgo))
       writeParams(root, cfg, effAlgo)
-    val store = new StageStore(spark, root)
+    val idx = writeGeneration(new StageStore(spark, root), gen, cfg, effAlgo)(
+      SearchIndex.postingsOf(docs, cfg))(SearchIndex.termStatsOf)
+    // The new base is committed: stale-pipeline mutation dirs (already
+    // invisible to replay via their pfp mismatch) can now be removed.
+    if (pipelineChanged && storedFull.isDefined)
+      FsUtil.delete(s"$root/mutations")
+    idx
+  }
+
+  /** Writes (or resumes) generation `gen`'s stages in commit order —
+    * postings → term_stats → fuzzy_variants → index_stats — and returns
+    * the index they hold. Build and compact differ only in the inputs:
+    * `postings` (doc_id, term, dl, cnt, first_pos), and `termStats`, given
+    * the committed postings (a build interns them afresh, a compact keeps
+    * the ids it already has).
+    *
+    * index_stats is the generation's last commit, so a generation whose
+    * index_stats is committed is complete and opens READ-ONLY; otherwise
+    * this is a build (fresh, or resumed after a failure at any earlier
+    * stage) and writes every missing stage. */
+  private def writeGeneration(store: StageStore, gen: Int, cfg: PipelineConfig,
+      algo: Searcher.Algo)(postings: => DataFrame)(
+      termStats: DataFrame => DataFrame): SearchIndex = {
     val f = fp(cfg)
     def n(b: String) = stageName(b, gen)
-    // Before running anything: is this a fresh BUILD or a read-only OPEN of
-    // committed stages? An open must not write into the index root.
-    val building = !store.wouldResume(n("postings"), f)
+    val building = !store.wouldResume(n("index_stats"), f, Seq(n("postings")))
     // Sort orders at rest (the Iceberg sort-order analogue): the search
     // path reads postings/term_stats with `term = ...` / `term IN (...)`
     // point predicates, so term-sorted row groups + a term bloom filter
     // prune the scan to the query's terms instead of reading the corpus.
-    val postings = store.runStage(n("postings"), f,
-      sortCols = Seq("term"), bloomCols = Seq("term")) {
-      SearchIndex.postingsOf(docs, cfg)
-    }
-    // The two stage chains hanging off the committed postings are
-    // independent — doc_stats → index_stats and term_stats (→ fuzzy, run
-    // below on the same thread) — so they run as two concurrent driver
-    // threads (guide §2.6: actions are only sequential because the driver
-    // calls them sequentially; the second chain's tasks back-fill the
-    // executor slots the first chain's tail leaves idle). Stage dirs and
-    // manifests are disjoint, so the chains share no file.
-    val docStatsChain = java.util.concurrent.CompletableFuture.supplyAsync(() => {
-      val docStats = store.runStage(n("doc_stats"), f,
-        inputs = Seq(n("postings"))) {
-        SearchIndex.docStatsOf(postings)
-      }
-      val statsDf = store.runStage(n("index_stats"), f,
-        inputs = Seq(n("doc_stats"))) {
-        docStats.agg(count(lit(1)).as("doc_count"),
-          coalesce(sum("dl"), lit(0L)).as("token_count"))
-      }
-      (docStats, statsDf)
-    })
-    val termStats =
-      try store.runStage(n("term_stats"), f,
-        inputs = Seq(n("postings")),
-        sortCols = Seq("term"), bloomCols = Seq("term")) {
-        SearchIndex.termStatsOf(postings)
-      } catch { case e: Throwable =>
-        // the sibling chain must not be left running against a root the
-        // failed caller may clean up
-        docStatsChain.cancel(true); throw e
-      }
-    // (docStatsChain is joined AFTER the fuzzy stage below, so the fuzzy
-    // build overlaps the chain's tail as well.)
+    val post = store.runStage(n("postings"), f,
+      sortCols = Seq("term"), bloomCols = Seq("term")) { postings }
+    val terms = store.runStage(n("term_stats"), f,
+      inputs = Seq(n("postings")),
+      sortCols = Seq("term"), bloomCols = Seq("term")) { termStats(post) }
     // Symmetric-delete fuzzy index (the reference's BK-tree re-expressed as
     // an at-rest table, src/algo/bktree.c:160-275): one row per
     // (deletion-variant hash, term) with the term's total and df, so a
     // query's one resolve collect reads both; vh-sorted so row groups span
     // narrow hash ranges (IN-predicate row-group pruning) with a bloom
-    // filter for point probes. Built alongside a fresh build (and by
-    // compact for each fold); the tolerance/length params are part of its
+    // filter for point probes. The tolerance/length params are part of its
     // fingerprint — bumping either invalidates rather than silently
-    // reusing a stale neighborhood. An OPEN of an index that lacks a
-    // current fuzzy stage (pre-upgrade index, or params bumped) does NOT
-    // write one — opens stay read-only; such opens fall back to on-the-fly
-    // candidate derivation until the next build/compact.
-    val fuzzy: Option[DataFrame] =
-      try {
-        if (building || store.wouldResume(n("fuzzy_variants"), fuzzyFpOf(f),
-            Seq(n("term_stats"))))
-          Some(runFuzzyStage(store, n("fuzzy_variants"), f, n("term_stats"),
-            termStats))
-        else None
-      } catch { case e: Throwable => docStatsChain.cancel(true); throw e }
-    val (docStats, statsDf) =
-      try docStatsChain.join()
-      catch { case e: java.util.concurrent.CompletionException =>
-        throw Option(e.getCause).getOrElse(e)
-      }
-    // The new base is committed: stale-pipeline mutation dirs (already
-    // invisible to replay via their pfp mismatch) can now be removed.
-    if (pipelineChanged && storedFull.isDefined)
-      FsUtil.delete(s"$root/mutations")
-    val stats = statsDf.collect()(0)
-    SearchIndex(postings.drop("first_pos"), docStats, termStats,
-      stats.getLong(0), stats.getLong(1), cfg, fuzzyVariants = fuzzy,
-      algo = effAlgo)
+    // reusing a stale neighborhood. An OPEN of a generation that lacks a
+    // current fuzzy stage (params bumped) does NOT write one — opens stay
+    // read-only; such opens fall back to on-the-fly candidate derivation
+    // until the next build/compact.
+    val fuzzyFp =
+      s"$f|fuzzy=d${Searcher.FuzzyTolerance}l${Searcher.FuzzyMaxLen}|cols=df"
+    val fuzzy =
+      if (building || store.wouldResume(n("fuzzy_variants"), fuzzyFp,
+          Seq(n("term_stats"))))
+        Some(store.runStage(n("fuzzy_variants"), fuzzyFp,
+          inputs = Seq(n("term_stats")),
+          sortCols = Seq("vh"), bloomCols = Seq("vh")) {
+          Searcher.variantRows(terms)
+        })
+      else None
+    val stats = store.runStage(n("index_stats"), f,
+      inputs = Seq(n("postings"))) { SearchIndex.countersOf(post) }
+    val (docCount, tokenCount) =
+      JobLabel(store.spark, "search:open")(SearchIndex.collectCounters(stats))
+    SearchIndex(post.drop("first_pos"), terms, docCount, tokenCount, cfg,
+      fuzzyVariants = fuzzy, algo = algo)
   }
 
   // ---- durable mutations ---------------------------------------------------
@@ -344,7 +320,7 @@ object IndexStore {
     * the reference's open-time dtmap/terms sync. `docs` is only evaluated if
     * the BASE stages are uncommitted (first build). Open-time cost is one
     * anti-join of the postings against the (broadcast) tombstone set plus
-    * the doc/term stat aggregations over the live postings. */
+    * the term stats and counters aggregations over the live postings. */
   def openIndex(docs: => DataFrame, cfg: PipelineConfig,
       spark: SparkSession, root: String,
       asCompactState: Boolean = false,
@@ -382,7 +358,6 @@ object IndexStore {
           col("doc_id") === col("_t_doc") && col("_t_seq") > col("_seq"),
           "left_anti")
       }
-    val docStats = live.groupBy("doc_id").agg(sum("cnt").as("dl"))
     // Interning: base dictionary ∪ persisted per-mutation new-term ids.
     // df/total are recomputed from the live postings; fully-deleted terms
     // stay interned at df=0 (reference semantics — ids never reused).
@@ -397,12 +372,11 @@ object IndexStore {
       .select(col("term"), col("term_id"),
         coalesce(col("df"), lit(0L)).as("df"),
         coalesce(col("total"), lit(0L)).as("total"))
-    val c = docStats.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect()(0)
-    if (asCompactState)
-      return SearchIndex(live.drop("_seq"), docStats, termStats,
-        c.getLong(0), c.getLong(1), cfg, algo = base.algo)
-    SearchIndex(live.drop("first_pos", "_seq"), docStats, termStats,
-      c.getLong(0), c.getLong(1), cfg, algo = base.algo)
+    val (docCount, tokenCount) = JobLabel(spark, "search:open")(
+      SearchIndex.collectCounters(SearchIndex.countersOf(live)))
+    SearchIndex(
+      if (asCompactState) live.drop("_seq") else live.drop("first_pos", "_seq"),
+      termStats, docCount, tokenCount, cfg, algo = base.algo)
   }
 
   /** Open a built index with its PERSISTED params — no config supplied, the
@@ -419,7 +393,7 @@ object IndexStore {
 
   /** Fold the mutation log into fresh base stages — the analogue of the
     * reference rewriting its db files rather than growing the append log
-    * forever. Writes the NEXT generation's four stages from the replayed
+    * forever. Writes the NEXT generation's stages from the replayed
     * live view (postings keep first_pos; term_stats keeps every interned
     * id, df=0 rows included, so ids stay stable), then atomically publishes
     * the GENERATION file — the single commit point. A crash before the
@@ -434,35 +408,19 @@ object IndexStore {
       return openIndex(docs, cfg, spark, root)
     val state = openIndex(docs, cfg, spark, root, asCompactState = true)
     val store = new StageStore(spark, root)
-    val f = fp(cfg)
     val next = gen + 1
-    def n(b: String) = stageName(b, next)
     // A compact that crashed before the GENERATION bump leaves committed
     // orphan stages at gen+1 that may predate later mutations; they are
     // invisible (gen never bumped), so delete them rather than letting the
     // fingerprint check reuse a stale fold.
-    StageBases.foreach(b => store.drop(n(b)))
-    store.runStage(n("postings"), f,
-      sortCols = Seq("term"), bloomCols = Seq("term")) { state.postings }
-    store.runStage(n("doc_stats"), f, inputs = Seq(n("postings"))) {
-      state.docStats
-    }
-    val termStats = store.runStage(n("term_stats"), f,
-      inputs = Seq(n("postings")),
-      sortCols = Seq("term"), bloomCols = Seq("term")) {
-      state.termStats
-    }
-    store.runStage(n("index_stats"), f, inputs = Seq(n("doc_stats"))) {
-      state.docStats.agg(count(lit(1)).as("doc_count"),
-        coalesce(sum("dl"), lit(0L)).as("token_count"))
-    }
-    // the fold's fuzzy index (compact is a build — opens never write it)
-    runFuzzyStage(store, n("fuzzy_variants"), f, n("term_stats"), termStats)
+    StageBases.foreach(b => store.drop(stageName(b, next)))
+    val folded = writeGeneration(store, next, cfg, state.algo)(
+      state.postings)(_ => state.termStats)
     FsUtil.publish(s"$root/GENERATION", next.toString) // commit point
     // best-effort cleanup of the superseded generation
     FsUtil.delete(s"$root/mutations/gen_$gen")
     StageBases.foreach(b => store.drop(stageName(b, gen)))
-    openIndex(docs, cfg, spark, root)
+    folded
   }
 
   /** Destroy a built index — the reference's nxs_index_destroy
@@ -477,11 +435,14 @@ object IndexStore {
       throw new IllegalStateException(
         s"$root is not a built index (no params.json) — refusing to delete")
     // our own crash leftovers (a .tmp beside an otherwise-complete index)
-    // are recognized artifacts too; params.json goes last
+    // are recognized artifacts too; params.json goes last. `doc_stats` is
+    // the per-doc stage of the older `postings=dl` layout, which refuses
+    // to open but is still ours to remove.
     val owned = Seq("mutations", "GENERATION", "GENERATION.tmp",
       "params.json.tmp")
     FsUtil.list(root).filter(name => owned.contains(name) ||
-        StageBases.exists(b => name == b || name.startsWith(s"$b@")))
+        (StageBases :+ "doc_stats").exists(b =>
+          name == b || name.startsWith(s"$b@")))
       .foreach(name => FsUtil.delete(s"$root/$name"))
     FsUtil.delete(paramsPath(root))
     if (FsUtil.list(root).isEmpty) FsUtil.delete(root) // foreign files stay
@@ -494,7 +455,8 @@ object IndexStore {
   def addDocs(docs: => DataFrame, cfg: PipelineConfig, spark: SparkSession,
       root: String, newDocs: DataFrame): SearchIndex = {
     val cur = openIndex(docs, cfg, spark, root)
-    val fresh = newDocs.join(cur.docStats.select("doc_id"), Seq("doc_id"), "left_anti")
+    val fresh = newDocs.join(cur.postings.select("doc_id").distinct(),
+      Seq("doc_id"), "left_anti")
     val deltaPost = SearchIndex.postingsOf(fresh, cfg)
     val maxId = cur.termStats.agg(coalesce(max("term_id"), lit(0L)))
       .collect()(0).getLong(0)

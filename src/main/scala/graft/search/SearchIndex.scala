@@ -6,22 +6,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * The reference's index, as three relations + two scalars
+ * The reference's index, as two relations + two scalars
  * (SURVEY.md §1.2): terms interning and the doc-term map
  * (/root/reference/src/index/terms.c, dtmap.c) become `termStats` and
  * `postings`; the dtmap header counters doc_count/token_count
  * (/root/reference/src/index/storage.h:112-118) become `docCount` /
- * `tokenCount`. The reverse term→docs bitmap is not materialized — it IS
- * the postings relation keyed by term (a term filter on the postings scan
- * replaces roaring64_bitmap lookup).
+ * `tokenCount`, one aggregate over the postings (`countersOf`). A doc's
+ * length is the `dl` column of its postings rows. The reverse term→docs
+ * bitmap is not materialized — it IS the postings relation keyed by term
+ * (a term filter on the postings scan replaces roaring64_bitmap lookup).
  *
- * At cluster scale: postings/termStats/docStats are plain hash
- * aggregations off one tokenize scan (map-side partial agg), written as
- * partitioned tables; term dictionary joins are broadcastable.
+ * At cluster scale: postings/termStats are plain hash aggregations off one
+ * tokenize scan (map-side partial agg), written as partitioned tables;
+ * term dictionary joins are broadcastable.
  */
 final case class SearchIndex(
     postings: DataFrame,   // (doc_id, term, dl, cnt)
-    docStats: DataFrame,   // (doc_id, dl)
     termStats: DataFrame,  // (term, term_id, df, total)
     docCount: Long,
     tokenCount: Long,
@@ -49,7 +49,7 @@ final case class SearchIndex(
 
 object SearchIndex {
 
-  /** Build from docs(doc_id, text). One tokenize pass, three aggregates.
+  /** Build from docs(doc_id, text). One tokenize pass, two aggregates.
     *
     * Term interning (reference A3, /root/reference/src/index/terms.c:226-235
     * assigns ids 1..N in insertion order): `term_id` is the dense first-seen
@@ -60,15 +60,24 @@ object SearchIndex {
     * dictionary (billions of terms) never funnels through one partition. */
   def build(docs: DataFrame, cfg: PipelineConfig): SearchIndex = {
     val postings = postingsOf(docs, cfg).cache()
-    val docStats = docStatsOf(postings).cache()
     val termStats = termStatsOf(postings).cache()
-    val (docCount, tokenCount) = {
-      val r = docStats.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    SearchIndex(postings.drop("first_pos"), docStats, termStats,
-      docCount, tokenCount, cfg,
-      cached = Seq(postings, docStats, termStats))
+    val (docCount, tokenCount) = collectCounters(countersOf(postings))
+    SearchIndex(postings.drop("first_pos"), termStats, docCount, tokenCount,
+      cfg, cached = Seq(postings, termStats))
+  }
+
+  /** The dtmap header counters of a postings relation as one row
+    * (doc_count, token_count): its distinct docs and the sum of its `cnt`,
+    * which is the sum of their `dl`s. The one definition every index
+    * build, open and compact uses. */
+  private[search] def countersOf(postings: DataFrame): DataFrame =
+    postings.agg(countDistinct("doc_id").as("doc_count"),
+      coalesce(sum("cnt"), lit(0L)).as("token_count"))
+
+  /** The row of `countersOf` (or of a stage holding it) on the driver. */
+  private[search] def collectCounters(counters: DataFrame): (Long, Long) = {
+    val r = counters.collect()(0)
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Reference term-length cap: UINT16_MAX bytes
@@ -87,7 +96,7 @@ object SearchIndex {
     * first occurrence position is kept for termStatsOf's interning (dropped
     * from the public index), and every row carries its doc's length `dl`
     * (the tokens that pass the MaxTermBytes cap), so scoring needs no
-    * docStats join. `dl` is computed once per doc, on the token array
+    * per-doc table. `dl` is computed once per doc, on the token array
     * before the explode; a doc's `dl` never changes after it is indexed. */
   def postingsOf(docs: DataFrame, cfg: PipelineConfig): DataFrame =
     docs
@@ -99,9 +108,6 @@ object SearchIndex {
       .where(octet_length(col("term")) <= MaxTermBytes)
       .groupBy("doc_id", "term", "dl") // dl: one value per doc
       .agg(count(lit(1)).as("cnt"), min("pos").as("first_pos"))
-
-  def docStatsOf(postings: DataFrame): DataFrame =
-    postings.groupBy("doc_id").agg(sum("cnt").as("dl"))
 
   def termStatsOf(postings: DataFrame): DataFrame = {
     val agg = postings

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *               df, then a driver pick (`prepare`, `pick`)
  *   scan      → postings rows of the resolved terms; `dl` is a column of
  *               the row (written at build), `df` a literal of the values the
- *               resolve collected — no termStats or docStats broadcast
+ *               resolve collected — no termStats broadcast, no per-doc table
  *   aggregate → per doc: sum(score) and collect_set(term), the doc's
  *               matched-term set (results.c:128-150 sums the same scores)
  *   leaf      → array_contains(terms, t); an unresolved leaf is `false`

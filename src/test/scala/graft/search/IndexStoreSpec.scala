@@ -358,10 +358,11 @@ class IndexStoreSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     val cfg = TextPipeline.noStopwords
     def docs = base.toDF("doc_id", "text")
-    def stripFormat(root: String): Unit = {
+    def setFormat(root: String, format: Option[String]): Unit = {
       val p = Paths.get(root, "params.json")
+      val params = graft.tables.FlatJson.parse(Files.readString(p)) - "format"
       Files.writeString(p, graft.tables.FlatJson.render(
-        graft.tables.FlatJson.parse(Files.readString(p)) - "format"))
+        params ++ format.map("format" -> _)))
     }
     def tree(root: String): Set[(String, Long, Long)] = {
       val s = Files.walk(Paths.get(root))
@@ -376,8 +377,18 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.buildOrOpen(docs, cfg, spark, pending)
     IndexStore.addDocs(docs, cfg, spark, pending,
       Seq(9L -> "zebra zebra").toDF("doc_id", "text"))
-    for (root <- Seq(built, pending)) {
-      stripFormat(root)
+    // the `postings=dl` layout: the same pin, plus a committed doc_stats
+    val docStatsLayout = Files.createTempDirectory("idxfmtdocstats").toString
+    val idx = IndexStore.buildOrOpen(docs, cfg, spark, docStatsLayout)
+    new graft.tables.StageStore(spark, docStatsLayout).runStage("doc_stats",
+      "old", inputs = Seq("postings")) {
+      idx.postings.groupBy("doc_id")
+        .agg(org.apache.spark.sql.functions.sum("cnt").as("dl"))
+    }
+    setFormat(docStatsLayout, Some("postings=dl"))
+    setFormat(built, None)
+    setFormat(pending, None)
+    for (root <- Seq(built, pending, docStatsLayout)) {
       val before = tree(root)
       val calls: Seq[(String, () => Any)] = Seq(
         "open" -> (() => IndexStore.openIndex(spark, root)),

@@ -75,13 +75,15 @@ class CommitFaultSpec extends AnyFunSuite {
     val docs = Seq(1L -> "cats eat fish", 2L -> "dogs eat meat",
       3L -> "cats and dogs play").toDF("doc_id", "text")
     def state(idx: SearchIndex) = (idx.docCount, idx.tokenCount,
+      idx.fuzzyVariants.isDefined,
       idx.termStats.as[(String, Long, Long, Long)].collect().toSet,
       Searcher.search(idx, "cats OR dogs OR fish").fold(e => fail(e),
         _.as[(Long, Double)].collect().toSeq))
     resumesAtEveryCommit[String](identity, Seq(
       ((root: String) => state(IndexStore.buildOrOpen(docs, cfg, spark, root)),
-        (root: String) => Seq(Paths.get(root, "params.json"),
-          Paths.get(root, "postings", "MANIFEST.json"))),
+        (root: String) => Paths.get(root, "params.json") +:
+          Seq("postings", "term_stats", "fuzzy_variants", "index_stats")
+            .map(Paths.get(root, _, "MANIFEST.json"))),
       ((root: String) => state(IndexStore.addDocs(docs, cfg, spark, root,
           Seq(9L -> "cats chase fish").toDF("doc_id", "text"))),
         (root: String) => Seq(
