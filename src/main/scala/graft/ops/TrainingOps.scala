@@ -881,14 +881,15 @@ object RelationalOps {
     * the reference's src/index/idxterm.c:210-249) over the split-token term
     * stats: each probe resolves to the most-popular term within Levenshtein
     * distance <= 2 through the production resolve — the symmetric-delete
-    * equi-join candidates (Searcher.fuzzyCandidates), collected, then the
+    * variant rows of the term stats probed for the probes' hashes
+    * (Searcher.fuzzyProbe over Searcher.variantRows), collected, then the
     * driver pick every query uses (Searcher.resolveFuzzy). The DuckDB oracle
     * re-derives the same resolution with a direct levenshtein scan — same
     * result, different access path, which is exactly the claim under test. */
   def fuzzyResolve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val s = graft.search.Searcher
-    s.resolveFuzzy(s.fuzzyCandidates(RelationalOps.termStats(spark, dir),
+    s.resolveFuzzy(s.fuzzyProbe(s.variantRows(RelationalOps.termStats(spark, dir)),
       fuzzyProbes), fuzzyProbes)
       .toSeq.map { case (q, (t, _)) => (q, t) }.toDF("qtok", "term")
   }

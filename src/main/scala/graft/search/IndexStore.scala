@@ -4,6 +4,7 @@ import graft.tables.{FlatJson, FsUtil, JobLabel, StageStore}
 import graft.text.PipelineConfig
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Durable search index — the reference's index lifecycle (append to
@@ -20,13 +21,17 @@ import org.apache.spark.sql.functions._
  *
  * Each table is parquet + an atomically-published manifest (StageStore),
  * written in the order above (`writeGeneration`), so a killed build resumes
- * at the first uncommitted stage, and reopening after a crash — or from a
- * different session — reads the committed tables without touching the
- * corpus: the relational analogue of the reference's mmap re-sync. A
- * pipeline-config change fingerprints differently and rebuilds; stage
- * lineage invalidates downstream tables automatically. The layout is
- * pinned in params.json (`PostingsFormat`); a root written in another
- * layout refuses to open or build in place.
+ * at the first uncommitted stage. There is one open, `buildOrOpen`: params
+ * switch → `writeGeneration` (read-only when the generation is committed)
+ * → replay of the mutation log. Every open therefore sees every committed
+ * add and remove — reopening after a crash, or from a different session,
+ * reads the committed tables without touching the corpus: the relational
+ * analogue of the reference's mmap re-sync (nxs_index_open). With an empty
+ * log the open is the committed base relations. A pipeline-config change
+ * fingerprints differently and rebuilds; stage lineage invalidates
+ * downstream tables automatically. The layout is pinned in params.json
+ * (`PostingsFormat`); a root written in another layout refuses to open or
+ * build in place.
  */
 object IndexStore {
 
@@ -39,11 +44,10 @@ object IndexStore {
   // the index and opens WITH them (/root/reference/src/core/params.c:159-198,
   // nxs.c:253-287) — the index carries its own pipeline. params.json is that
   // file: written at build (and on an explicit rebuild with new params),
-  // read by the no-config openIndex, and checked by the config-taking open
-  // path, which ERRORS on a conflict instead of silently rebuilding.
-  // The legacy in-process `custom` function field cannot round-trip through
-  // a file; durable indexes must express custom filters as registry-named
-  // `custom:<name>` filter entries (graft.text.CustomFilters).
+  // read by the no-config openIndex, and checked by the config-taking
+  // openIndex, which ERRORS on a conflict instead of silently rebuilding.
+  // A user filter persists as its registry name, a `custom:<name>` filter
+  // entry (graft.text.CustomFilters).
 
   private def paramsPath(root: String) = s"$root/params.json"
 
@@ -130,28 +134,38 @@ object IndexStore {
   private val StageBases = Seq("postings", "term_stats", "fuzzy_variants",
     "index_stats")
 
-  /** Build-or-resume the index under `root`. `docs` is only evaluated for
-    * stages that are not already committed. `algo` pins the index's ranking
-    * algo at build (persisted in params.json like the reference's
-    * params.db); None adopts the stored algo (BM25 on a fresh build). An
-    * explicit algo differing from the stored one updates params.json only —
-    * the stage tables are algo-independent. */
-  def buildOrOpen(docs: => org.apache.spark.sql.DataFrame, cfg: PipelineConfig,
-      spark: SparkSession, root: String,
-      algo: Option[Searcher.Algo] = None): SearchIndex =
-    // Some(IndexDefault) means "whatever the index has" — identical to None
-    // (persisting the sentinel itself would make scoreCol's resolution
-    // circular and the conflict error nonsensical).
-    buildOrOpenGen(docs, cfg, spark, root, generation(root),
-      algo.filter(_ != Searcher.IndexDefault))
+  /** An opened generation before its counters reach the driver: postings
+    * (doc_id, term, dl, cnt, first_pos) keep the first_pos a compact writes
+    * back, `counters` is the one-row `countersOf` relation, and `fuzzy` the
+    * at-rest variant stage when it matches the dictionary. */
+  private final case class View(postings: DataFrame, termStats: DataFrame,
+      counters: DataFrame, fuzzy: Option[DataFrame])
 
-  private def buildOrOpenGen(docs: => org.apache.spark.sql.DataFrame,
-      cfg: PipelineConfig, spark: SparkSession, root: String,
-      gen: Int, algoOpt: Option[Searcher.Algo] = None): SearchIndex = {
-    require(cfg.custom.isEmpty,
-      "durable indexes cannot persist an in-process custom function — " +
-        "register it and use a 'custom:<name>' filter entry instead " +
-        "(graft.text.CustomFilters)")
+  private def toIndex(v: View, cfg: PipelineConfig,
+      algo: Searcher.Algo): SearchIndex = {
+    val (docCount, tokenCount) = JobLabel(v.counters.sparkSession,
+      "search:open")(SearchIndex.collectCounters(v.counters))
+    SearchIndex(v.postings.drop("first_pos"), v.termStats, docCount,
+      tokenCount, cfg, fuzzyVariants = v.fuzzy, algo = algo)
+  }
+
+  /** Build-or-resume the index under `root` and open it with the mutation
+    * log replayed — the one open every entry point goes through. `docs` is
+    * only evaluated for stages that are not already committed. `algo` pins
+    * the index's ranking algo at build (persisted in params.json like the
+    * reference's params.db); None adopts the stored algo (BM25 on a fresh
+    * build). An explicit algo differing from the stored one updates
+    * params.json only — the stage tables are algo-independent. */
+  def buildOrOpen(docs: => DataFrame, cfg: PipelineConfig,
+      spark: SparkSession, root: String,
+      algo: Option[Searcher.Algo] = None): SearchIndex = {
+    val (v, a) = open(docs, cfg, spark, root, algo)
+    toIndex(v, cfg, a)
+  }
+
+  private def open(docs: => DataFrame, cfg: PipelineConfig,
+      spark: SparkSession, root: String,
+      algo: Option[Searcher.Algo]): (View, Searcher.Algo) = {
     // Persist (or explicitly update, on a deliberate rebuild-with-new-params)
     // the pipeline params before the stages: the reference's params.db write
     // at index create (params.c:159-198). A rebuild with DIFFERENT pipeline
@@ -171,21 +185,21 @@ object IndexStore {
     // but its index files don't depend on it).
     val storedFull = readParamsFull(root)
     val pipelineChanged = !storedFull.map(p => fp(p._1)).contains(fp(cfg))
-    val effAlgo = algoOpt.orElse(storedFull.map(_._2)).getOrElse(Searcher.Bm25)
+    val effAlgo = algo.orElse(storedFull.map(_._2)).getOrElse(Searcher.Bm25)
     if (pipelineChanged || !storedFull.map(_._2).contains(effAlgo))
       writeParams(root, cfg, effAlgo)
-    val idx = writeGeneration(new StageStore(spark, root), gen, cfg, effAlgo)(
-      SearchIndex.postingsOf(docs, cfg))(SearchIndex.termStatsOf)
+    val base = writeGeneration(new StageStore(spark, root), generation(root),
+      cfg)(SearchIndex.postingsOf(docs, cfg))(SearchIndex.termStatsOf)
     // The new base is committed: stale-pipeline mutation dirs (already
     // invisible to replay via their pfp mismatch) can now be removed.
     if (pipelineChanged && storedFull.isDefined)
       FsUtil.delete(s"$root/mutations")
-    idx
+    (replay(spark, root, cfg, base), effAlgo)
   }
 
   /** Writes (or resumes) generation `gen`'s stages in commit order —
     * postings → term_stats → fuzzy_variants → index_stats — and returns
-    * the index they hold. Build and compact differ only in the inputs:
+    * the view they hold. Build and compact differ only in the inputs:
     * `postings` (doc_id, term, dl, cnt, first_pos), and `termStats`, given
     * the committed postings (a build interns them afresh, a compact keeps
     * the ids it already has).
@@ -194,9 +208,8 @@ object IndexStore {
     * index_stats is committed is complete and opens READ-ONLY; otherwise
     * this is a build (fresh, or resumed after a failure at any earlier
     * stage) and writes every missing stage. */
-  private def writeGeneration(store: StageStore, gen: Int, cfg: PipelineConfig,
-      algo: Searcher.Algo)(postings: => DataFrame)(
-      termStats: DataFrame => DataFrame): SearchIndex = {
+  private def writeGeneration(store: StageStore, gen: Int, cfg: PipelineConfig)(
+      postings: => DataFrame)(termStats: DataFrame => DataFrame): View = {
     val f = fp(cfg)
     def n(b: String) = stageName(b, gen)
     val building = !store.wouldResume(n("index_stats"), f, Seq(n("postings")))
@@ -218,8 +231,8 @@ object IndexStore {
     // fingerprint — bumping either invalidates rather than silently
     // reusing a stale neighborhood. An OPEN of a generation that lacks a
     // current fuzzy stage (params bumped) does NOT write one — opens stay
-    // read-only; such opens fall back to on-the-fly candidate derivation
-    // until the next build/compact.
+    // read-only; such opens fuzzy-resolve over variant rows derived from
+    // term_stats until the next build/compact.
     val fuzzyFp =
       s"$f|fuzzy=d${Searcher.FuzzyTolerance}l${Searcher.FuzzyMaxLen}|cols=df"
     val fuzzy =
@@ -233,10 +246,7 @@ object IndexStore {
       else None
     val stats = store.runStage(n("index_stats"), f,
       inputs = Seq(n("postings"))) { SearchIndex.countersOf(post) }
-    val (docCount, tokenCount) =
-      JobLabel(store.spark, "search:open")(SearchIndex.collectCounters(stats))
-    SearchIndex(post.drop("first_pos"), terms, docCount, tokenCount, cfg,
-      fuzzyVariants = fuzzy, algo = algo)
+    View(post, terms, stats, fuzzy)
   }
 
   // ---- durable mutations ---------------------------------------------------
@@ -255,10 +265,12 @@ object IndexStore {
   // Each directory is committed by its MANIFEST, published through
   // FsUtil.publish like every other commit point of the stores; the
   // manifest carries the pipeline fingerprint (`pfp`) the mutation was
-  // tokenized under. A crash mid-write leaves an unmarked directory: replay
-  // ignores it, and the next mutation takes its sequence number (and
-  // overwrites it when of the same kind). `openIndex` replays the log over
-  // the base tables; a
+  // tokenized under and each table's schema (`schema:<table>`, as a stage
+  // manifest does), so replay plans its reads without Spark's
+  // schema-inference job. A crash mid-write leaves an unmarked directory:
+  // replay ignores it, and the next mutation takes its sequence number (and
+  // overwrites it when of the same kind). Every open replays the log over
+  // the base tables (`replay`); a
   // postings generation is dead iff a LATER tombstone covers its doc (so
   // delete → re-add of the same id works), and term ids are stable because
   // new-term assignments are persisted at mutation time, not re-derived at
@@ -266,46 +278,46 @@ object IndexStore {
 
   private def mutDir(root: String) = s"$root/mutations/gen_${generation(root)}"
 
-  /** Committed mutations of the current generation as (seq, kind, path,
-    * manifest), replay order. */
-  private def committedMutations(root: String)
-      : Seq[(Int, String, String, Map[String, String])] = {
+  /** A committed mutation: sequence number, kind, directory, manifest. */
+  private final case class Mutation(seq: Int, kind: String, path: String,
+      manifest: Map[String, String])
+
+  /** Committed mutations of the current generation, replay order. */
+  private def committedMutations(root: String): Seq[Mutation] = {
     val d = mutDir(root)
     FsUtil.list(d).flatMap { name =>
       name.split("_", 2) match {
         case Array(seq, kind) if seq.nonEmpty && seq.forall(_.isDigit) =>
           FsUtil.read(s"$d/$name/MANIFEST")
-            .map(m => (seq.toInt, kind, s"$d/$name", FlatJson.parse(m)))
+            .map(m => Mutation(seq.toInt, kind, s"$d/$name", FlatJson.parse(m)))
         case _ => None
       }
-    }.sortBy(_._1)
+    }.sortBy(_.seq)
   }
 
-  /** Committed mutations as (seq, kind, path), replay order. Only entries
-    * whose manifest pipeline fingerprint matches `pfp` replay — a mutation
-    * committed under different pipeline params is invisible (its postings
-    * were tokenized under another config; see buildOrOpenGen's rebuild
-    * discipline). A manifest without a `pfp` field predates the field; its
-    * params are unknown, so the open refuses it rather than guess (replay
-    * could mix configs, hiding it would lose the mutation). */
-  private def listMutations(root: String, pfp: String): Seq[(Int, String, String)] =
-    committedMutations(root).collect {
-      case (seq, kind, path, m) if m.getOrElse("pfp",
-          throw new IllegalStateException(s"mutation $path has no pipeline " +
-            "fingerprint (pfp): it predates the fingerprinted log — rebuild " +
-            "the index into a fresh root")) == pfp => (seq, kind, path)
-    }
+  /** Committed mutations, replay order. Only entries whose manifest
+    * pipeline fingerprint matches `pfp` replay — a mutation committed under
+    * different pipeline params is invisible (its postings were tokenized
+    * under another config; see `open`'s rebuild discipline). A manifest
+    * without a `pfp` field predates the field; its params are unknown, so
+    * the open refuses it rather than guess (replay could mix configs,
+    * hiding it would lose the mutation). */
+  private def listMutations(root: String, pfp: String): Seq[Mutation] =
+    committedMutations(root).filter(m => m.manifest.getOrElse("pfp",
+      throw new IllegalStateException(s"mutation ${m.path} has no pipeline " +
+        "fingerprint (pfp): it predates the fingerprinted log — rebuild " +
+        "the index into a fresh root")) == pfp)
 
   /** Next mutation sequence number — computed over EVERY committed entry
     * regardless of pfp, so a new mutation can never reuse (and its
     * SaveMode.Overwrite physically destroy) the directory of an entry that
     * is merely invisible to the current params. */
   private def nextSeq(root: String): Int =
-    (committedMutations(root).map(_._1) :+ 0).max + 1
+    (committedMutations(root).map(_.seq) :+ 0).max + 1
 
   /** Write `tables` under an uncommitted mutation dir, then commit it by
     * publishing its MANIFEST (stamped with the pipeline fingerprint the
-    * mutation was tokenized under). */
+    * mutation was tokenized under and each table's schema). */
   private def commitMutation(root: String, seq: Int, kind: String, pfp: String,
       tables: Seq[(String, DataFrame)]): Unit = {
     val dir = s"${mutDir(root)}/${f"$seq%04d"}_$kind"
@@ -313,58 +325,52 @@ object IndexStore {
       df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
     }
     FsUtil.publish(s"$dir/MANIFEST", FlatJson.render(Seq(
-      "seq" -> seq.toString, "kind" -> kind, "pfp" -> pfp)))
+      "seq" -> seq.toString, "kind" -> kind, "pfp" -> pfp) ++
+      tables.map { case (name, df) => s"schema:$name" -> df.schema.json }))
   }
 
-  /** Open the index with the mutation log replayed — the durable analogue of
-    * the reference's open-time dtmap/terms sync. `docs` is only evaluated if
-    * the BASE stages are uncommitted (first build). Open-time cost is one
-    * anti-join of the postings against the (broadcast) tombstone set plus
-    * the term stats and counters aggregations over the live postings. */
-  def openIndex(docs: => DataFrame, cfg: PipelineConfig,
-      spark: SparkSession, root: String,
-      asCompactState: Boolean = false,
-      algo: Option[Searcher.Algo] = None): SearchIndex = {
-    // Open-with-params semantics (nxs.c:253-287): opening an existing index
-    // with CONFLICTING params — pipeline OR algo — is an error, never a
-    // silent rebuild/rescore; a rebuild here would additionally orphan the
-    // mutation log's term ids. (Some(IndexDefault) ≡ None, as in buildOrOpen.)
-    val algoReq = algo.filter(_ != Searcher.IndexDefault)
-    requireParamsMatch(root, cfg, algoReq)
-    // Forward the algo: on a FIRST build through this entry point the
-    // caller's pin must reach params.json (requireParamsMatch was a no-op).
-    val base = buildOrOpen(docs, cfg, spark, root, algoReq)
+  /** Table `name` of mutation `m`, read with the schema its manifest
+    * records; a manifest written before the schemas were recorded reads by
+    * inference. */
+  private def readMutation(spark: SparkSession, m: Mutation,
+      name: String): DataFrame =
+    m.manifest.get(s"schema:$name").fold(spark.read)(json =>
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+      .parquet(s"${m.path}/$name")
+
+  /** `base` with the mutation log replayed — the durable analogue of the
+    * reference's open-time dtmap/terms sync. An empty log returns `base`
+    * itself. Otherwise the cost is one anti-join of the postings against
+    * the (broadcast) tombstone set plus the term stats and counters
+    * aggregations over the live postings; the at-rest fuzzy stage no longer
+    * matches the dictionary and is left out. */
+  private def replay(spark: SparkSession, root: String, cfg: PipelineConfig,
+      base: View): View = {
     val muts = listMutations(root, fp(cfg))
     if (muts.isEmpty) return base
-
-    val basePostings = new StageStore(spark, root)
-      .read(Seq(stageName("postings", generation(root))))
-      .withColumn("_seq", lit(0))
-    val addPostings = muts.collect { case (seq, "add", p) =>
-      spark.read.parquet(s"$p/postings").withColumn("_seq", lit(seq))
-    }
-    val tombs = muts.collect { case (seq, "remove", p) =>
-      spark.read.parquet(s"$p/tombstones").withColumn("_seq", lit(seq))
-    }
-    val postingsAll = (basePostings +: addPostings).reduce(_ unionByName _)
+    val adds = muts.filter(_.kind == "add")
+    val postingsAll = (base.postings.withColumn("_seq", lit(0)) +:
+      adds.map(m => readMutation(spark, m, "postings")
+        .withColumn("_seq", lit(m.seq)))).reduce(_ unionByName _)
+    val tombs = muts.filter(_.kind == "remove").map(m =>
+      readMutation(spark, m, "tombstones").withColumn("_seq", lit(m.seq)))
     // A generation (doc_id, _seq=a) is dead iff some tombstone (doc_id, s)
     // has s > a. Tombstone sets are tiny next to the corpus — broadcast.
     val live =
-      if (tombs.isEmpty) postingsAll
+      (if (tombs.isEmpty) postingsAll
       else {
         val t = tombs.reduce(_ unionByName _)
           .select(col("doc_id").as("_t_doc"), col("_seq").as("_t_seq"))
         postingsAll.join(broadcast(t),
           col("doc_id") === col("_t_doc") && col("_t_seq") > col("_seq"),
           "left_anti")
-      }
+      }).drop("_seq")
     // Interning: base dictionary ∪ persisted per-mutation new-term ids.
     // df/total are recomputed from the live postings; fully-deleted terms
     // stay interned at df=0 (reference semantics — ids never reused).
     val interning = (base.termStats.select("term", "term_id") +:
-      muts.collect { case (_, "add", p) =>
-        spark.read.parquet(s"$p/term_ids").select("term", "term_id")
-      }).reduce(_ unionByName _)
+      adds.map(m => readMutation(spark, m, "term_ids")
+        .select("term", "term_id"))).reduce(_ unionByName _)
     val termAgg = live.groupBy("term")
       .agg(count(lit(1)).as("df"), sum("cnt").as("total"))
     val termStats = interning
@@ -372,11 +378,23 @@ object IndexStore {
       .select(col("term"), col("term_id"),
         coalesce(col("df"), lit(0L)).as("df"),
         coalesce(col("total"), lit(0L)).as("total"))
-    val (docCount, tokenCount) = JobLabel(spark, "search:open")(
-      SearchIndex.collectCounters(SearchIndex.countersOf(live)))
-    SearchIndex(
-      if (asCompactState) live.drop("_seq") else live.drop("first_pos", "_seq"),
-      termStats, docCount, tokenCount, cfg, algo = base.algo)
+    View(live, termStats, SearchIndex.countersOf(live), fuzzy = None)
+  }
+
+  /** Open with the caller's params (`buildOrOpen`) after checking them
+    * against the stored ones. `docs` is only evaluated if the BASE stages
+    * are uncommitted (first build). */
+  def openIndex(docs: => DataFrame, cfg: PipelineConfig,
+      spark: SparkSession, root: String,
+      algo: Option[Searcher.Algo] = None): SearchIndex = {
+    // Open-with-params semantics (nxs.c:253-287): opening an existing index
+    // with CONFLICTING params — pipeline OR algo — is an error, never a
+    // silent rebuild/rescore; a rebuild here would additionally orphan the
+    // mutation log's term ids.
+    requireParamsMatch(root, cfg, algo)
+    // Forward the algo: on a FIRST build through this entry point the
+    // caller's pin must reach params.json (requireParamsMatch was a no-op).
+    buildOrOpen(docs, cfg, spark, root, algo)
   }
 
   /** Open a built index with its PERSISTED params — no config supplied, the
@@ -403,10 +421,11 @@ object IndexStore {
     * deleted best-effort. Open cost returns to a plain committed read. */
   def compact(docs: => DataFrame, cfg: PipelineConfig,
       spark: SparkSession, root: String): SearchIndex = {
+    requireParamsMatch(root, cfg)
     val gen = generation(root)
-    if (listMutations(root, fp(cfg)).isEmpty)
-      return openIndex(docs, cfg, spark, root)
-    val state = openIndex(docs, cfg, spark, root, asCompactState = true)
+    val pending = listMutations(root, fp(cfg)).nonEmpty
+    val (live, algo) = open(docs, cfg, spark, root, None)
+    if (!pending) return toIndex(live, cfg, algo)
     val store = new StageStore(spark, root)
     val next = gen + 1
     // A compact that crashed before the GENERATION bump leaves committed
@@ -414,13 +433,13 @@ object IndexStore {
     // invisible (gen never bumped), so delete them rather than letting the
     // fingerprint check reuse a stale fold.
     StageBases.foreach(b => store.drop(stageName(b, next)))
-    val folded = writeGeneration(store, next, cfg, state.algo)(
-      state.postings)(_ => state.termStats)
+    val folded = writeGeneration(store, next, cfg)(live.postings)(
+      _ => live.termStats)
     FsUtil.publish(s"$root/GENERATION", next.toString) // commit point
     // best-effort cleanup of the superseded generation
     FsUtil.delete(s"$root/mutations/gen_$gen")
     StageBases.foreach(b => store.drop(stageName(b, gen)))
-    folded
+    toIndex(folded, cfg, algo)
   }
 
   /** Destroy a built index — the reference's nxs_index_destroy
@@ -460,10 +479,11 @@ object IndexStore {
     val deltaPost = SearchIndex.postingsOf(fresh, cfg)
     val maxId = cur.termStats.agg(coalesce(max("term_id"), lit(0L)))
       .collect()(0).getLong(0)
-    val newTerms = SearchIndex.termStatsOf(deltaPost)
+    // the delta's unseen terms, ranked once in first-seen order past maxId
+    val newTerms = SearchIndex.firstSeen(deltaPost)
       .join(cur.termStats.select("term"), Seq("term"), "left_anti")
-      .select(col("term"), col("term_id").as("delta_id"))
-    val newIds = SearchIndex.withDenseIds(newTerms, Seq("delta_id"), "rk", base = maxId)
+    val newIds = SearchIndex.withDenseIds(newTerms, SearchIndex.FirstSeenKey,
+      "rk", base = maxId)
       .select(col("term"), (lit(maxId) + col("rk")).as("term_id"))
     commitMutation(root, nextSeq(root), "add", fp(cfg),
       Seq("postings" -> deltaPost, "term_ids" -> newIds))

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.functions._
 import graft.text.PipelineConfig
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
  * bitmap is not materialized — it IS the postings relation keyed by term
  * (a term filter on the postings scan replaces roaring64_bitmap lookup).
  *
- * At cluster scale: postings/termStats are plain hash aggregations off one
- * tokenize scan (map-side partial agg), written as partitioned tables;
- * term dictionary joins are broadcastable.
+ * Like the reference's, the index lives on disk: every SearchIndex is the
+ * view `IndexStore` opens from a root, its relations reads of the
+ * committed stages with the mutation log replayed over them. This object
+ * holds the relational definitions the store writes with.
  */
 final case class SearchIndex(
     postings: DataFrame,   // (doc_id, term, dl, cnt)
@@ -26,45 +27,20 @@ final case class SearchIndex(
     docCount: Long,
     tokenCount: Long,
     pipeline: PipelineConfig,
-    cached: Seq[DataFrame] = Nil,
-    // Persisted symmetric-delete variant table (vh, term, total, df), sorted
-    // by vh with parquet bloom filters — the durable analogue of the
+    // The persisted symmetric-delete variant table (vh, term, total, df),
+    // sorted by vh with parquet bloom filters — the durable analogue of the
     // reference's BK-tree (built once per index generation, probed per
     // fuzzy query). Present only when it exactly matches the dictionary:
-    // IndexStore sets it on committed opens with an empty mutation log and
-    // clears it while mutations are pending (Searcher then derives
-    // candidates on the fly — same values, slower path — until compact()).
+    // IndexStore sets it on opens with an empty mutation log and clears it
+    // while mutations are pending (Searcher then probes the same rows
+    // derived from termStats — same values, slower — until compact()).
     fuzzyVariants: Option[DataFrame] = None,
     // The index's persisted ranking algo (params.json "algo"; the
     // reference's third params.db field) — what Searcher.search scores
     // with when the caller does not override.
-    algo: Searcher.Algo = Searcher.Bm25) {
-
-  /** Release the `.cache()` blocks behind a `build()`-produced in-memory
-    * index view (the exact cached plans are retained here because
-    * `unpersist` on a derived projection would not match them). No-op for
-    * IndexStore-backed indexes — their relations are parquet reads. */
-  def unpersist(): Unit = cached.foreach(_.unpersist())
-}
+    algo: Searcher.Algo = Searcher.Bm25)
 
 object SearchIndex {
-
-  /** Build from docs(doc_id, text). One tokenize pass, two aggregates.
-    *
-    * Term interning (reference A3, /root/reference/src/index/terms.c:226-235
-    * assigns ids 1..N in insertion order): `term_id` is the dense first-seen
-    * rank — ordered by (first doc containing the term, first position within
-    * that doc), the batch equivalent of the reference's sequential append
-    * order. The rank is two-phase (`withDenseIds`): range-partition by the
-    * first-seen key, rank locally, add per-partition offsets — a web-scale
-    * dictionary (billions of terms) never funnels through one partition. */
-  def build(docs: DataFrame, cfg: PipelineConfig): SearchIndex = {
-    val postings = postingsOf(docs, cfg).cache()
-    val termStats = termStatsOf(postings).cache()
-    val (docCount, tokenCount) = collectCounters(countersOf(postings))
-    SearchIndex(postings.drop("first_pos"), termStats, docCount, tokenCount,
-      cfg, cached = Seq(postings, termStats))
-  }
 
   /** The dtmap header counters of a postings relation as one row
     * (doc_count, token_count): its distinct docs and the sum of its `cnt`,
@@ -109,17 +85,32 @@ object SearchIndex {
       .groupBy("doc_id", "term", "dl") // dl: one value per doc
       .agg(count(lit(1)).as("cnt"), min("pos").as("first_pos"))
 
-  def termStatsOf(postings: DataFrame): DataFrame = {
-    val agg = postings
+  /** Per term of `postings`: (term, df, total, _fs_doc, _fs_pos), its
+    * first-seen key being the first doc containing it and its first
+    * position within that doc. */
+  private[search] def firstSeen(postings: DataFrame): DataFrame =
+    postings
       .groupBy("term")
       .agg(count(lit(1)).as("df"), sum("cnt").as("total"),
         min(struct(col("doc_id"), col("first_pos"))).as("first_seen"))
       .select(col("term"), col("df"), col("total"),
         col("first_seen.doc_id").as("_fs_doc"),
         col("first_seen.first_pos").as("_fs_pos"))
-    withDenseIds(agg, Seq("_fs_doc", "_fs_pos"), "term_id")
+
+  /** Term stats (term, term_id, df, total) of a fresh build.
+    *
+    * Term interning (reference A3, /root/reference/src/index/terms.c:226-235
+    * assigns ids 1..N in insertion order): `term_id` is the dense first-seen
+    * rank — ordered by (first doc containing the term, first position within
+    * that doc), the batch equivalent of the reference's sequential append
+    * order. The rank is two-phase (`withDenseIds`): range-partition by the
+    * first-seen key, rank locally, add per-partition offsets — a web-scale
+    * dictionary (billions of terms) never funnels through one partition. */
+  def termStatsOf(postings: DataFrame): DataFrame =
+    withDenseIds(firstSeen(postings), FirstSeenKey, "term_id")
       .select("term", "term_id", "df", "total")
-  }
+
+  private[search] val FirstSeenKey = Seq("_fs_doc", "_fs_pos")
 
   /** Dense ids 1..N in `sortCols` order WITHOUT a no-partition window (which
     * moves the whole relation to one partition): range-partition by the sort

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.tables.JobLabel
 import graft.text.TextPipeline
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,11 +35,6 @@ object Searcher {
   sealed trait Algo
   case object TfIdf extends Algo
   case object Bm25 extends Algo   // the reference default (nxs_impl.h:40)
-  /** Sentinel default for `search`: score with the index's own persisted
-    * algo (params.json carries filters, lang, AND algo — the reference's
-    * params.db triple, /root/reference/src/core/params.c:159-198 — and the
-    * reference scores a reopened index with ITS algo, not the caller's). */
-  case object IndexDefault extends Algo
 
   final case class Prepared(
       root: QExpr,
@@ -53,12 +48,12 @@ object Searcher {
     * `fuzzy` on, a token absent from the dictionary falls back to the most
     * popular term within Levenshtein distance <= 2 (tokenizer.c:160-199;
     * idxterm_fuzzysearch idxterm.c:210-249; tolerance index.h:26): the
-    * collect reads the candidate rows of all tokens' deletion-variant
-    * hashes, from the persisted variant table when the index carries one
-    * that matches the dictionary, else derived from termStats (same rows).
-    * A token's own hash is among its variants, so the same rows hold its
-    * exact hit. Leaves that resolve to nothing are trimmed
-    * (tokenizer.c:181-191). */
+    * collect probes one variant table (`fuzzyProbe`) for the candidate
+    * rows of all tokens' deletion-variant hashes — the persisted stage when
+    * the index carries one that matches the dictionary, else the same rows
+    * derived from termStats (`variantRows`). A token's own hash is among
+    * its variants, so the same rows hold its exact hit. Leaves that resolve
+    * to nothing are trimmed (tokenizer.c:181-191). */
   def prepare(idx: SearchIndex, root: QExpr, fuzzy: Boolean): Prepared = {
     val piped: Map[String, String] = QueryParser.leaves(root).distinct
       .flatMap(v => TextPipeline.filterToken(v, idx.pipeline).map(v -> _)).toMap
@@ -69,8 +64,8 @@ object Searcher {
         pick(idx.termStats.where(col("term").isin(toks: _*))
           .select("term", "total", "df").collect().toSeq
           .map(r => (r.getString(0), r.getString(0), r.getLong(1), r.getLong(2))))
-      else resolveFuzzy(idx.fuzzyVariants.fold(
-        fuzzyCandidates(idx.termStats, toks))(fuzzyProbe(_, toks)), toks)
+      else resolveFuzzy(fuzzyProbe(
+        idx.fuzzyVariants.getOrElse(variantRows(idx.termStats)), toks), toks)
     Prepared(root,
       piped.collect { case (l, t) if picked.contains(t) => l -> picked(t)._1 },
       picked.values.toMap)
@@ -88,26 +83,12 @@ object Searcher {
 
   /** (vh, term, total, df): every dictionary term under each of its
     * deletion-variant hashes — the rows IndexStore persists as the
-    * fuzzy_variants stage, and the derive path's input. */
+    * fuzzy_variants stage, and the variant table of an index without one. */
   def variantRows(termStats: DataFrame): DataFrame =
     termStats.select(
       explode(graft.functions.delete_variants(
         col("term"), FuzzyTolerance, FuzzyMaxLen)).as("vh"),
       col("term"), col("total"), col("df"))
-
-  /** Candidate rows (vh, term, total, df) of the query tokens, derived from
-    * termStats on the fly.
-    *
-    * Access path: an EQUI-JOIN on symmetric-delete neighborhood hashes
-    * (SymSpell; see DeleteVariantsExpr for the completeness argument) — the
-    * relational analogue of the reference's BK-tree metric-ball bound
-    * (src/algo/bktree.c:160-275). The per-term work is generating its ~L²/2
-    * deletion-variant hashes and probing the broadcast hash set of the query
-    * tokens' variants; the bounded levenshtein runs in `pick`, only on
-    * hash-matched candidates, never per (term × token). */
-  def fuzzyCandidates(termStats: DataFrame, toks: Seq[String]): DataFrame =
-    variantRows(termStats).join(
-      broadcast(queryHashes(termStats.sparkSession, toks)), Seq("vh"), "left_semi")
 
   /** The query tokens' (qtok, variant hash) pairs, every token's own hash
     * included. */
@@ -117,15 +98,15 @@ object Searcher {
         .hashArray(t, FuzzyTolerance, FuzzyMaxLen).map(h => (t, h))
     }
 
-  private def queryHashes(spark: SparkSession, toks: Seq[String]): DataFrame = {
-    import spark.implicits._
-    queryVariantPairs(toks).map(_._2).distinct.toDF("vh")
-  }
-
-  /** The same candidate rows read from a PERSISTED variant table
-    * (vh, term, total, df): the query tokens' variant hashes filter the
-    * table at the scan (vh-sorted row groups + bloom filters prune at rest;
-    * IndexStore writes both). */
+  /** Candidate rows (vh, term, total, df) of the query tokens in a variant
+    * table (vh, term, total, df): the tokens' variant hashes filter it —
+    * an EQUALITY on symmetric-delete neighborhood hashes (SymSpell; see
+    * DeleteVariantsExpr for the completeness argument), the relational
+    * analogue of the reference's BK-tree metric-ball bound
+    * (src/algo/bktree.c:160-275); the bounded levenshtein runs in `pick`,
+    * only on hash-matched candidates, never per (term × token). On the
+    * persisted stage the filter reaches the scan (vh-sorted row groups +
+    * bloom filters prune at rest; IndexStore writes both). */
   def fuzzyProbe(variants: DataFrame, toks: Seq[String]): DataFrame = {
     val hashes = queryVariantPairs(toks).map(_._2).distinct
     // A ~2k-literal IN bloats the plan/codegen and the pushed parquet
@@ -135,8 +116,11 @@ object Searcher {
     // filter + row-group stats that the stage writes anyway.
     if (hashes.size <= MaxIsinHashes)
       variants.where(col("vh").isin(hashes: _*)) // pushed to the scan
-    else variants.join(broadcast(queryHashes(variants.sparkSession, toks)),
-      Seq("vh"), "left_semi")
+    else {
+      val spark = variants.sparkSession
+      import spark.implicits._
+      variants.join(broadcast(hashes.toDF("vh")), Seq("vh"), "left_semi")
+    }
   }
 
   /** Cap on the vh IN-list pushed into the variant-stage scan. */
@@ -181,11 +165,6 @@ object Searcher {
     * document length division replicate /root/reference/src/algo/ranking.c
     * (k=1.2, b=0.75 :141-142; adl integer division :163). */
   private def scoreCol(idx: SearchIndex, algo: Algo, df: Column): Column = algo match {
-    // guard the degenerate idx.algo == IndexDefault (a hand-built
-    // SearchIndex could carry the sentinel): fall to the reference default
-    // rather than recursing forever
-    case IndexDefault =>
-      scoreCol(idx, if (idx.algo == IndexDefault) Bm25 else idx.algo, df)
     case TfIdf =>
       // tf = ln(cnt+1); idf = ln(N/df) + 1   (ranking.c:90-91)
       (log(col("cnt") + 1) *
@@ -201,9 +180,11 @@ object Searcher {
 
   /** Full search: returns (doc_id, score), descending, capped at `limit`
     * (default 1000 = NXS_DEFAULT_RESULTS_LIMIT, nxs_impl.h:39). With no
-    * explicit `algo` the index's own persisted algo scores (IndexDefault —
-    * a TF-IDF-built index reopened without config scores TF-IDF). */
-  def search(idx: SearchIndex, query: String, algo: Algo = IndexDefault,
+    * `algo` the index's own persisted algo scores (params.json carries
+    * filters, lang AND algo — the reference's params.db triple,
+    * /root/reference/src/core/params.c:159-198 — so a TF-IDF-built index
+    * reopened without config scores TF-IDF). */
+  def search(idx: SearchIndex, query: String, algo: Option[Algo] = None,
       limit: Int = 1000, fuzzy: Boolean = true): Either[String, DataFrame] =
     QueryParser.parse(query).map { root =>
       val p = JobLabel(idx.termStats.sparkSession, "search:query:resolve")(
@@ -221,7 +202,8 @@ object Searcher {
         idx.postings
           .where(col("term").isin(queryTerms: _*))
           .select(col("doc_id"), col("term"),
-            scoreCol(idx, algo, element_at(typedLit(p.df), col("term"))))
+            scoreCol(idx, algo.getOrElse(idx.algo),
+              element_at(typedLit(p.df), col("term"))))
           .groupBy("doc_id")
           .agg(sum("score").as("score"), collect_set("term").as("terms"))
           .where(matches(p, root))

@@ -12,18 +12,15 @@ import scala.collection.mutable
  *
  * `filters` mirrors the params `filters` list; `lang` the `lang` param.
  * The user extension slot (the reference's Lua filter,
- * /root/reference/src/core/filters_lua.c) has two forms: a `custom:<name>`
- * filter-list entry resolved against the CustomFilters registry — the form
- * that works on executors (only the name is serialized) and in persisted
- * index params — and the legacy in-process `custom` field
- * (String => Option[String]), usable only where the PipelineConfig object
- * itself is in hand (plain-Scala calls). None ⇒ discard in both.
+ * /root/reference/src/core/filters_lua.c) is a `custom:<name>` filter-list
+ * entry resolved against the CustomFilters registry: only the name is
+ * serialized, so the same filter runs on executors, in persisted index
+ * params and in query preparation. None ⇒ discard.
  */
 final case class PipelineConfig(
     filters: Seq[String] = Seq("normalizer", "stopwords", "stemmer"),
     lang: String = "en",
-    stopwordsEnabled: Boolean = true,
-    custom: Option[String => Option[String]] = None)
+    stopwordsEnabled: Boolean = true)
 
 object TextPipeline {
 
@@ -53,14 +50,6 @@ object TextPipeline {
             return None
         case "stemmer" =>
           if (cfg.lang == "en") v = Porter2.stem(v)
-        case "custom" =>
-          cfg.custom match {
-            case Some(f) => f(v) match {
-              case Some(nv) => v = nv
-              case None => return None
-            }
-            case None =>
-          }
         case named if named.startsWith(CustomFilters.Prefix) =>
           // By-name registry filter — the form that survives serialization
           // to executors (the Catalyst expression ships only the filter CSV;

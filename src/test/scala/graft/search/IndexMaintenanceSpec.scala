@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (nxs.c:498-511). Incremental add mirrors the terms/dtmap sync path
   * (terms.c:320-414): stats after add(idx, d2) == stats of build(d1 ∪ d2).
   * Every mutation runs through the durable path (IndexStore.removeDocs /
-  * addDocs) on a fresh index root. */
+  * addDocs) on a fresh index root (`TempIndex`). */
 class IndexMaintenanceSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -22,14 +22,10 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
   private val cfg = TextPipeline.noStopwords
 
-  private def build(docs: Seq[(Long, String)]): SearchIndex =
-    SearchIndex.build(docs.toDF("doc_id", "text"), cfg)
-
-  /** A durable index of `base` under a fresh root: (root, index). */
-  private def store(): (String, SearchIndex) = {
-    val root = java.nio.file.Files.createTempDirectory("idxmaint").toString
-    (root, IndexStore.buildOrOpen(base.toDF("doc_id", "text"), cfg, spark, root))
-  }
+  /** `body` on a durable index of `docs` under a fresh root. */
+  private def withIndex[T](docs: Seq[(Long, String)] = base)(
+      body: (String, SearchIndex) => T): T =
+    TempIndex(docs.toDF("doc_id", "text"), cfg)(body)
 
   private def remove(root: String, ids: Long*): SearchIndex =
     IndexStore.removeDocs({ fail("no recompute"); null }, cfg, spark, root,
@@ -52,8 +48,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     Searcher.search(idx, q).fold(e => fail(e),
       _.select("doc_id").as[Long].collect().toSet)
 
-  test("remove tombstones a doc: gone from results, counters decremented") {
-    val (root, idx) = store()
+  test("remove tombstones a doc: gone from results, counters decremented") { withIndex() { (root, idx) =>
     assert(searchIds(idx, "cats") == Set(1L, 3L))
     val idx2 = remove(root, 1L)
     assert(searchIds(idx2, "cats") == Set(3L))
@@ -72,10 +67,9 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     val catRow = idx2.termStats.where("term = 'cat'")
       .select("df").as[Long].collect()
     assert(catRow.toSeq == Seq(1L))
-  }
+  } }
 
-  test("fully-deleted term keeps its interned id across delete/re-add") {
-    val (root, idx) = store()
+  test("fully-deleted term keeps its interned id across delete/re-add") { withIndex() { (root, idx) =>
     val fishId = idx.termStats.where("term = 'fish'")
       .select("term_id").as[Long].collect().head
     remove(root, 1L)
@@ -84,42 +78,44 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .select("term_id", "df").as[(Long, Long)].collect()
     assert(after.toSeq == Seq((fishId, 1L)))
     assert(searchIds(readded, "fish") == Set(7L))
-  }
+  } }
 
   test("incremental add equals full rebuild; duplicate ids rejected") {
     val extra = Seq(4L -> "fish play in water", 1L -> "duplicate id ignored")
-    val (root, _) = store()
-    val added = add(root, extra: _*)
-    assertDlOnRows(added)
-    val full = build(base :+ (4L -> "fish play in water"))
-    assert(added.docCount == full.docCount)
-    assert(added.tokenCount == full.tokenCount)
-    // full tuple including term_id: incremental interning must assign the
-    // SAME dense first-seen ids as a from-scratch rebuild over base ∪ extra
-    val a = added.termStats.orderBy("term")
-      .as[(String, Long, Long, Long)].collect()
-    val f = full.termStats.orderBy("term")
-      .as[(String, Long, Long, Long)].collect()
-    assert(a.toSeq == f.toSeq)
-    // doc 1 keeps its ORIGINAL text (duplicate add rejected)
-    assert(searchIds(added, "duplicate") == Set.empty[Long])
+    withIndex() { (root, _) =>
+      withIndex(base :+ (4L -> "fish play in water")) { (_, full) =>
+        val added = add(root, extra: _*)
+        assertDlOnRows(added)
+        assert(added.docCount == full.docCount)
+        assert(added.tokenCount == full.tokenCount)
+        // full tuple including term_id: incremental interning must assign the
+        // SAME dense first-seen ids as a from-scratch rebuild over base ∪ extra
+        val a = added.termStats.orderBy("term")
+          .as[(String, Long, Long, Long)].collect()
+        val f = full.termStats.orderBy("term")
+          .as[(String, Long, Long, Long)].collect()
+        assert(a.toSeq == f.toSeq)
+        // doc 1 keeps its ORIGINAL text (duplicate add rejected)
+        assert(searchIds(added, "duplicate") == Set.empty[Long])
+      }
+    }
   }
 
-  test("remove then re-add the same id succeeds (t_index_remove.c flow)") {
-    val (root, idx) = store()
+  test("remove then re-add the same id succeeds (t_index_remove.c flow)") { withIndex() { (root, idx) =>
     remove(root, 2L)
     val readded = add(root, 2L -> "dogs eat meat")
     assertDlOnRows(readded)
     assert(searchIds(readded, "dogs") == Set(2L, 3L))
     assert(readded.docCount == idx.docCount)
     assert(readded.tokenCount == idx.tokenCount)
-  }
+  } }
 
   test("json response matches the reference wire shape (results.c:152-220)") {
-    val idx = build(base)
-    val res = Searcher.search(idx, "cats").fold(e => fail(e), identity)
-    val json = Searcher.toJsonResponse(res)
-    assert(json.matches(
-      """\{"results":\[(\{"doc_id":\d+,"score":\d+\.\d{6}\},?)+\],"count":2\}"""))
+    withIndex() { (_, idx) =>
+      val res = Searcher.search(idx, "cats").fold(e => fail(e), identity)
+      val json = Searcher.toJsonResponse(res)
+      assert(json.matches(
+        """\{"results":\[(\{"doc_id":\d+,"score":\d+\.\d{6}\},?)+\],"count":2\}"""))
+    }
   }
 }

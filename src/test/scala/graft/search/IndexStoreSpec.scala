@@ -19,16 +19,21 @@ class IndexStoreSpec extends AnyFunSuite {
     2L -> "dogs eat meat",
     3L -> "cats and dogs play")
 
+  /** Jobs of an open with one add and one remove pending: the counters
+    * collect over the live view (the tombstone broadcast, the aggregate's
+    * shuffle stages and its result). */
+  private val OpenJobs = 4
+
   test("term ids are dense 1..N in first-seen order (terms.c:226-235)") {
-    val idx = SearchIndex.build(base.toDF("doc_id", "text"),
-      TextPipeline.noStopwords)
-    val byId = idx.termStats.orderBy("term_id")
-      .select("term_id", "term").as[(Long, String)].collect()
-    assert(byId.map(_._1).toSeq == (1L to byId.length))
-    // insertion order: doc 1 ("cat", "eat", "fish"), then doc 2 adds
-    // ("dog", "meat"), then doc 3 adds ("and", "play") — stemmed forms
-    assert(byId.map(_._2).toSeq ==
-      Seq("cat", "eat", "fish", "dog", "meat", "and", "play"))
+    TempIndex(base.toDF("doc_id", "text"), TextPipeline.noStopwords) { (_, idx) =>
+      val byId = idx.termStats.orderBy("term_id")
+        .select("term_id", "term").as[(Long, String)].collect()
+      assert(byId.map(_._1).toSeq == (1L to byId.length))
+      // insertion order: doc 1 ("cat", "eat", "fish"), then doc 2 adds
+      // ("dog", "meat"), then doc 3 adds ("and", "play") — stemmed forms
+      assert(byId.map(_._2).toSeq ==
+        Seq("cat", "eat", "fish", "dog", "meat", "and", "play"))
+    }
   }
 
   test("build, kill session state, reopen: identical scores, no recompute") {
@@ -61,7 +66,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("algo persists in params.json: TF-IDF index reopens scoring TF-IDF") {
     val root = java.nio.file.Files.createTempDirectory("idxalgo").toString
     val cfg = TextPipeline.noStopwords
-    def scores(idx: SearchIndex, algo: Searcher.Algo = Searcher.IndexDefault) =
+    def scores(idx: SearchIndex, algo: Option[Searcher.Algo] = None) =
       Searcher.search(idx, "cats", algo).fold(e => fail(e),
         _.select("doc_id", "score").as[(Long, Double)].collect().toMap)
 
@@ -69,14 +74,14 @@ class IndexStoreSpec extends AnyFunSuite {
     val idx1 = IndexStore.buildOrOpen(base.toDF("doc_id", "text"), cfg, spark,
       root, algo = Some(Searcher.TfIdf))
     assert(idx1.algo == Searcher.TfIdf)
-    val tfidf = scores(idx1, Searcher.TfIdf)
+    val tfidf = scores(idx1, Some(Searcher.TfIdf))
 
     // reopen with NO config at all: params.json supplies pipeline AND algo,
     // and the default search scores with the index's algo
     val idx2 = IndexStore.openIndex(spark, root)
     assert(idx2.algo == Searcher.TfIdf)
     assert(scores(idx2) == tfidf)
-    assert(scores(idx2) != scores(idx2, Searcher.Bm25))
+    assert(scores(idx2) != scores(idx2, Some(Searcher.Bm25)))
 
     // opening with a CONFLICTING algo errors (never silently rescores)
     intercept[IllegalArgumentException] {
@@ -205,6 +210,44 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(newId > maxBefore)
   }
 
+  test("every open replays the log: buildOrOpen after remove and add " +
+    "serves the mutated index, like openIndex") {
+    val cfg = TextPipeline.noStopwords
+    TempIndex(base.toDF("doc_id", "text"), cfg) { (root, _) =>
+      IndexStore.removeDocs({ fail("no recompute"); null }, cfg, spark, root,
+        Seq(1L).toDF("doc_id"))
+      IndexStore.addDocs({ fail("no recompute"); null }, cfg, spark, root,
+        Seq(9L -> "cats chase fish").toDF("doc_id", "text"))
+      val reopened = IndexStore.buildOrOpen(
+        { fail("a committed index must not rebuild"); null }, cfg, spark, root)
+      val ids = Searcher.search(reopened, "cats").fold(e => fail(e),
+        _.select("doc_id").as[Long].collect().toSet)
+      assert(ids == Set(3L, 9L), ids)
+      val opened = IndexStore.openIndex(spark, root)
+      assert(reopened.docCount == opened.docCount &&
+        reopened.tokenCount == opened.tokenCount)
+      assert(reopened.docCount == 3L)
+    }
+  }
+
+  test("an open with an add and a remove pending reads the log with its " +
+    "recorded schemas: one labelled counters collect, no inference job") {
+    val cfg = TextPipeline.noStopwords
+    TempIndex(base.toDF("doc_id", "text"), cfg) { (root, _) =>
+      IndexStore.addDocs({ fail("no recompute"); null }, cfg, spark, root,
+        Seq(9L -> "cats chase fish").toDF("doc_id", "text"))
+      IndexStore.removeDocs({ fail("no recompute"); null }, cfg, spark, root,
+        Seq(2L).toDF("doc_id"))
+      val (idx, phases) = graft.obs.PhaseTrace(spark)(
+        IndexStore.openIndex(spark, root))
+      assert(idx.docCount == 3L)
+      // every job of the open is the counters collect over the live view;
+      // a table read without a schema would add an unlabelled inference job
+      assert(phases.map(_.label) == Seq("search:open"), phases)
+      assert(phases.map(_.jobs).sum <= OpenJobs, phases)
+    }
+  }
+
   test("stress: 12 mutation generations + compact equal a fresh build " +
     "(t_stress_terms/t_stress_dtmap analogue)") {
     val root = java.nio.file.Files.createTempDirectory("idxstress").toString
@@ -236,21 +279,21 @@ class IndexStoreSpec extends AnyFunSuite {
         _.select("doc_id", "score").as[(Long, Double)].collect().toMap)
     val mutated = IndexStore.openIndex({ fail("no recompute"); null },
       cfg, spark, root)
-    val fresh = SearchIndex.build(live.toSeq.toDF("doc_id", "text"), cfg)
-    assert(mutated.docCount == fresh.docCount)
-    assert(mutated.tokenCount == fresh.tokenCount)
-    val queries = Seq("word1", "common2 AND word3", "unique25", "tail4 OR word0",
-      "common2 AND NOT word3", "(word1 OR tail4) AND NOT common0")
-    queries.foreach { q => assert(scores(mutated, q) == scores(fresh, q), q) }
+    TempIndex(live.toSeq.toDF("doc_id", "text"), cfg) { (_, fresh) =>
+      assert(mutated.docCount == fresh.docCount)
+      assert(mutated.tokenCount == fresh.tokenCount)
+      val queries = Seq("word1", "common2 AND word3", "unique25", "tail4 OR word0",
+        "common2 AND NOT word3", "(word1 OR tail4) AND NOT common0")
+      queries.foreach { q => assert(scores(mutated, q) == scores(fresh, q), q) }
 
-    // fold everything, reopen, same answers from the compacted generation
-    val compacted = IndexStore.compact({ fail("no recompute"); null },
-      cfg, spark, root)
-    queries.foreach { q => assert(scores(compacted, q) == scores(fresh, q), q) }
-    val reopened = IndexStore.openIndex({ fail("no recompute"); null },
-      cfg, spark, root)
-    assert(reopened.docCount == fresh.docCount)
-    fresh.unpersist()
+      // fold everything, reopen, same answers from the compacted generation
+      val compacted = IndexStore.compact({ fail("no recompute"); null },
+        cfg, spark, root)
+      queries.foreach { q => assert(scores(compacted, q) == scores(fresh, q), q) }
+      val reopened = IndexStore.openIndex({ fail("no recompute"); null },
+        cfg, spark, root)
+      assert(reopened.docCount == fresh.docCount)
+    }
   }
 
   test("reference limits: 65535-byte term kept, 65536 dropped (t_index_limits.c)") {
@@ -260,15 +303,15 @@ class IndexStoreSpec extends AnyFunSuite {
     // SearchIndex.MaxTermBytes)
     val maxTerm = "a" * SearchIndex.MaxTermBytes
     val tooBig = "b" * (SearchIndex.MaxTermBytes + 1)
-    val idx = SearchIndex.build(
-      Seq(1L -> s"$maxTerm $tooBig normal").toDF("doc_id", "text"),
-      TextPipeline.noStopwords)
-    val terms = idx.termStats.select("term").as[String].collect().toSet
-    assert(terms.contains(maxTerm))
-    assert(!terms.contains(tooBig))
-    assert(terms.contains("normal"))
-    // dropped term is not counted in dl either
-    assert(idx.tokenCount == 2L)
+    TempIndex(Seq(1L -> s"$maxTerm $tooBig normal").toDF("doc_id", "text"),
+      TextPipeline.noStopwords) { (_, idx) =>
+      val terms = idx.termStats.select("term").as[String].collect().toSet
+      assert(terms.contains(maxTerm))
+      assert(!terms.contains(tooBig))
+      assert(terms.contains("normal"))
+      // dropped term is not counted in dl either
+      assert(idx.tokenCount == 2L)
+    }
   }
 
   test("params.json: reopen with NO config adopts stored params; conflict errors") {
@@ -309,7 +352,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
     val toks = Seq("catz", "doggs")
     val probe = Searcher.fuzzyProbe(idx.fuzzyVariants.get, toks)
-    val derive = Searcher.fuzzyCandidates(idx.termStats, toks)
+    val derive = Searcher.fuzzyProbe(Searcher.variantRows(idx.termStats), toks)
     // the same candidate rows (vh, term, total, df), hence the same pick
     assert(probe.collect().toSet == derive.collect().toSet)
     val got = Searcher.resolveFuzzy(probe, toks)
@@ -320,7 +363,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert("""PushedFilters: \[[^\]]*vh""".r.findFirstIn(plan).isDefined, plan)
 
     // pending mutations invalidate the at-rest table (dictionary drift);
-    // search still resolves fuzzily through the derive path
+    // search still resolves fuzzily over the derived variant rows
     val idx2 = IndexStore.addDocs(base.toDF("doc_id", "text"), cfg, spark, root,
       Seq(9L -> "zebra zebra").toDF("doc_id", "text"))
     assert(idx2.fuzzyVariants.isEmpty)
@@ -338,7 +381,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
     // OPENS ARE READ-ONLY: an index whose fuzzy stage is missing (built
     // before the fuzzy index existed, or its params were bumped) opens
-    // with the derive fallback and writes NOTHING into the root
+    // without it and writes NOTHING into the root
     val gen = java.nio.file.Files.readString(
       java.nio.file.Paths.get(root, "GENERATION")).trim.toInt
     val fuzzyDir = new java.io.File(root, s"fuzzy_variants@$gen")
@@ -347,7 +390,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val idx4 = IndexStore.openIndex(spark, root)
     assert(idx4.fuzzyVariants.isEmpty)
     assert(!fuzzyDir.exists(), "open must not write the fuzzy stage")
-    // and search still fuzzy-resolves through the derive path
+    // and search still fuzzy-resolves over the derived variant rows
     val viaDerive = Searcher.search(idx4, "zebraa", fuzzy = true)
       .fold(e => fail(e), _.select("doc_id").as[Long].collect().toSet)
     assert(viaDerive == Set(9L), viaDerive)

@@ -68,17 +68,16 @@ class TextPipelineSpec extends AnyFunSuite {
 
   test("discard of zero-length tokens") {
     // A custom filter that empties a token ⇒ discard (filters.c:208-210)
-    val cfg = PipelineConfig(
-      filters = Seq("normalizer", "custom"),
-      custom = Some(t => Some(if (t == "drop") "" else t)))
+    CustomFilters.register("empty_drop", t => Some(if (t == "drop") "" else t))
+    val cfg = PipelineConfig(filters = Seq("normalizer", "custom:empty_drop"))
     val got = TextPipeline.tokens("keep drop keep2", cfg)
     assert(got.toSeq == Seq("keep", "keep2"))
   }
 
   test("custom filter discard semantics (lua-filter analogue)") {
-    val cfg = PipelineConfig(
-      filters = Seq("normalizer", "custom"),
-      custom = Some(t => if (t.startsWith("x")) None else Some(t.reverse)))
+    CustomFilters.register("x_discard_reverse",
+      t => if (t.startsWith("x")) None else Some(t.reverse))
+    val cfg = PipelineConfig(filters = Seq("normalizer", "custom:x_discard_reverse"))
     val got = TextPipeline.tokens("abc xyz def", cfg)
     assert(got.toSeq == Seq("cba", "fed"))
   }
