@@ -4,7 +4,6 @@ import graft.tables.{FlatJson, FsUtil, JobLabel, StageStore}
 import graft.text.PipelineConfig
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Durable search index — the reference's index lifecycle (append to
@@ -265,13 +264,15 @@ object IndexStore {
   // Each directory is committed by its MANIFEST, published through
   // FsUtil.publish like every other commit point of the stores; the
   // manifest carries the pipeline fingerprint (`pfp`) the mutation was
-  // tokenized under and each table's schema (`schema:<table>`, as a stage
-  // manifest does), so replay plans its reads without Spark's
-  // schema-inference job. A crash mid-write leaves an unmarked directory:
-  // replay ignores it, and the next mutation takes its sequence number (and
-  // overwrites it when of the same kind). Every open replays the log over
-  // the base tables (`replay`); a
-  // postings generation is dead iff a LATER tombstone covers its doc (so
+  // tokenized under and each table's schema (`schema_json:<table>`, a stage
+  // manifest's `schema_json` per table), read through the same
+  // `StageStore.readParquet`, so replay plans its reads without Spark's
+  // schema-inference job; a manifest without them reads by inference. A
+  // crash mid-write leaves an unmarked directory: replay ignores it, and
+  // the next mutation takes its sequence number (and overwrites it when of
+  // the same kind). Every open replays the log over the base tables
+  // (`replay`); a postings generation is dead iff a LATER tombstone covers
+  // its doc (so
   // delete → re-add of the same id works), and term ids are stable because
   // new-term assignments are persisted at mutation time, not re-derived at
   // open. This is the only mutation path: add and remove are durable.
@@ -326,17 +327,15 @@ object IndexStore {
     }
     FsUtil.publish(s"$dir/MANIFEST", FlatJson.render(Seq(
       "seq" -> seq.toString, "kind" -> kind, "pfp" -> pfp) ++
-      tables.map { case (name, df) => s"schema:$name" -> df.schema.json }))
+      tables.map { case (name, df) => s"schema_json:$name" -> df.schema.json }))
   }
 
   /** Table `name` of mutation `m`, read with the schema its manifest
-    * records; a manifest written before the schemas were recorded reads by
-    * inference. */
+    * records. */
   private def readMutation(spark: SparkSession, m: Mutation,
       name: String): DataFrame =
-    m.manifest.get(s"schema:$name").fold(spark.read)(json =>
-      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
-      .parquet(s"${m.path}/$name")
+    StageStore.readParquet(spark, Seq(s"${m.path}/$name"),
+      m.manifest.get(s"schema_json:$name"))
 
   /** `base` with the mutation log replayed — the durable analogue of the
     * reference's open-time dtmap/terms sync. An empty log returns `base`
@@ -473,7 +472,8 @@ object IndexStore {
     * delta + id assignments before returning the refreshed index. */
   def addDocs(docs: => DataFrame, cfg: PipelineConfig, spark: SparkSession,
       root: String, newDocs: DataFrame): SearchIndex = {
-    val cur = openIndex(docs, cfg, spark, root)
+    requireParamsMatch(root, cfg)
+    val (cur, _) = open(docs, cfg, spark, root, None)
     val fresh = newDocs.join(cur.postings.select("doc_id").distinct(),
       Seq("doc_id"), "left_anti")
     val deltaPost = SearchIndex.postingsOf(fresh, cfg)

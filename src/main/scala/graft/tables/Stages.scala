@@ -99,15 +99,12 @@ final class StageStore(val spark: SparkSession, val root: String) {
     readData(if (nonEmpty.nonEmpty) nonEmpty else committed.take(1))
   }
 
-  private def readData(stages: Seq[(String, Map[String, String])]): DataFrame = {
-    val paths = stages.map(s => dataDir(s._1))
-    stages.map(_._2.get("schema_json")).distinct match {
-      case Seq(Some(json)) =>
-        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
-          .parquet(paths: _*)
-      case _ => spark.read.parquet(paths: _*)
-    }
-  }
+  private def readData(stages: Seq[(String, Map[String, String])]): DataFrame =
+    StageStore.readParquet(spark, stages.map(s => dataDir(s._1)),
+      stages.map(_._2.get("schema_json")).distinct match {
+        case Seq(json) => json
+        case _ => None
+      })
 
   /** Run (or resume) a stage. `inputs` are upstream stage names — their
     * fingerprints are folded into this stage's fingerprint, so an upstream
@@ -191,6 +188,16 @@ final class StageStore(val spark: SparkSession, val root: String) {
 }
 
 object StageStore {
+  /** One parquet read of `paths` with the schema a manifest recorded
+    * (`StructType.json`), so it plans without Spark's schema-inference job;
+    * without one (a manifest written before schemas were recorded) the
+    * read infers. */
+  private[graft] def readParquet(spark: SparkSession, paths: Seq[String],
+      schemaJson: Option[String]): DataFrame =
+    schemaJson.fold(spark.read)(json =>
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+      .parquet(paths: _*)
+
   /** `f` applied to the footer of every parquet file `df` reads, in file
     * name order, each opened in the driver: metadata only, no job. */
   private[graft] def footers[T](df: DataFrame)(
