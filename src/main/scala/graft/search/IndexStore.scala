@@ -272,10 +272,10 @@ object IndexStore {
   // the next mutation takes its sequence number (and overwrites it when of
   // the same kind). Every open replays the log over the base tables
   // (`replay`); a postings generation is dead iff a LATER tombstone covers
-  // its doc (so
-  // delete → re-add of the same id works), and term ids are stable because
-  // new-term assignments are persisted at mutation time, not re-derived at
-  // open. This is the only mutation path: add and remove are durable.
+  // its doc (so delete → re-add of the same id works), and term ids are
+  // stable because new-term assignments are persisted at mutation time, not
+  // re-derived at open. This is the only mutation path: add and remove are
+  // durable.
 
   private def mutDir(root: String) = s"$root/mutations/gen_${generation(root)}"
 
