@@ -10,7 +10,8 @@ import scala.collection.mutable
 /** Where a run's time goes, by phase: `PhaseTrace(spark)(body)` groups the
   * Spark jobs that run during `body` by the label production code sets
   * on them (`graft.tables.JobLabel`: `dedup:*`, `inc:*`, `stage:<name>`,
-  * `search:query:*`), with a listener registered only for that time.
+  * `search:open*`, `search:query:*`), with a listener registered only for
+  * that time.
   * The phase walls partition the run: busy time goes to the job that
   * extends it, and a driver gap (no job running) to the phase whose job
   * finished last before it, or before the first job to the first phase. */
@@ -118,8 +119,8 @@ object PhaseTrace {
         i => {
           val idx = graft.search.IndexStore.buildOrOpen(docs,
             graft.text.TextPipeline.default, spark, s"$dir/index$i")
-          queries.foreach(q => JobLabel(spark, "search:query:execute")(
-            graft.search.Searcher.search(idx, q).fold(sys.error, _.collect())))
+          queries.foreach(q =>
+            graft.search.Searcher.search(idx, q).fold(sys.error, _.collect()))
         }
       case m => sys.error(s"unknown mode '$m': dedup | incremental | search")
     }

@@ -1,9 +1,15 @@
 package graft.search
 
 import graft.functions._
+import graft.tables.JobLabel
 import graft.text.PipelineConfig
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /**
  * The reference's index, as two relations + two scalars
@@ -12,14 +18,24 @@ import org.apache.spark.sql.functions._
  * `postings`; the dtmap header counters doc_count/token_count
  * (/root/reference/src/index/storage.h:112-118) become `docCount` /
  * `tokenCount`, one aggregate over the postings (`countersOf`). A doc's
- * length is the `dl` column of its postings rows. The reverse term→docs
- * bitmap is not materialized — it IS the postings relation keyed by term
- * (a term filter on the postings scan replaces roaring64_bitmap lookup).
+ * length is the `dl` column of its postings rows.
  *
  * Like the reference's, the index lives on disk: every SearchIndex is the
  * view `IndexStore` opens from a root, its relations reads of the
  * committed stages with the mutation log replayed over them. This object
  * holds the relational definitions the store writes with.
+ *
+ * Queries are served from `shards`, a copy of the postings the executors
+ * hold: `defaultParallelism` shards by `doc_id` hash, each one map from
+ * term to that term's postings in the shard's docs — the reference's
+ * term→docs lookup (it opens its index once and walks each query term's
+ * postings in-process, src/query/search.c:118-271). The copy is built
+ * once per opened index, on its first query (jobs labelled
+ * `search:open:shards`), and persisted MEMORY_AND_DISK. Nothing closes
+ * it: the persisted RDD belongs to this object, and Spark's
+ * ContextCleaner drops its blocks once the index is unreachable. The
+ * derived fuzzy variant table of an index with mutations pending
+ * (`variants`) has the same lifetime.
  */
 final case class SearchIndex(
     postings: DataFrame,   // (doc_id, term, dl, cnt)
@@ -32,14 +48,80 @@ final case class SearchIndex(
     // reference's BK-tree (built once per index generation, probed per
     // fuzzy query). Present only when it exactly matches the dictionary:
     // IndexStore sets it on opens with an empty mutation log and clears it
-    // while mutations are pending (Searcher then probes the same rows
-    // derived from termStats — same values, slower — until compact()).
+    // while mutations are pending (`variants` then derives the same rows
+    // from termStats once per opened index, until compact()).
     fuzzyVariants: Option[DataFrame] = None,
     // The index's persisted ranking algo (params.json "algo"; the
     // reference's third params.db field) — what Searcher.search scores
     // with when the caller does not override.
-    algo: Searcher.Algo = Searcher.Bm25)
+    algo: Searcher.Algo = Searcher.Bm25) {
 
+  /** The postings by `doc_id` hash, one `Shard` per partition, built on
+    * first use and kept for the life of this object (see the class doc). */
+  @transient private[search] lazy val shards: RDD[Shard] =
+    JobLabel(postings.sparkSession, "search:open:shards") {
+      val n = postings.sparkSession.sparkContext.defaultParallelism
+      val rdd = postings.select("doc_id", "term", "dl", "cnt")
+        .repartition(n, col("doc_id")).queryExecution.toRdd
+        .mapPartitions(rows => Iterator.single(Shard(rows)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.count()
+      rdd
+    }
+
+  /** The variant table (vh, term, total, df) fuzzy resolve probes: the
+    * persisted stage, or with mutations pending its rows derived from
+    * termStats, materialized once per opened index (jobs labelled
+    * `search:open:variants`) so a query probes them instead of deriving
+    * the whole dictionary's variants again. */
+  @transient private[search] lazy val variants: DataFrame =
+    fuzzyVariants.getOrElse(
+      JobLabel(termStats.sparkSession, "search:open:variants")(
+        Searcher.variantRows(termStats)
+          .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK)))
+}
+
+/** One doc-hash shard of the postings, grouped by term: the postings of
+  * the term at slot s are rows `from(s)` until `from(s + 1)` of the three
+  * columns, so the shard is a handful of arrays and one term map. */
+private[search] final class Shard(slots: java.util.HashMap[String, Integer],
+    from: Array[Int], val docId: Array[Long], val dl: Array[Long],
+    val cnt: Array[Long]) extends Serializable {
+
+  /** The rows of `term`'s postings in this shard, empty when it has none. */
+  def rows(term: String): Range = {
+    val s = slots.get(term)
+    if (s == null) Range(0, 0) else Range(from(s), from(s + 1))
+  }
+}
+
+private[search] object Shard {
+
+  /** The shard of postings rows (doc_id, term, dl, cnt): rows are appended
+    * as they come, then placed term by term (a counting sort on slots). */
+  def apply(rows: Iterator[InternalRow]): Shard = {
+    val slots = new java.util.HashMap[String, Integer]
+    val sizes = mutable.ArrayBuffer.empty[Int] // rows per slot
+    val slotOf = mutable.ArrayBuilder.make[Int]
+    val docs, dls, cnts = mutable.ArrayBuilder.make[Long]
+    rows.foreach { r =>
+      val s: Int = slots.computeIfAbsent(r.getUTF8String(1).toString,
+        _ => { sizes += 0; Int.box(sizes.size - 1) })
+      sizes(s) += 1
+      slotOf += s; docs += r.getLong(0); dls += r.getLong(2); cnts += r.getLong(3)
+    }
+    val from = sizes.scanLeft(0)(_ + _).toArray
+    val next = from.clone()
+    val (ss, ds, ls, cs) = (slotOf.result(), docs.result(), dls.result(), cnts.result())
+    val (d, l, c) = (new Array[Long](ds.length), new Array[Long](ds.length),
+      new Array[Long](ds.length))
+    for (i <- ds.indices) {
+      val at = next(ss(i)); next(ss(i)) += 1
+      d(at) = ds(i); l(at) = ls(i); c(at) = cs(i)
+    }
+    new Shard(slots, from, d, l, c)
+  }
+}
 object SearchIndex {
 
   /** The dtmap header counters of a postings relation as one row
@@ -73,14 +155,19 @@ object SearchIndex {
     * from the public index), and every row carries its doc's length `dl`
     * (the tokens that pass the MaxTermBytes cap), so scoring needs no
     * per-doc table. `dl` is computed once per doc, on the token array
-    * before the explode; a doc's `dl` never changes after it is indexed. */
+    * before the explode; a doc's `dl` never changes after it is indexed.
+    * The explode is the outer one so each doc is tokenized once: for a
+    * plain `posexplode`, Spark infers a `size(toks) > 0` filter and pushes
+    * it below the projection, where it re-runs the tokenizer. The row an
+    * outer explode emits for a token-less doc has a null term, which the
+    * MaxTermBytes filter drops. */
   def postingsOf(docs: DataFrame, cfg: PipelineConfig): DataFrame =
     docs
       .select(col("doc_id"), nxs_tokenize_filters(col("text"), lit(cfg.lang),
         cfg.filters, cfg.stopwordsEnabled).as("toks"))
       .select(col("doc_id"), col("toks"),
         size(filter(col("toks"), t => octet_length(t) <= MaxTermBytes)).cast("long").as("dl"))
-      .select(col("doc_id"), col("dl"), posexplode(col("toks")).as(Seq("pos", "term")))
+      .select(col("doc_id"), col("dl"), posexplode_outer(col("toks")).as(Seq("pos", "term")))
       .where(octet_length(col("term")) <= MaxTermBytes)
       .groupBy("doc_id", "term", "dl") // dl: one value per doc
       .agg(count(lit(1)).as("cnt"), min("pos").as("first_pos"))

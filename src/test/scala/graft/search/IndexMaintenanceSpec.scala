@@ -48,6 +48,30 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     Searcher.search(idx, q).fold(e => fail(e),
       _.select("doc_id").as[Long].collect().toSet)
 
+  test("postingsOf tokenizes each doc once and equals a driver-side " +
+    "tokenization, stopword-only and null-text docs included") {
+    val cfg = TextPipeline.default
+    val docs = Seq(1L -> "cats eat fish and cats", 2L -> "the of is",
+      3L -> null, 4L -> "", 5L -> "dogs, the dogs!")
+    val dir = java.nio.file.Files.createTempDirectory("docs").toString
+    try {
+      docs.toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+      val post = SearchIndex.postingsOf(spark.read.parquet(dir), cfg)
+      val tokenizers = post.queryExecution.optimizedPlan.flatMap(
+        _.expressions.flatMap(_.collect { case e: graft.functions.NxsTokenizeExpr => e }))
+      assert(tokenizers.size == 1, post.queryExecution.optimizedPlan)
+      val expected = docs.flatMap { case (d, text) =>
+        val toks = Option(text).fold(Array.empty[String])(TextPipeline.tokens(_, cfg))
+        toks.zipWithIndex.groupBy(_._1).map { case (t, ps) =>
+          (d, t, toks.length.toLong, ps.length.toLong, ps.map(_._2).min)
+        }
+      }.toSet
+      assert(expected.map(_._1) == Set(1L, 5L))
+      assert(post.select("doc_id", "term", "dl", "cnt", "first_pos")
+        .as[(Long, String, Long, Long, Int)].collect().toSet == expected)
+    } finally graft.tables.FsUtil.delete(dir)
+  }
+
   test("remove tombstones a doc: gone from results, counters decremented") { withIndex() { (root, idx) =>
     assert(searchIds(idx, "cats") == Set(1L, 3L))
     val idx2 = remove(root, 1L)

@@ -2,7 +2,6 @@ package graft.search
 
 import graft.SparkTestBase
 import graft.text.TextPipeline
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scoring goldens ported verbatim from
@@ -146,9 +145,19 @@ class SearcherSpec extends AnyFunSuite {
     }
   }
 
-  test("every query kind runs at most 3 Spark jobs on a stored index: " +
-    "one resolve collect, then the aggregate and the top-k") { withIndex(logicDocs) { idx =>
+  /** Runs `q` under a PhaseTrace: (label, jobs) per phase, in order. */
+  private def traced(idx: SearchIndex, q: String, fuzzy: Boolean = true)
+      : Seq[(String, Int)] = {
+    val (rows, phases) = graft.obs.PhaseTrace(spark)(
+      Searcher.search(idx, q, fuzzy = fuzzy).fold(e => fail(e), _.collect()))
+    assert(rows.nonEmpty, s"[$q]")
+    phases.map(p => p.label -> p.jobs)
+  }
+
+  test("after an index's first query every query kind runs 2 Spark jobs: " +
+    "one resolve collect and one execute job over the shards") { withIndex(logicDocs) { idx =>
     assert(idx.fuzzyVariants.isDefined)
+    traced(idx, "textbook")
     val mix = Seq(
       "and" -> ("textbook AND linux", false),
       "or" -> ("erlang OR java", false),
@@ -156,14 +165,43 @@ class SearcherSpec extends AnyFunSuite {
       "head" -> ("textbook", false),
       "fuzzy hit" -> ("textbook AND unix", true),
       "fuzzy miss" -> ("unxi OR erlang", true))
-    val jobs = mix.map { case (kind, (q, fuzzy)) =>
-      val (rows, phases) = graft.obs.PhaseTrace(spark)(
-        Searcher.search(idx, q, fuzzy = fuzzy).fold(e => fail(e), _.collect()))
-      assert(rows.nonEmpty, s"$kind [$q]")
-      kind -> phases.map(_.jobs).sum
-    }
-    assert(jobs.forall(_._2 <= 3), jobs)
+    for ((kind, (q, fuzzy)) <- mix)
+      assert(traced(idx, q, fuzzy) ==
+        Seq("search:query:resolve" -> 1, "search:query:execute" -> 1), kind)
   } }
+
+  test("the shards are built once per opened index, on its first query") {
+    TempIndex(logicDocs.toDF("doc_id", "text"), TextPipeline.noStopwords) { (root, idx) =>
+      def shardJobs(i: SearchIndex, q: String) =
+        traced(i, q).collect { case ("search:open:shards", n) => n }.sum
+      for (i <- Seq(idx, IndexStore.openIndex(spark, root))) {
+        assert(shardJobs(i, "textbook") > 0)
+        assert(Seq("erlang OR java", "unxi", "textbook").map(shardJobs(i, _)).sum == 0)
+      }
+    }
+  }
+
+  test("the index addDocs or removeDocs returns serves the mutation; a " +
+    "fuzzy query with mutations pending derives the variants once") {
+    TempIndex(logicDocs.toDF("doc_id", "text"), TextPipeline.noStopwords) { (root, idx) =>
+      def ids(i: SearchIndex, q: String) = Searcher.search(i, q)
+        .fold(e => fail(e), _.as[(Long, Double)].collect().map(_._1).toSet)
+      assert(ids(idx, "unix") == Set(2L, 5L, 6L))
+      val removed = IndexStore.removeDocs(fail("no recompute"), TextPipeline.noStopwords, spark,
+        root, Seq(5L).toDF("doc_id"))
+      assert(ids(removed, "unix") == Set(2L, 6L))
+      val added = IndexStore.addDocs(fail("no recompute"), TextPipeline.noStopwords, spark, root,
+        Seq(7L -> "unix unix tools").toDF("doc_id", "text"))
+      assert(added.fuzzyVariants.isEmpty)
+      val opens = traced(added, "unix").map(_._1).filter(_.startsWith("search:open"))
+      assert(opens == Seq("search:open:variants", "search:open:shards"), opens)
+      assert(ids(added, "unix") == Set(2L, 6L, 7L))
+      assert(ids(idx, "unix") == Set(2L, 5L, 6L)) // its own shards
+      assert(ids(added, "unxi") == Set(2L, 6L, 7L))
+      assert(traced(added, "tols") ==
+        Seq("search:query:resolve" -> 1, "search:query:execute" -> 1))
+    }
+  }
 
   test("limit caps results (top-k)") { withIndex(logicDocs) { idx =>
     val top = Searcher.search(idx, "textbook", Some(Searcher.Bm25), limit = 2)
@@ -173,24 +211,51 @@ class SearcherSpec extends AnyFunSuite {
     assert(top(0).getDouble(1) >= top(1).getDouble(1))
   } }
 
-  test("top-k plan uses TakeOrderedAndProject") { withIndex(logicDocs) { idx =>
-    val df = Searcher.search(idx, "textbook", Some(Searcher.Bm25), limit = 5).toOption.get
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), plan)
-    // the whole boolean tree is one per-doc aggregate over ONE postings
-    // read: no semi/anti join per operator, no second scan for scoring
-    val q = Searcher.search(idx,
-      "textbook AND (erlang OR python) AND NOT windows", Some(Searcher.Bm25),
-      limit = 5).toOption.get
-    val qplan = q.queryExecution.executedPlan.toString
-    assert(qplan.contains("TakeOrderedAndProject"), qplan)
-    assert(!qplan.contains("LeftSemi") && !qplan.contains("LeftAnti"), qplan)
-    // exactly one scan carries `cnt`: the postings stage's
-    val postingsReads = q.queryExecution.optimizedPlan.collect {
-      case r: LogicalRelation if r.output.exists(_.name == "cnt") => r
+  test("the merge of the shards' top-k equals a brute-force ranking: " +
+    "limit under one shard's matches, ties at the cut by doc_id") {
+    // three texts, 20 docs each: every score is a 20-way tie
+    val texts = Seq("alpha beta", "alpha gamma delta", "alpha alpha epsilon")
+    val docs = (1L to 60L).map(id => id -> texts((id % 3).toInt))
+    withIndex(docs) { idx =>
+      val alpha = TextPipeline.filterToken("alpha", TextPipeline.noStopwords).get
+      val perShard = idx.shards.map(_.rows(alpha).size).collect()
+      assert(perShard.length == spark.sparkContext.defaultParallelism)
+      val post = idx.postings.select("doc_id", "term", "dl", "cnt")
+        .as[(Long, String, Long, Long)].collect().toSeq
+      val n = idx.docCount.toDouble
+      val adl = (idx.tokenCount / idx.docCount).toDouble
+      val df = post.groupBy(_._2).map { case (t, rs) => t -> rs.size.toDouble }
+      def bm25(cnt: Long, dl: Long, df: Double): Double = {
+        val tf = math.log(cnt + 1.0)
+        tf / (tf + 1.2 * (0.25 + 0.75 * dl / adl)) *
+          math.log((n - df + 0.5) / (df + 0.5) + 1)
+      }
+      def pipe(w: String) = TextPipeline.filterToken(w, TextPipeline.noStopwords).get
+      for ((q, limit) <- Seq("alpha" -> 5, "alpha" -> 12, "alpha" -> 60,
+          "alpha AND NOT beta" -> 7, "gamma OR epsilon" -> 11)) {
+        assert(limit == 60 || perShard.min > limit, perShard.toSeq)
+        val root = QueryParser.parse(q).toOption.get
+        val leaves = QueryParser.leaves(root).map(pipe)
+        def holds(e: QExpr, terms: Set[String]): Boolean = e match {
+          case QToken(v) => terms(pipe(v))
+          case QAnd(l, r) => holds(l, terms) && holds(r, terms)
+          case QOr(l, r) => holds(l, terms) || holds(r, terms)
+          case QAndNot(l, r) => holds(l, terms) && !holds(r, terms)
+        }
+        val expected = post.groupBy(_._1).toSeq.collect {
+          case (d, rs) if holds(root, rs.map(_._2).toSet) =>
+            d -> rs.filter(r => leaves.contains(r._2))
+              .map(r => bm25(r._4, r._3, df(r._2))).sum
+        }.sortBy { case (d, s) => (-s, d) }.take(limit)
+        val got = Searcher.search(idx, q, Some(Searcher.Bm25), limit = limit,
+          fuzzy = false).fold(e => fail(e), _.as[(Long, Double)].collect().toSeq)
+        assert(got.map(_._1) == expected.map(_._1), s"[$q limit $limit]")
+        got.zip(expected).foreach { case ((_, s), (_, e)) =>
+          assert(math.abs(s - e) <= 1e-9 * e, s"[$q limit $limit] $s != $e")
+        }
+      }
     }
-    assert(postingsReads.size == 1, q.queryExecution.optimizedPlan)
-  } }
+  }
 
   test("boolean algebra == brute force over per-doc term sets " +
     "(random trees, fuzzy on and off)") {
